@@ -138,7 +138,8 @@ def _shingle_frame(
     )
 
 
-from minivectordb_spark.operators.util import ensure_parallelism as _parallel
+from minivectordb_spark.plans.width import ensure_parallelism as _parallel
+from minivectordb_spark.plans.width import verify_repartition
 from minivectordb_spark.operators.util import materialize as _barrier
 from minivectordb_spark.operators.util import run_concurrent
 
@@ -1363,39 +1364,22 @@ def embedding_neardup_pairs(
             df, planes, emb_col, id_col, multiprobe, max_probes
         )
         # hash-repartition the id-only candidates before the attach joins:
-        # (1) the cosine verify then parallelizes even when the attach side
-        # broadcasts (a tiny scan otherwise leaves the whole verify on the
-        # scan's input partitioning — measured 2.2x on the 10x harness);
-        # (2) partitioning by id_a is reusable by the first attach join.
-        # The shuffle moves two longs per candidate — scale-trivial.  The
-        # partition count MUST be explicit: with bare repartition(col), AQE
-        # sees only the tiny shuffle bytes (ids), coalesces back to one
-        # partition, and serializes the per-row cosine work its size
-        # heuristic can't see (measured 2.3x on the 10x harness).
-        n_part = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-        cand = cand.repartition(n_part, F.col("id_a"))
+        # the cosine verify then parallelizes even when the attach side
+        # broadcasts, and partitioning by id_a is reusable by the first
+        # attach join (verify pin: plans.width.verify_repartition)
+        cand = verify_repartition(cand, F.col("id_a"))
         joined = cand.join(
             base.select(*a_cols), "id_a"
         ).join(base.select(*b_cols), "id_b")
     elif block_col:
-        # same verify-parallelism pin as the LSH branch above: the
-        # within-block self-join explodes up to |block|^2 cosine rows out
-        # of byte-small inputs, so AQE's size-based coalescing folds the
-        # post-shuffle partitions down to one or two tasks and serializes
-        # the pairing (measured inside semantic_dedup at sf0.1: the whole
-        # block join ran as a 2-task stage).  Explicit counts on both
-        # sides pin the join's width; the blocks are cap-bounded, so no
-        # single blk partition can exceed cap^2 pairs.
-        n_part = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+        # verify pin on both sides: the within-block self-join explodes
+        # up to |block|^2 cosine rows out of byte-small inputs; the blocks
+        # are cap-bounded, so no blk partition exceeds cap^2 pairs
+        a = verify_repartition(
+            base.select(*a_cols, F.col(block_col).alias("blk")), F.col("blk")
         )
-        a = base.select(*a_cols, F.col(block_col).alias("blk")).repartition(
-            n_part, F.col("blk")
-        )
-        b = base.select(*b_cols, F.col(block_col).alias("blk")).repartition(
-            n_part, F.col("blk")
+        b = verify_repartition(
+            base.select(*b_cols, F.col(block_col).alias("blk")), F.col("blk")
         )
         joined = a.join(b, "blk").filter(F.col("id_a") < F.col("id_b"))
     else:
@@ -1478,10 +1462,7 @@ def neardup_against(
         .select("id_new", "id_ref")
         .distinct()
     )
-    n_part = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    cand = cand.repartition(n_part, F.col("id_new"))
+    cand = verify_repartition(cand, F.col("id_new"))
     base_a = materialize(
         df.select(id_col, emb_col), norm_expr(F.col(emb_col)), "__n",
         [id_col, emb_col],
@@ -2040,15 +2021,10 @@ def dedup_against(
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
     jac = inter.cast("double") / union.cast("double")
-    # verify-parallelism pin (the neardup_against / setsim idiom):
-    # candidates are two longs per row, so AQE's size-based coalescing
-    # would serialize the jaccard verify — an array_intersect over two
-    # full shingle sets per row — onto one task
-    n_part = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
+    # verify pin: each candidate row costs an array_intersect over two
+    # full shingle sets
     hits = (
-        cand.repartition(n_part, F.col("id_new"))
+        verify_repartition(cand, F.col("id_new"))
         .join(a, "id_new")
         .join(b, "id_ref")
         .filter(F.round(jac, 6) >= threshold)
@@ -2300,14 +2276,10 @@ def dedup_against_indexed(
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
     jac = inter.cast("double") / union.cast("double")
-    # verify-parallelism pin (the embedding_neardup_pairs / setsim
-    # idiom): candidates are two longs per row, so AQE's size-based
-    # coalescing would serialize the jaccard verify — each row an
-    # array_intersect over two full shingle sets — onto one task; the
-    # explicit count spreads it, and the exchange moves only id pairs
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    # verify pin: each candidate row costs an array_intersect over two
+    # full shingle sets
     hits = (
-        cand.repartition(n_part, F.col("id_new"))
+        verify_repartition(cand, F.col("id_new"))
         .join(a, "id_new")
         .join(b, "id_ref")
         .filter(F.round(jac, 6) >= threshold)
@@ -2747,13 +2719,9 @@ def neardup_against_indexed(
     sim = cosine_sim_cols(
         F.col("emb_a"), F.col("emb_b"), norm_a=F.col("n_a"), norm_b=F.col("n_b")
     )
-    # verify-parallelism pin (the neardup_against / setsim idiom):
-    # candidates are two longs per row, so AQE's size-based coalescing
-    # would serialize the cosine verify onto one task; the explicit
-    # count spreads it, and the exchange moves only id pairs
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    # verify pin: each candidate row costs a full cosine
     hits = (
-        cand.repartition(n_part, F.col("id_new"))
+        verify_repartition(cand, F.col("id_new"))
         .join(a, "id_new")
         .join(b, "id_ref")
         .withColumn("cosine", F.round(sim, 6))

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from minivectordb_spark.operators.dedup import _reused
+from minivectordb_spark.plans import width
 
 
 def pagerank_diagnostics(
@@ -131,19 +132,17 @@ def pagerank(
     teleport = ((100 - damping_pct) * base) // 100
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__odeg"))
     # Iteration partitioning tracks the GRAPH, not the session's scan
-    # width (r11): every round's fixed cost is tasks x scheduling, so a
-    # dimension-sized graph at 32 scan-width partitions paid 32 tasks
-    # per exchange per round for rows that fit in one.  The scope picks
-    # p from the measured edge count (100 TB graphs keep full width) —
-    # and because shuffle partitioning binds at EXECUTION, rounds
-    # 0..N-2 checkpoint EAGERLY inside the scope; only the returned
-    # final round stays lazy (its one exchange runs at the session
-    # setting, preserving the .explain/lineage contract below).
+    # width (r11; plans.width.iteration_width).  Partitioning binds at
+    # EXECUTION, so only the rounds the eager checkpoints in
+    # _pagerank_rounds materialize (before every SECOND round) run at p.
+    # The returned frame stays lazy: the rounds after the last checkpoint
+    # (one when ``iterations`` is odd, two when even) bind at the
+    # caller's action, at the session setting, preserving the
+    # .explain/lineage contract below.
     n_edges = e.count()
     spark = edges.sparkSession
-    from minivectordb_spark.plans import iteration_shuffle_scope
-
-    with iteration_shuffle_scope(spark, n_edges) as p:
+    p = width.iteration_width(spark, n_edges)
+    with width.shuffle_scope(spark, p):
         # (src, dst, __odeg) is loop-invariant: join it once, keep it
         # cached partitioned by src so each iteration only ships the
         # rank frame.
@@ -171,7 +170,7 @@ def _pagerank_rounds(
         # growth stays bounded; values are identical — a checkpoint only
         # materializes, it computes nothing different).  eager=True so
         # every materialized round EXECUTES inside the caller's
-        # iteration_shuffle_scope (see contract there).
+        # shuffle_scope (see contract there).
         if i % 2 == 0:
             ranks = ranks.localCheckpoint(eager=True)
         # dangling mass: nodes with no outgoing edge (pure sinks).  A
@@ -204,11 +203,12 @@ def _pagerank_rounds(
                 ).cast("long").alias("rank_micro"),
             )
         )
-    # The final round is returned LAZY: its lineage reaches only round
-    # N-1's checkpoint plus the cached edge/node frames (which stay
+    # The tail is returned LAZY: its lineage reaches only the last
+    # checkpoint (taken before round N-1 when N is odd, before round N-2
+    # when N is even) plus the cached edge/node frames (which stay
     # persisted as live dependencies of the returned plan — Spark's
     # ContextCleaner reclaims them once the result goes out of scope).
-    # Keeping it lazy means the caller's sink executes the round inside
+    # Keeping it lazy means the caller's sink executes the tail inside
     # its own measurement, and .explain shows the real per-iteration
     # plan instead of a checkpoint scan.
     return ranks
@@ -282,19 +282,16 @@ def triangle_counts(
     (lo, hi) -> union of the three corner projections + one count
     groupBy.  All equi-joins; no cartesian anywhere."""
     o = _reused(_oriented_edges(edges, src, dst))
-    # wedge-join parallelism pin (the setsim/linkage idiom, r15): the
-    # pivot frame is a few bytes per row, so AQE's size-based coalescing
-    # folded the wedge enumeration — sum-of-out-degree-squared COMPUTE,
-    # profiled 6.4 s of task time — onto 3 tasks.  The explicit count
-    # replaces the join's ENSURE_REQUIREMENTS exchange (same shuffle,
-    # AQE-immune); at 100 TB the sides exceed the advisory size anyway
-    # and the pin changes nothing.
-    n_part = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
+    # wedge-join verify pin (r15): the wedge enumeration is
+    # sum-of-out-degree-squared COMPUTE (profiled 6.4 s of task time)
+    # over a pivot frame a few bytes per row.  The pin replaces the
+    # join's ENSURE_REQUIREMENTS exchange (same shuffle, AQE-immune).
+    e1 = width.verify_repartition(
+        o.select(
+            F.col("lo").alias("a"), F.col("hi").alias("b"), F.col("hi_key").alias("kb")
+        ),
+        F.col("a"),
     )
-    e1 = o.select(
-        F.col("lo").alias("a"), F.col("hi").alias("b"), F.col("hi_key").alias("kb")
-    ).repartition(n_part, F.col("a"))
     # the STREAM side alone carries the pin: the planner still builds the
     # (size-estimated-small) other side as a broadcast hash table locally
     # — pinning BOTH sides forced a sort-merge join whose sorts cost 8x
@@ -402,12 +399,11 @@ def kcore(
     )
     n_edges = sym.count()
     converged = n_edges == 0
-    from minivectordb_spark.plans import iteration_shuffle_scope
-
     # peel partitioning tracks the measured edge count, not scan width
-    # (r11; see iteration_shuffle_scope) — every round EXECUTES inside
-    # the scope via its convergence count, so the exchanges bind at p
-    with iteration_shuffle_scope(edges.sparkSession, n_edges):
+    # (r11; see iteration_width) — every round EXECUTES inside the scope
+    # via its convergence count, so the exchanges bind at that width
+    spark = edges.sparkSession
+    with width.shuffle_scope(spark, width.iteration_width(spark, n_edges)):
         for _ in range(max_rounds):
             if converged:
                 break
@@ -564,11 +560,10 @@ def label_propagation_converged(
         "id", F.col("id").alias("label")
     )
     rounds_run = 0
-    from minivectordb_spark.plans import iteration_shuffle_scope
-
     # round partitioning tracks the measured edge count (r11); every
     # round EXECUTES inside the scope via its convergence count
-    with iteration_shuffle_scope(edges.sparkSession, sym.count()):
+    spark = edges.sparkSession
+    with width.shuffle_scope(spark, width.iteration_width(spark, sym.count())):
         for _ in range(int(max_rounds)):
             labels = labels.localCheckpoint(eager=False)
             cnt = (

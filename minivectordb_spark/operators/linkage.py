@@ -30,10 +30,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from minivectordb_spark.plans import width
+
 #: unsafe-row estimate for one gram-occurrence row of the EDJoin stages
 #: (id long + match-key string + q-gram string + k int + row overhead) —
 #: the sizing unit ``_qgram_prefix_candidates`` feeds to
-#: ``plans.heavy_shuffle_partitions``
+#: ``plans.width.heavy_width``
 OCC_ROW_BYTES = 96
 #: largest doc-frequency table the prefix pass may BROADCAST: above
 #: this the (gram, k) -> df map hash-joins instead — shipping a
@@ -203,18 +205,12 @@ def blocked_link_pairs(
         F.col(right_key).alias("__rkey"),
         F.substring(F.col(right_key), 1, block_len).alias("__blk"),
     )
-    # Repartition the probe side by the block key with an EXPLICIT
-    # partition count: this is the layout an SMJ on __blk would shuffle
-    # to anyway, and it spreads the per-block levenshtein work across
-    # the cluster — a compact parquet input would otherwise probe
-    # millions of candidate pairs from a handful of partitions.  The
-    # explicit count matters: the probe side is byte-small but
-    # compute-heavy (|L_b| x |R_b| edit distances per block), and AQE's
-    # size-based coalescing would merge it back to one task.
-    n_parts = int(
-        right.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    r = r.repartition(n_parts, F.col("__blk"))
+    # Repartition the probe side by the block key (verify pin): this is
+    # the layout an SMJ on __blk would shuffle to anyway, and it spreads
+    # the |L_b| x |R_b| edit distances per block across the cluster — a
+    # compact parquet input would otherwise probe millions of candidate
+    # pairs from a handful of partitions.
+    r = width.verify_repartition(r, F.col("__blk"))
     return (
         l.join(r, "__blk")
         .select(
@@ -465,7 +461,7 @@ def _qgram_prefix_candidates(
     count — sum(len - q + 1) over participating rows, one combiner-
     reduced scalar aggregate per side — sizes the plan BEFORE it runs.
     When the estimate exceeds what the session's shuffle width can hold
-    (``plans.heavy_shuffle_partitions``), the operator switches to the
+    (``plans.width.heavy_width``), the operator switches to the
     HEAVY path: the doc-frequency aggregate materializes eagerly at the
     sized partition count, its broadcast is gated on its MEASURED row
     count (a multi-million-row gram table must hash-join, not ship to
@@ -474,8 +470,6 @@ def _qgram_prefix_candidates(
     width.  Below the threshold the plan is unchanged (plan-locked).
     """
     from pyspark.sql import Window
-
-    from minivectordb_spark.plans import heavy_shuffle_partitions
 
     min_len = q * (max_dist + 1)
     prefix = max_dist * q + 1
@@ -539,10 +533,9 @@ def _qgram_prefix_candidates(
     }
     est_l, est_r = by_side.get(0, 0), by_side.get(1, 0)
     est_occ = est_l + est_r
-    session_p = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    p = heavy_shuffle_partitions(spark, est_occ, OCC_ROW_BYTES)
+    p = width.heavy_width(spark, est_occ, OCC_ROW_BYTES)
     df_cap, occ_cap = _heap_scaled_caps(spark)
-    heavy = p > session_p or est_occ > df_cap
+    heavy = p > width.session_width(spark) or est_occ > df_cap
 
     def occ_side(df_side, id_c, s_col, col_in, side, side_est):
         # resident reuse only while the side FITS: a lazy localCheckpoint

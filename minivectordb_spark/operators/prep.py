@@ -403,7 +403,8 @@ def dsir_logweights(
     from pyspark.sql import types as T
 
     from minivectordb_spark.operators import kernels
-    from minivectordb_spark.operators.util import ensure_parallelism, use_arrow_kernel
+    from minivectordb_spark.operators.util import use_arrow_kernel
+    from minivectordb_spark.plans.width import ensure_parallelism
 
     # The per-token md5 bucket hash runs as an Arrow-batched kernel
     # (kernels.dsir_bucket_mapper, guide §4.2) — the interpreted

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from minivectordb_spark.operators.dedup import _shingle_frame, _reused
+from minivectordb_spark.plans.width import verify_repartition
 
 MICRO = 1_000_000
 # df * 2^33 + h keeps the key injective (h < 2^32) and sortable well under
@@ -145,17 +146,9 @@ def _group_pairs(groups: DataFrame, tau_micro: int) -> DataFrame:
         .select("ga", "gb")
         .distinct()
     )
-    # The verify below is compute-heavy but byte-small: each candidate
-    # row costs an array_intersect over two full ordered sets yet is
-    # only two longs wide, so AQE's size-based coalescing would merge
-    # the distinct's output to one task and serialize the whole verify
-    # (the blocked_link_pairs trap, operators/linkage.py).  An explicit
-    # partition count pins the verify's parallelism; the exchange moves
-    # only (ga, gb) pairs.
-    n_parts = int(
-        groups.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    cand = cand.repartition(n_parts, F.col("ga"))
+    # verify pin: each candidate row costs an array_intersect over two
+    # full ordered sets
+    cand = verify_repartition(cand, F.col("ga"))
     arr_a = groups.select(
         F.col("gid").alias("ga"), F.col("arr").alias("__aa"), F.col("n").alias("n_a")
     )
@@ -345,13 +338,8 @@ def setsim_against(
         .select("gn", "gr")
         .distinct()
     )
-    # same verify-parallelism pin as _group_pairs: the cross-side
-    # array_intersect is CPU-bound on rows two longs wide, and AQE
-    # would coalesce the distinct to one task
-    n_parts = int(
-        groups.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-    )
-    cand = cand.repartition(n_parts, F.col("gn"))
+    # same verify pin as _group_pairs
+    cand = verify_repartition(cand, F.col("gn"))
     arr_n = groups.where(F.col("__side") == "n").select(
         F.col("gid").alias("gn"), F.col("arr").alias("__an"), F.col("n").alias("n_n")
     )

@@ -396,7 +396,8 @@ def repetition_stats(
     Plan: one explode of the staged n-gram array, one (doc, gram)
     groupBy, one doc groupBy — both combiner-reduced; fractions computed
     from the counts, no window.  Map-only otherwise; exact SQL twin."""
-    from minivectordb_spark.operators.util import ensure_parallelism, materialize
+    from minivectordb_spark.operators.util import materialize
+    from minivectordb_spark.plans.width import ensure_parallelism
 
     staged = materialize(
         ensure_parallelism(df), tokens(F.col(text_col)), "__toks", [id_col]
@@ -480,7 +481,8 @@ def bigram_lm_score(
     web-scale noise vocabulary (mojibake, hashes, token soup) can blow
     it — ``broadcast_vocab=False`` switches the unigram probe to a
     shuffle join (``lm_score``'s escape hatch, same flag)."""
-    from minivectordb_spark.operators.util import ensure_parallelism, materialize
+    from minivectordb_spark.operators.util import materialize
+    from minivectordb_spark.plans.width import ensure_parallelism
 
     staged = materialize(
         ensure_parallelism(df), tokens(F.col(text_col)), "__toks", [id_col]
@@ -609,11 +611,8 @@ def hash_classifier_score(
     from pyspark.sql import types as T
 
     from minivectordb_spark.operators import kernels
-    from minivectordb_spark.operators.util import (
-        ensure_parallelism,
-        materialize,
-        use_arrow_kernel,
-    )
+    from minivectordb_spark.operators.util import materialize, use_arrow_kernel
+    from minivectordb_spark.plans.width import ensure_parallelism
 
     n_buckets = len(weights)
     wi = [int(round(float(w) * 1_000_000)) for w in weights]
@@ -886,10 +885,8 @@ def cooccurrence_pmi(
     ``broadcast_vocab`` (default) both c1/c2 probes are map-only.  At
     100 TB: two keyed shuffles total, both pre-combined; nothing is
     ever quadratic in document length beyond the window factor."""
-    from minivectordb_spark.operators.util import (
-        ensure_parallelism,
-        materialize,
-    )
+    from minivectordb_spark.operators.util import materialize
+    from minivectordb_spark.plans.width import ensure_parallelism
 
     toks_df = materialize(
         ensure_parallelism(df), tokens(F.col(text_col)), "__toks", [id_col]

@@ -22,32 +22,6 @@ def materialize(df: DataFrame, expr: Column, name: str, keep: list[str]) -> Data
     return df.select(*keep, F.explode(F.array(expr)).alias(name))
 
 
-def ensure_parallelism(df: DataFrame, factor: int = 1) -> DataFrame:
-    """Guarantee a CPU-heavy map stage can use every core.
-
-    Parquet scans parallelize by row group; a source written as one big
-    row group per file (exactly the shape of the bench tables) yields ONE
-    input split no matter what ``maxPartitionBytes`` says, so an
-    interpreted higher-order fold downstream (MinHash, SimHash votes,
-    shingle hashing) runs single-threaded.  When the observed input split
-    count is below ``defaultParallelism * factor`` this inserts one
-    round-robin repartition (shuffles the rows once — at the sizes where
-    the gate can fire this is milliseconds against a multi-core speedup of
-    the fold); when the input is already wider — every real deployment at
-    scale, where split count >> core count — it is the identity and adds
-    NO shuffle.  Mirrors the planner's own AQE philosophy: decide from the
-    observed stats, not the logical plan."""
-    if df.isStreaming:
-        # micro-batch partitioning is the stream source's concern; .rdd is
-        # illegal on an unbound frame anyway
-        return df
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * factor
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
-
-
 def plan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's estimated size of ``df`` in bytes (optimizedPlan stats)
     — no job is run.  For file scans this is the at-rest file size;
@@ -74,8 +48,7 @@ def plan_size_bytes(df: DataFrame) -> int | None:
 #: kernel is ~5x faster — so below ~1 MB of (projected) input the
 #: expression chain wins, above it the kernel does.  At 100 TB every
 #: corpus is far above the floor and the kernels always run; this gate
-#: only exists because tiny inputs invert the trade.  Override with
-#: $SPARK_GRAFT_KERNEL_MIN_BYTES (0 = always kernel, huge = never).
+#: only exists because tiny inputs invert the trade.
 KERNEL_MIN_BYTES = 1 << 20
 
 
@@ -85,16 +58,8 @@ def use_arrow_kernel(df: DataFrame) -> bool:
     boundary is only a win when batch compute amortizes the crossing).
     Unknown size -> kernel (the conservative choice at scale: anything
     big enough to matter has file-scan stats)."""
-    import os
-
-    try:
-        thr = int(os.environ.get("SPARK_GRAFT_KERNEL_MIN_BYTES", KERNEL_MIN_BYTES))
-    except ValueError:
-        thr = KERNEL_MIN_BYTES
-    if thr <= 0:
-        return True
     b = plan_size_bytes(df)
-    return b is None or b >= thr
+    return b is None or b >= KERNEL_MIN_BYTES
 
 
 def run_concurrent(*thunks):
@@ -105,15 +70,25 @@ def run_concurrent(*thunks):
     the per-action driver fixed cost (plan/analyze/commit/py4j) that
     dominates small-batch lifecycle operators — the dedup_index_loop
     profile shows ~40 sub-second jobs whose between-job driver gaps are
-    about half the wall.  Results in thunk order; the first exception
-    propagates (the pool context manager joins every thread first, so
-    no write is abandoned mid-flight)."""
+    about half the wall.  Each thunk inherits the caller's local
+    properties (job group, scheduler pool), so the overlapped jobs stay
+    attributable to — and cancellable with — the caller's group.
+    Results in thunk order; the first exception propagates (the pool
+    context manager joins every thread first, so no write is abandoned
+    mid-flight)."""
     if len(thunks) == 1:
         return [thunks[0]()]
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.active()
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futs = [pool.submit(t) for t in thunks]
+        # one wrap per thunk: each thread gets its own copy of the
+        # caller's properties (a shared copy would let the threads' SQL
+        # execution ids overwrite each other)
+        futs = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
         return [f.result() for f in futs]
 
 

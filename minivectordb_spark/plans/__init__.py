@@ -4,12 +4,11 @@ The scale contract of this engine is enforceable from the plan text:
 kNN must be TakeOrderedAndProject (no global sort), map-only operators must
 have zero Exchanges, dimension joins must broadcast, and filters must reach
 the Parquet scan.  tests/test_plans.py pins these shapes so a regression
-that silently introduces a shuffle fails CI.
+that silently introduces a shuffle fails CI.  Partition-width decisions
+live in ``plans.width``.
 """
 
 from __future__ import annotations
-
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -47,7 +46,7 @@ def assert_no_shuffle(df: DataFrame) -> None:
 def assert_no_keyed_shuffle(df: DataFrame) -> None:
     """Map-only MODULO the parallelism gate: no key-based data movement
     (hash/range partitioning), but the gate's round-robin redistribution
-    (operators/util.ensure_parallelism — fires only when the source has
+    (plans.width.ensure_parallelism — fires only when the source has
     fewer splits than cores, identity at real split counts) is permitted.
     Row placement stays data-independent, which is the property the
     map-only contract protects."""
@@ -60,71 +59,3 @@ def assert_no_keyed_shuffle(df: DataFrame) -> None:
         and "RoundRobinPartitioning" not in line
     ]
     assert not keyed, f"expected no keyed shuffle, found:\n" + "\n".join(keyed)
-
-
-#: one iteration-shuffle partition comfortably holds ~2M (long, long)
-#: edge rows (~32 MB + overhead) — the sizing unit for iterative loops
-EDGES_PER_ITER_PARTITION = 2_000_000
-
-
-@contextmanager
-def iteration_shuffle_scope(spark, n_rows: int, partitions: int | None = None):
-    """Scope ``spark.sql.shuffle.partitions`` to an iterative operator's
-    WORKING-SET size (r11): an iterative graph loop runs 5-30 rounds of
-    joins + aggregates over a frame whose size the operator just
-    measured, and each round's fixed cost is tasks x scheduling — at the
-    session's scan-width partitioning a 16k-edge graph pays 32 tasks per
-    exchange per round for rows that fit in one (measured: pagerank at
-    sf0.1 3.54 -> 2.25 s going 32 -> 8).  AQE cannot fix this: with
-    ``coalescePartitions.parallelismFirst`` (default true) it refuses to
-    coalesce below the session parallelism.  The scope picks
-    ``p = clamp(ceil(n_rows / EDGES_PER_ITER_PARTITION), 1, session)``
-    — a 100 TB graph keeps the session's full width, a dimension-sized
-    one stops paying scan-width scheduling — and always restores.
-
-    CONTRACT: the loop must EXECUTE inside the scope (eager per-round
-    checkpoints).  A lazy plan binds its exchanges at action time, after
-    the restore, and would silently run at the session setting."""
-    conf = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(conf)
-    p = (
-        int(partitions)
-        if partitions is not None
-        else min(
-            int(prev),
-            max(1, -(-int(n_rows) // EDGES_PER_ITER_PARTITION)),
-        )
-    )
-    spark.conf.set(conf, str(p))
-    try:
-        yield p
-    finally:
-        spark.conf.set(conf, prev)
-
-
-#: target shuffle-partition payload for one-shot HEAVY aggregates and
-#: windows (the EDJoin occurrence/doc-frequency stages): small enough
-#: that a hash-aggregate over one partition fits task execution memory
-#: at default heaps with room for the map's expansion factor
-AGG_PARTITION_BYTES = 32 << 20
-
-
-def heavy_shuffle_partitions(spark, n_rows: int, row_bytes: int) -> int:
-    """Size a heavy one-shot shuffle UP from its estimated payload — the
-    complement of ``iteration_shuffle_scope`` (which sizes DOWN for
-    dimension-sized iterative loops).  Returns
-    ``max(session, ceil(n_rows * row_bytes / AGG_PARTITION_BYTES))``:
-    never below the session's scan width (small inputs keep today's
-    plans byte-identical), but a working set the session width cannot
-    hold gets enough partitions that each holds ~AGG_PARTITION_BYTES.
-
-    This is the operator-encoded form of the r11 EDJoin resource trail:
-    the 5M-name doc-frequency aggregate (~64M occurrence rows) died with
-    AGGREGATE_OUT_OF_MEMORY at the harness default of 32 partitions and
-    needed a hand-set 256 — ceil(64M * 96 B / 32 MB) = 192-256 is exactly
-    what this law computes, with no session surgery.  AQE cannot do it:
-    adaptive coalescing only MERGES post-shuffle partitions; nothing
-    grows a partition count the plan under-provisioned."""
-    session = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    need = max(1, -(-int(n_rows) * int(row_bytes) // AGG_PARTITION_BYTES))
-    return max(session, need)

@@ -160,7 +160,8 @@ def knn_batch(
     """
     from pyspark.sql import Window
 
-    from minivectordb_spark.operators.util import ensure_parallelism, materialize
+    from minivectordb_spark.operators.util import materialize
+    from minivectordb_spark.plans.width import ensure_parallelism
 
     # stage each side's norm once per ROW — computing it inside the join
     # expression would redo the fold once per (row, query) pair
@@ -173,7 +174,7 @@ def knn_batch(
     # parallelism gate on the scored side (r15): a single-row-group
     # corpus otherwise runs the |corpus| x |Q| cosine + partial top-k on
     # ONE task (profiled 0.45 s single-task in hybrid_rrf_batch);
-    # identity at real split counts (operators/util.ensure_parallelism)
+    # identity at real split counts (plans.width.ensure_parallelism)
     corpus = materialize(
         ensure_parallelism(corpus_df),
         norm_expr(F.col(corpus_emb_col)),

@@ -1208,20 +1208,24 @@ def attribution_stream_bounded(
     returning silently-short counters.
 
     ``state_partitions`` (r11): number of state-store partitions for
-    this query, bound PERMANENTLY at checkpoint creation from
-    ``spark.sql.shuffle.partitions`` (AQE cannot re-plan stateful
+    this query, bound PERMANENTLY at checkpoint creation from the
+    session's shuffle-partition count (AQE cannot re-plan stateful
     streams).  A stateful query's per-batch fixed cost is dominated by
     committing every state-store instance every batch — 4 instances x
     partitions delta files + 32-task stages over tiny slices — so
     partitions should track STATE SIZE, not the session's batch scan
     width (measured at sf0.1: 32 partitions -> ~3.7 s/batch, 8 -> ~1.1
-    s/batch, identical sink and counters).  The session conf is set
-    before ``start()`` and always restored.
+    s/batch, identical sink and counters).  The query runs inside
+    ``plans.width.shuffle_scope`` (set before ``start()``, always
+    restored).
     """
     import json as _json
     import time as _time
+    from contextlib import nullcontext
 
     from pyspark.sql.streaming import StreamingQueryListener
+
+    from minivectordb_spark.plans.width import shuffle_scope
 
     class _ProgressCollector(StreamingQueryListener):
         def __init__(self):
@@ -1241,59 +1245,57 @@ def attribution_stream_bounded(
 
     collector = _ProgressCollector()
     spark.streams.addListener(collector)
-    _parts_conf = "spark.sql.shuffle.partitions"
-    prev_parts = spark.conf.get(_parts_conf) if state_partitions else None
+    scope = nullcontext()
     if state_partitions:
-        spark.conf.set(_parts_conf, str(state_partitions))
+        scope = shuffle_scope(spark, state_partitions)
     try:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            attribution_join(stream, within=within, watermark=watermark)
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(timeout):
-            q.stop()
-            raise RuntimeError(
-                f"attribution_stream_bounded did not finish within "
-                f"{timeout}s; refusing to read a partially-written sink"
+        with scope:
+            stream = (
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
             )
-        last = q.lastProgress
-        final_batch = int(last["batchId"]) if last else -1
-        qid = str(q.id)
+            q = (
+                attribution_join(stream, within=within, watermark=watermark)
+                .writeStream.format("parquet")
+                .option("path", sink)
+                .option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            if not q.awaitTermination(timeout):
+                q.stop()
+                raise RuntimeError(
+                    f"attribution_stream_bounded did not finish within "
+                    f"{timeout}s; refusing to read a partially-written sink"
+                )
+            last = q.lastProgress
+            final_batch = int(last["batchId"]) if last else -1
+            qid = str(q.id)
 
-        def _events() -> dict[int, dict]:
-            by_batch: dict[int, dict] = {}
-            for j in collector.events:
-                d = _json.loads(j)
-                if d.get("id") == qid:
-                    by_batch[int(d["batchId"])] = d
-            for p in q.recentProgress:
-                d = p if isinstance(p, dict) else _json.loads(p.json)
-                by_batch.setdefault(int(d["batchId"]), d)
-            return by_batch
+            def _events() -> dict[int, dict]:
+                by_batch: dict[int, dict] = {}
+                for j in collector.events:
+                    d = _json.loads(j)
+                    if d.get("id") == qid:
+                        by_batch[int(d["batchId"])] = d
+                for p in q.recentProgress:
+                    d = p if isinstance(p, dict) else _json.loads(p.json)
+                    by_batch.setdefault(int(d["batchId"]), d)
+                return by_batch
 
-        # Listener delivery is async (a separate bus thread): wait until
-        # the union covers the final batch the engine itself reports.
-        deadline = _time.monotonic() + 30
-        by_batch = _events()
-        while (
-            final_batch >= 0
-            and max(by_batch, default=-1) < final_batch
-            and _time.monotonic() < deadline
-        ):
-            _time.sleep(0.2)
+            # Listener delivery is async (a separate bus thread): wait until
+            # the union covers the final batch the engine itself reports.
+            deadline = _time.monotonic() + 30
             by_batch = _events()
+            while (
+                final_batch >= 0
+                and max(by_batch, default=-1) < final_batch
+                and _time.monotonic() < deadline
+            ):
+                _time.sleep(0.2)
+                by_batch = _events()
     finally:
-        if prev_parts is not None:
-            spark.conf.set(_parts_conf, prev_parts)
         spark.streams.removeListener(collector)
 
     missing = [b for b in range(final_batch + 1) if b not in by_batch]

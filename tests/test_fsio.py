@@ -189,11 +189,11 @@ def test_heavy_spill_honors_scratch_knob_and_explicit_sweep(
     (ADVICE r13 — no call may guess another call's frame was
     materialized), and the public ``sweep_heavy_spills`` must clear all
     registered spills."""
-    from minivectordb_spark import plans
     from minivectordb_spark.operators import linkage
+    from minivectordb_spark.plans import width
 
     monkeypatch.setattr(fsio, "SCRATCH_ROOT", str(tmp_path / "scratch"))
-    monkeypatch.setattr(plans, "AGG_PARTITION_BYTES", 1024)
+    monkeypatch.setattr(width, "AGG_PARTITION_BYTES", 1024)
     monkeypatch.setattr(linkage, "DF_BROADCAST_MAX_ROWS", 1)
 
     rows = [(i, f"prefix-{i:04d}-suffix") for i in range(1, 40)]
@@ -226,11 +226,11 @@ def test_heavy_spill_sequential_lazy_frames_both_materialize(
     qgram join before the first call's lazily-returned frame is
     materialized must not delete the first call's spill — both frames
     materialize correctly afterwards."""
-    from minivectordb_spark import plans
     from minivectordb_spark.operators import linkage
+    from minivectordb_spark.plans import width
 
     monkeypatch.setattr(fsio, "SCRATCH_ROOT", str(tmp_path / "scratch"))
-    monkeypatch.setattr(plans, "AGG_PARTITION_BYTES", 1024)
+    monkeypatch.setattr(width, "AGG_PARTITION_BYTES", 1024)
     monkeypatch.setattr(linkage, "DF_BROADCAST_MAX_ROWS", 1)
 
     rows = [(i, f"prefix-{i:04d}-suffix") for i in range(1, 40)]

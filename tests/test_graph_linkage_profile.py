@@ -847,17 +847,17 @@ def test_heavy_shuffle_partitions_law(spark):
     numbers of the recorded 5M-name failure trail — ~64M occurrence rows
     at 96 B/row need ceil(6.1 GB / 32 MB) = 184 partitions, not the
     session's 32; small working sets keep the session width."""
-    from minivectordb_spark.plans import heavy_shuffle_partitions
+    from minivectordb_spark.plans.width import heavy_width
 
     session = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # small input: session width unchanged (no plan drift at gate scale)
-    assert heavy_shuffle_partitions(spark, 10_000, 96) == session
+    assert heavy_width(spark, 10_000, 96) == session
     # the r11 trail: 64M occurrence rows died at 32, ran at 256
-    p = heavy_shuffle_partitions(spark, 64_000_000, 96)
+    p = heavy_width(spark, 64_000_000, 96)
     assert p == max(session, -(-64_000_000 * 96 // (32 << 20)))
     assert p >= 184  # the sized width the hand-tuned 256 approximated
     # zero rows never divides by zero / returns junk
-    assert heavy_shuffle_partitions(spark, 0, 96) == session
+    assert heavy_width(spark, 0, 96) == session
 
 
 def test_qgram_heavy_path_same_answer_and_sized_plan(spark, monkeypatch):
@@ -866,8 +866,7 @@ def test_qgram_heavy_path_same_answer_and_sized_plan(spark, monkeypatch):
     must report the sized width and the hash-join (non-broadcast)
     doc-frequency decision, and the plan must stay all-equi-join."""
     from minivectordb_spark.operators import linkage
-    from minivectordb_spark import plans
-    from minivectordb_spark.plans import physical_plan
+    from minivectordb_spark.plans import physical_plan, width
 
     rows_l = [(i, f"prefix-{i:04d}-suffix") for i in range(1, 60)]
     rows_r = [(1000 + i, f"prefix-{i:04d}-suffix") for i in range(1, 60, 3)] + [
@@ -891,7 +890,7 @@ def test_qgram_heavy_path_same_answer_and_sized_plan(spark, monkeypatch):
 
     # shrink the law's units so ~2k occurrence rows count as heavy and
     # every df table is "too big to broadcast"
-    monkeypatch.setattr(plans, "AGG_PARTITION_BYTES", 1024)
+    monkeypatch.setattr(width, "AGG_PARTITION_BYTES", 1024)
     monkeypatch.setattr(linkage, "DF_BROADCAST_MAX_ROWS", 1)
     heavy = sorted(
         (r["lid"], r["rid"], r["dist"])

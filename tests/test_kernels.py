@@ -7,17 +7,29 @@ dedup-family oracle twin transitively re-verifies the swap, but these
 tests pin the exact contract at the kernel boundary — including the
 edge rows (NULL text, empty text, short docs, repeated spaces) where
 the two implementations could plausibly diverge.
+
+The operators pick a side by estimated input size
+(``util.use_arrow_kernel``): at test scale a file-backed input is below
+the floor, and a frame built from local rows has no estimate and always
+takes the kernel.  So the inputs here are parquet-backed, each gated
+frame is built on BOTH sides by patching ``util.KERNEL_MIN_BYTES``, and
+the kernel side must show its ``MapInArrow`` in the plan.
 """
+
+import itertools
 
 import pytest
 from pyspark.sql import functions as F
 
 from minivectordb_spark.operators import dedup as D
+from minivectordb_spark.operators import util
 from minivectordb_spark.operators.text import tokens
-from minivectordb_spark.operators.util import (
-    ensure_parallelism as _parallel,
-    materialize as _barrier,
-)
+from minivectordb_spark.operators.util import materialize as _barrier
+from minivectordb_spark.plans import physical_plan
+from minivectordb_spark.plans.width import ensure_parallelism as _parallel
+
+#: ``util.KERNEL_MIN_BYTES`` values that force each side of the size gate
+BRANCHES = {"kernel": 0, "expression": 1 << 62}
 
 EDGE_ROWS = [
     (1, "the quick brown fox jumps over the lazy dog"),
@@ -69,31 +81,65 @@ def _expr_bands(sh, id_col, n_hashes, band_size, seed):
     )
 
 
+@pytest.fixture
+def on_each_branch(monkeypatch):
+    """``run(build, rows)`` -> ``{branch: rows(build())}``, with the size
+    gate forced to each side in turn and each built plan checked for the
+    side that ran."""
+
+    def run(build, rows):
+        out = {}
+        for branch, floor in BRANCHES.items():
+            monkeypatch.setattr(util, "KERNEL_MIN_BYTES", floor)
+            df = build()
+            has_kernel = "MapInArrow" in physical_plan(df)
+            assert has_kernel == (branch == "kernel"), branch
+            out[branch] = rows(df)
+        return out
+
+    return run
+
+
 @pytest.fixture(scope="module")
-def corpus(spark, sf_dir):
+def scanned(spark, tmp_path_factory):
+    """``scanned(df)``: ``df`` written to parquet and read back, so it
+    carries the file-scan size estimate the gate reads."""
+    root = tmp_path_factory.mktemp("kernel_inputs")
+    n = itertools.count()
+
+    def scan(df):
+        path = str(root / f"t{next(n)}")
+        df.write.parquet(path)
+        return spark.read.parquet(path)
+
+    return scan
+
+
+@pytest.fixture(scope="module")
+def corpus(spark, sf_dir, scanned):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
     edge = spark.createDataFrame(EDGE_ROWS, ["doc_id", "text"]).withColumn(
         "doc_id", (F.col("doc_id") + 1_000_000).cast("long")
     )
-    return docs.union(edge)
+    return docs.union(scanned(edge))
 
 
 @pytest.mark.parametrize("k", [2, 3])
-def test_shingle_frame_exact(spark, corpus, k):
+def test_shingle_frame_exact(spark, corpus, k, on_each_branch):
     want = {
         r["doc_id"]: list(r["sh"])
         for r in _expr_shingle_frame(corpus, "text", "doc_id", k).collect()
     }
-    got = {
-        r["doc_id"]: list(r["sh"])
-        for r in D._shingle_frame(corpus, "text", "doc_id", k).collect()
-    }
-    assert got == want
+    got = on_each_branch(
+        lambda: D._shingle_frame(corpus, "text", "doc_id", k),
+        lambda df: {r["doc_id"]: list(r["sh"]) for r in df.collect()},
+    )
+    assert got == {b: want for b in BRANCHES}
 
 
-def test_minhash_signatures_exact(spark, corpus):
+def test_minhash_signatures_exact(spark, corpus, on_each_branch):
     sh = _expr_shingle_frame(corpus, "text", "doc_id", 3)
     want = {
         r["doc_id"]: list(r["mh"])
@@ -101,15 +147,15 @@ def test_minhash_signatures_exact(spark, corpus):
             "doc_id", D.minhash_from_hashes(F.col("sh"), 16, 42).alias("mh")
         ).collect()
     }
-    got = {
-        r["doc_id"]: list(r["minhash"])
-        for r in D.minhash_signatures(corpus).collect()
-    }
-    assert got == want
+    got = on_each_branch(
+        lambda: D.minhash_signatures(corpus),
+        lambda df: {r["doc_id"]: list(r["minhash"]) for r in df.collect()},
+    )
+    assert got == {b: want for b in BRANCHES}
 
 
 @pytest.mark.parametrize("n_hashes,band_size", [(16, 2), (16, 8), (8, 4)])
-def test_band_buckets_exact(spark, corpus, n_hashes, band_size):
+def test_band_buckets_exact(spark, corpus, n_hashes, band_size, on_each_branch):
     want = {
         (r["doc_id"], r["band_idx"]): r["band_hash"]
         for r in _expr_bands(
@@ -120,56 +166,68 @@ def test_band_buckets_exact(spark, corpus, n_hashes, band_size):
             42,
         ).collect()
     }
-    got = {
-        (r["doc_id"], r["band_idx"]): r["band_hash"]
-        for r in D._band_buckets(
+    got = on_each_branch(
+        lambda: D._band_buckets(
             D._shingle_frame(corpus, "text", "doc_id", 3),
             "doc_id",
             n_hashes,
             band_size,
             42,
-        ).collect()
-    }
-    assert got == want
+        ),
+        lambda df: {
+            (r["doc_id"], r["band_idx"]): r["band_hash"] for r in df.collect()
+        },
+    )
+    assert got == {b: want for b in BRANCHES}
 
 
-def test_string_id_passthrough(spark):
-    df = spark.createDataFrame(
-        [("a", "the quick brown fox jumps"), ("b", None), ("c", "x")],
-        ["sid", "text"],
+def test_string_id_passthrough(spark, scanned, on_each_branch):
+    df = scanned(
+        spark.createDataFrame(
+            [("a", "the quick brown fox jumps"), ("b", None), ("c", "x")],
+            ["sid", "text"],
+        )
     )
     want = {
         r["sid"]: list(r["sh"])
         for r in _expr_shingle_frame(df, "text", "sid", 3).collect()
     }
-    got = {
-        r["sid"]: list(r["sh"])
-        for r in D._shingle_frame(df, "text", "sid", 3).collect()
+    got = on_each_branch(
+        lambda: D._shingle_frame(df, "text", "sid", 3),
+        lambda sh: {r["sid"]: list(r["sh"]) for r in sh.collect()},
+    )
+    assert got == {b: want for b in BRANCHES}
+    bbs = on_each_branch(
+        lambda: D._band_buckets(
+            D._shingle_frame(df, "text", "sid", 3), "sid", 16, 2, 42
+        ),
+        lambda bb: (
+            bb.schema["band_idx"].dataType.simpleString(),
+            {r["sid"] for r in bb.collect()},
+        ),
+    )
+    assert bbs == {b: ("int", {"a", "b", "c"}) for b in BRANCHES}
+
+
+def test_schemas_unchanged(spark, scanned, on_each_branch):
+    df = scanned(spark.createDataFrame([(0, "a b c d")], ["doc_id", "text"]))
+
+    def schema(frame):
+        return [f.simpleString() for f in frame.schema.fields]
+
+    sh = on_each_branch(lambda: D._shingle_frame(df, "text", "doc_id", 3), schema)
+    assert sh == {b: ["doc_id:bigint", "sh:array<bigint>"] for b in BRANCHES}
+    bb = on_each_branch(
+        lambda: D._band_buckets(
+            D._shingle_frame(df, "text", "doc_id", 3), "doc_id", 16, 2, 42
+        ),
+        schema,
+    )
+    assert bb == {
+        b: ["doc_id:bigint", "band_idx:int", "band_hash:string"] for b in BRANCHES
     }
-    assert got == want
-    bb = D._band_buckets(D._shingle_frame(df, "text", "sid", 3), "sid", 16, 2, 42)
-    assert bb.schema["band_idx"].dataType.simpleString() == "int"
-    assert {r["sid"] for r in bb.collect()} == {"a", "b", "c"}
-
-
-def test_schemas_unchanged(spark):
-    df = spark.createDataFrame([(0, "a b c d")], ["doc_id", "text"])
-    sh = D._shingle_frame(df, "text", "doc_id", 3)
-    assert [f.simpleString() for f in sh.schema.fields] == [
-        "doc_id:bigint",
-        "sh:array<bigint>",
-    ]
-    bb = D._band_buckets(sh, "doc_id", 16, 2, 42)
-    assert [f.simpleString() for f in bb.schema.fields] == [
-        "doc_id:bigint",
-        "band_idx:int",
-        "band_hash:string",
-    ]
-    ms = D.minhash_signatures(df)
-    assert [f.simpleString() for f in ms.schema.fields] == [
-        "doc_id:bigint",
-        "minhash:array<bigint>",
-    ]
+    ms = on_each_branch(lambda: D.minhash_signatures(df), schema)
+    assert ms == {b: ["doc_id:bigint", "minhash:array<bigint>"] for b in BRANCHES}
 
 
 # ---------------------------------------------------------------------------

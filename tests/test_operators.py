@@ -2148,7 +2148,7 @@ def test_ensure_parallelism_identity_on_wide_input(spark):
     """The gate must be IDENTITY (no repartition node) when the input
     already has >= defaultParallelism partitions, and must widen a
     narrow input to exactly defaultParallelism."""
-    from minivectordb_spark.operators.util import ensure_parallelism
+    from minivectordb_spark.plans.width import ensure_parallelism
 
     wide = spark.range(0, 1000, 1, spark.sparkContext.defaultParallelism)
     assert ensure_parallelism(wide) is wide
@@ -2157,6 +2157,24 @@ def test_ensure_parallelism_identity_on_wide_input(spark):
     assert (
         widened.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
     )
+
+
+def test_run_concurrent_keeps_callers_job_group(spark):
+    """Overlapped actions run in the caller's job group, so the group's
+    status tracking (and ``cancelJobGroup``) covers them."""
+    from minivectordb_spark.operators.util import run_concurrent
+
+    sc = spark.sparkContext
+    group = "run-concurrent-group-test"
+    sc.setJobGroup(group, "run_concurrent inherits the job group")
+    try:
+        counts = run_concurrent(
+            lambda: spark.range(10).count(), lambda: spark.range(20).count()
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    assert counts == [10, 20]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2
 
 
 def test_decimal_frozen_scores_partitioning_invariant(spark):

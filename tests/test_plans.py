@@ -489,29 +489,53 @@ def test_kcore_lineage_truncated_single_degree_exchange(spark, sf):
 def test_iteration_shuffle_scope_sizes_and_restores(spark):
     """r11: iterative loops scope shuffle partitions to the measured
     working set — p = clamp(ceil(n / EDGES_PER_ITER_PARTITION), 1,
-    session), always restored, exception-safe."""
-    from minivectordb_spark.plans import (
+    session) — and the scope always restores, exception-safe."""
+    from minivectordb_spark.plans.width import (
         EDGES_PER_ITER_PARTITION,
-        iteration_shuffle_scope,
+        iteration_width,
+        shuffle_scope,
     )
 
     conf = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(conf)
-    with iteration_shuffle_scope(spark, 100) as p:
+    assert iteration_width(spark, 100) == 1
+    # a 100 TB graph keeps the session width
+    assert iteration_width(spark, 10**12) == int(prev)
+    assert iteration_width(spark, 5 * EDGES_PER_ITER_PARTITION) == min(int(prev), 5)
+    with shuffle_scope(spark, iteration_width(spark, 100)) as p:
         assert p == 1 and spark.conf.get(conf) == "1"
     assert spark.conf.get(conf) == prev
-    with iteration_shuffle_scope(spark, 10**12) as p:
-        assert p == int(prev)  # a 100 TB graph keeps the session width
-    with iteration_shuffle_scope(spark, 5 * EDGES_PER_ITER_PARTITION) as p:
-        assert p == min(int(prev), 5)
-    with iteration_shuffle_scope(spark, 100, partitions=7) as p:
-        assert p == 7  # explicit override wins
     try:
-        with iteration_shuffle_scope(spark, 100):
+        with shuffle_scope(spark, 1):
             raise RuntimeError("boom")
     except RuntimeError:
         pass
     assert spark.conf.get(conf) == prev
+
+
+def test_shuffle_width_conf_has_one_owner():
+    """Every shuffle-width decision lives in plans/width.py: outside
+    session.py (which sets the initial value) no package module names
+    the shuffle-partition conf, and only ``shuffle_scope`` sets it."""
+    import inspect
+    import pathlib
+
+    import minivectordb_spark
+    from minivectordb_spark.plans import width
+
+    key = "spark.sql.shuffle.partitions"
+    pkg = pathlib.Path(minivectordb_spark.__file__).parent
+    owners = {pkg / "session.py", pkg / "plans" / "width.py"}
+    readers = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if key in p.read_text() and p not in owners
+    )
+    assert readers == []
+    assert width._CONF == key
+    # the set and the restore, both inside the one scope
+    scope = inspect.getsource(width.shuffle_scope)
+    assert inspect.getsource(width).count("conf.set(") == scope.count("conf.set(") == 2
 
 
 def test_dedup_index_probe_broadcasts_never_shuffles_index(spark, tmp_path):

@@ -1,35 +1,42 @@
-"""Capture `.explain("formatted")` for graded queries to plans/r15/.
+"""Capture `.explain("formatted")` for graded queries to plans/<round>/.
 
-Usage: python tools/capture_plans_r15.py <suffix> [query ...]
+Usage: python tools/capture_plans.py <round> <suffix> [query ...]
+  round  = output directory under plans/ (e.g. "r16").
   suffix = "before" | "after"; with no query list, captures every
-  graded query.  Queries whose builder performs eager work (index
-  builds, streaming gates) still run that work; the captured plan is
-  the returned (final) frame's — the piece the judge checks claims
-  against.
+  graded query (a named query may also be a demoted one).  Queries
+  whose builder performs eager work (index builds, streaming gates)
+  still run that work; the captured plan is the returned (final)
+  frame's.  Session counters (expression ids ``#123``, ``plan_id=45``)
+  are normalized to ``N`` so two captures of the same plan compare
+  byte-for-byte with ``diff``; file locations under temporary or
+  generation-stamped index directories still differ run to run.
+
+Environment: SPARK_GRAFT_SF_DIR (required: the dataset directory) and
+SPARK_GRAFT_CPUS (default 32; also the shuffle-partition count).
 """
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry
 from minivectordb_spark.session import get_spark
 
+_COUNTERS = [(re.compile(r"#\d+"), "#N"), (re.compile(r"plan_id=\d+"), "plan_id=N")]
+
 
 def main():
-    suffix = sys.argv[1]
-    only = sys.argv[2:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    rnd, suffix = sys.argv[1], sys.argv[2]
+    only = sys.argv[3:]
+    sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r15",
-    )
+    out_dir = os.path.join(ROOT, "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(
         app_name=f"plans_{suffix}", cores=cpus, shuffle_partitions=int(cpus)
@@ -52,6 +59,8 @@ def main():
             )
         except Exception as e:  # capture the failure instead of dying
             plan = f"ERROR building {name}: {e}"
+        for pattern, repl in _COUNTERS:
+            plan = pattern.sub(repl, plan)
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
             f.write(plan)
         print(f"wrote {name}_{suffix}.txt ({len(plan)} chars)")
