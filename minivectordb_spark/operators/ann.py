@@ -31,7 +31,6 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from minivectordb_spark.scoring import cosine_sim
 
 
 def seed_centroids(df: DataFrame, n: int, id_col: str = "vec_id", emb_col: str = "embedding") -> DataFrame:
@@ -129,7 +128,7 @@ def lloyd_kmeans_fit(
     # the fit returns) — at scale this is the difference between 1 and
     # `iters` passes over the corpus
     staged = materialize(
-        df.select(id_col, emb_col), norm_expr(F.col(emb_col)), "__n", [id_col, emb_col]
+        df.select(id_col, emb_col), norm_expr(emb_col), "__n", [id_col, emb_col]
     ).localCheckpoint(eager=False)
     # Per-iteration shape is CONSTANT: assignment is the broadcast-join
     # argmax (the ivf_assign_join plan — only the tiny centroid DF's DATA
@@ -189,7 +188,7 @@ def lloyd_kmeans_fit(
                     [(int(cid), [float(x) for x in vec]) for cid, vec in cents],
                     ["centroid_id", "centroid_emb"],
                 ),
-                norm_expr(F.col("centroid_emb")),
+                norm_expr("centroid_emb"),
                 "__cn",
                 ["centroid_id", "centroid_emb"],
             )
@@ -246,26 +245,20 @@ def _collect_centroids(centroids: DataFrame) -> list[tuple[int, list[float]]]:
     return out
 
 
-def _assignment_struct(
-    emb: Column, cents: list[tuple[int, list[float]]], norm_col: Column | None = None
-) -> Column:
+def _assignment_struct(emb_col: str, cents: list[tuple[int, list[float]]], norm_col: str) -> Column:
     """array_max over (cos, -centroid_id) structs == argmax by cosine with
-    min-id tiebreak.  One expression, evaluated map-side.  With ``norm_col``
-    the row norm is read from a staged column instead of being re-folded
-    once per centroid (K-fold saving)."""
-    from minivectordb_spark.scoring import dot_expr
+    min-id tiebreak.  One expression, evaluated map-side, built as one SQL
+    string (K x dim literals, three py4j round trips).  The row norm is
+    read from the staged ``norm_col`` instead of being re-folded once per
+    centroid (K-fold saving)."""
+    from minivectordb_spark.scoring import cosine_sql, sql_name
 
-    entries = []
-    for cid, vec in cents:
-        if norm_col is not None:
-            qn = math.sqrt(sum(float(x) * float(x) for x in vec))
-            cos = dot_expr(emb, vec) / (norm_col * F.lit(qn))
-        else:
-            cos = cosine_sim(emb, vec)
-        entries.append(
-            F.struct(cos.alias("cos"), F.lit(-int(cid)).cast("long").alias("neg_id"))
-        )
-    return F.array_max(F.array(*entries))
+    emb, norm = sql_name(emb_col), sql_name(norm_col)
+    entries = ", ".join(
+        f"named_struct('cos', {cosine_sql(emb, vec, norm)}, 'neg_id', CAST({-int(cid)} AS BIGINT))"
+        for cid, vec in cents
+    )
+    return F.expr(f"array_max(array({entries}))")
 
 
 def ivf_assign(
@@ -280,8 +273,8 @@ def ivf_assign(
     from minivectordb_spark.scoring import norm_expr
 
     cents = _collect_centroids(centroids)
-    staged = materialize(df, norm_expr(F.col(emb_col)), "__n", [id_col, emb_col])
-    best = _assignment_struct(F.col(emb_col), cents, norm_col=F.col("__n"))
+    staged = materialize(df, norm_expr(emb_col), "__n", [id_col, emb_col])
+    best = _assignment_struct(emb_col, cents, norm_col="__n")
     return materialize(staged, best, "__best", [id_col]).select(
         F.col(id_col),
         (-F.col("__best.neg_id")).alias("centroid_id"),
@@ -483,10 +476,10 @@ def ivf_assign_join(
             )
         staged = df.select(id_col, emb_col, "__n")
     else:
-        staged = materialize(df, norm_expr(F.col(emb_col)), "__n", [id_col, emb_col])
+        staged = materialize(df, norm_expr(emb_col), "__n", [id_col, emb_col])
     c = materialize(
         centroids.select("centroid_id", "centroid_emb"),
-        norm_expr(F.col("centroid_emb")),
+        norm_expr("centroid_emb"),
         "__cn",
         ["centroid_id", "centroid_emb"],
     )
@@ -543,17 +536,16 @@ def ivf_search(
     raise nprobe to buy recall with probed-bytes cost, linearly)."""
     cents = _collect_centroids(centroids)
     q = [float(x) for x in query]
-    qn = math.sqrt(sum(x * x for x in q))
     probe_ids = set(_rank_probes(cents, q, nprobe))
 
     from minivectordb_spark.operators.util import materialize
-    from minivectordb_spark.scoring import dot_expr, norm_expr
+    from minivectordb_spark.scoring import cosine_sql, norm_expr, sql_name
 
-    staged = materialize(df, norm_expr(F.col(emb_col)), "__n", [id_col, emb_col])
-    best = _assignment_struct(F.col(emb_col), cents, norm_col=F.col("__n"))
+    staged = materialize(df, norm_expr(emb_col), "__n", [id_col, emb_col])
+    best = _assignment_struct(emb_col, cents, norm_col="__n")
     assigned_id = -best.getField("neg_id")
     candidates = staged.filter(assigned_id.isin(*[int(c) for c in probe_ids]))
-    score = dot_expr(F.col(emb_col), q) / (F.col("__n") * F.lit(qn))
+    score = F.expr(cosine_sql(sql_name(emb_col), q, norm="`__n`"))
     return (
         candidates.withColumn("score", F.round(score, 6))
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
@@ -652,8 +644,8 @@ def save_ivf_index(
     if skip_if_fresh and fp is not None and cur.get("fingerprint") == fp:
         return False
     gen, gen_dir = fsio.new_gen_dir(cur)
-    staged = materialize(df, norm_expr(F.col(emb_col)), "__n", [id_col, emb_col])
-    best = _assignment_struct(F.col(emb_col), cents, norm_col=F.col("__n"))
+    staged = materialize(df, norm_expr(emb_col), "__n", [id_col, emb_col])
+    best = _assignment_struct(emb_col, cents, norm_col="__n")
     assigned = materialize(staged, best, "__best", [id_col, emb_col]).select(
         F.col(id_col),
         F.col(emb_col),
@@ -820,8 +812,8 @@ def update_ivf_index(
     cents = _collect_centroids(
         spark.read.parquet(fsio.gen_data(path, m, "centroids"))
     )
-    staged = materialize(df_new, norm_expr(F.col(emb_col)), "__n", [id_col, emb_col])
-    best = _assignment_struct(F.col(emb_col), cents, norm_col=F.col("__n"))
+    staged = materialize(df_new, norm_expr(emb_col), "__n", [id_col, emb_col])
+    best = _assignment_struct(emb_col, cents, norm_col="__n")
     assigned = materialize(staged, best, "__best", [id_col, emb_col]).select(
         F.col(id_col),
         F.col(emb_col),
@@ -853,20 +845,19 @@ def ivf_search_indexed(
     on-the-fly ``ivf_search`` given the same centroids."""
     from minivectordb_spark import fsio
     from minivectordb_spark.operators.util import materialize
-    from minivectordb_spark.scoring import dot_expr, norm_expr
+    from minivectordb_spark.scoring import cosine_sql, norm_expr, sql_name
 
     m, _ = _load_ivf_or_empty(path, spark)
     centroids = spark.read.parquet(fsio.gen_data(path, m, "centroids"))
     cents = _collect_centroids(centroids)
     probes = _rank_probes(cents, query, nprobe)
     q = [float(x) for x in query]
-    qn = math.sqrt(sum(x * x for x in q))
 
     cand = spark.read.parquet(fsio.gen_data(path, m, "assignments")).filter(
         F.col("centroid_id").isin(*probes)
     )
-    staged = materialize(cand, norm_expr(F.col(emb_col)), "__n", [id_col, emb_col])
-    score = dot_expr(F.col(emb_col), q) / (F.col("__n") * F.lit(qn))
+    staged = materialize(cand, norm_expr(emb_col), "__n", [id_col, emb_col])
+    score = F.expr(cosine_sql(sql_name(emb_col), q, norm="`__n`"))
     return (
         staged.withColumn("score", F.round(score, 6))
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
@@ -899,7 +890,7 @@ def mllib_lsh_neighbors(
     from minivectordb_spark.operators.util import materialize
     from minivectordb_spark.scoring import norm_expr
 
-    staged = materialize(df, norm_expr(F.col(emb_col)), "__n", [id_col, emb_col])
+    staged = materialize(df, norm_expr(emb_col), "__n", [id_col, emb_col])
     normalized = staged.select(
         F.col(id_col),
         array_to_vector(
@@ -958,18 +949,10 @@ def _plane_dots_staged(
     deduplicates them: measured at 10x replication the inlined form paid
     ~10x the dot-product work per row and dominated the candidate join."""
     from minivectordb_spark.operators.util import materialize
+    from minivectordb_spark.scoring import dot_sql, sql_name
 
-    emb = F.col(emb_col).cast("array<double>")
-    dots = F.array(
-        *[
-            F.aggregate(
-                F.zip_with(emb, F.array(*[F.lit(float(x)) for x in p]), lambda a, b: a * b),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            for p in planes
-        ]
-    )
+    emb = sql_name(emb_col)
+    dots = F.expr("array(" + ", ".join(dot_sql(emb, p) for p in planes) + ")")
     return materialize(df, dots, "__dots", [id_col])
 
 

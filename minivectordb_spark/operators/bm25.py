@@ -210,16 +210,17 @@ def bm25_search_batch(
     # doc_frequencies collect, the postings explode) — three full corpus
     # scans per call for values derivable from one staged frame.  Stage
     # (id, dl, matched-occurrences) once behind a lazy checkpoint: dl is
-    # the full token count, __m keeps ONLY occurrences of union-set
-    # tokens (short arrays — the checkpoint is posting-sized, not
-    # corpus-sized).  Every downstream count is bit-identical: sum(dl)
-    # and N for avgdl, per-token distinct-doc counts for df_t, and tf =
+    # the full token count (a long), __m keeps ONLY occurrences of
+    # union-set tokens.  The checkpoint holds one row per corpus document,
+    # but each row is narrow: the id, one long and a short array instead
+    # of the text.  Every downstream count is exact: sum(dl) as a long and
+    # N for avgdl, per-token distinct-doc counts for df_t, and tf =
     # occurrence count within __m (F.filter keeps duplicates).
     toks_col = tokens(F.col(text_col))
     staged = (
         df.select(
             F.col(id_col),
-            F.size(toks_col).cast("double").alias("__dl"),
+            F.size(toks_col).cast("long").alias("__dl"),
             F.filter(toks_col, lambda x: x.isin(all_toks)).alias("__m"),
         )
         .localCheckpoint(eager=False)
@@ -229,28 +230,22 @@ def bm25_search_batch(
     # job instead of paying two driver round-trips (the NULL-token row is
     # the corpus-level aggregate)
     stats_rows = (
-        staged.agg(
-            F.count(F.lit(1)).cast("double").alias("a"),
-            F.sum("__dl").alias("b"),
-        )
+        staged.agg(F.count(F.lit(1)).alias("a"), F.sum("__dl").alias("b"))
         .select(F.lit(None).cast("string").alias("t"), "a", "b")
         .unionByName(
             staged.select(F.explode(F.array_distinct("__m")).alias("t"))
             .groupBy("t")
-            .agg(
-                F.count(F.lit(1)).cast("double").alias("a"),
-                F.lit(None).cast("double").alias("b"),
-            )
+            .agg(F.count(F.lit(1)).alias("a"), F.lit(None).cast("long").alias("b"))
         )
         .collect()
     )
     n, avgdl, found = 0, 0.0, {}
     for r in stats_rows:
         if r["t"] is None:
-            n = int(r["a"])
+            n = r["a"]
             avgdl = float(r["b"]) / n if n else 0.0
         else:
-            found[r["t"]] = int(r["a"])
+            found[r["t"]] = r["a"]
     dfs = {t: found.get(t, 0) for t in all_toks}
     idf = {t: _idf(n, dfs[t]) for t in all_toks}
 

@@ -1342,7 +1342,7 @@ def embedding_neardup_pairs(
     use_lsh = block_col is None and not brute_force
 
     keep = [id_col, emb_col] + ([block_col] if block_col else [])
-    base = materialize(df.select(*keep), norm_expr(F.col(emb_col)), "__n", keep)
+    base = materialize(df.select(*keep), norm_expr(emb_col), "__n", keep)
 
     if use_lsh:
         planes = _neardup_resolve_planes(
@@ -1464,11 +1464,11 @@ def neardup_against(
     )
     cand = verify_repartition(cand, F.col("id_new"))
     base_a = materialize(
-        df.select(id_col, emb_col), norm_expr(F.col(emb_col)), "__n",
+        df.select(id_col, emb_col), norm_expr(emb_col), "__n",
         [id_col, emb_col],
     )
     base_b = materialize(
-        reference.select(id_col, emb_col), norm_expr(F.col(emb_col)), "__n",
+        reference.select(id_col, emb_col), norm_expr(emb_col), "__n",
         [id_col, emb_col],
     )
     a = base_a.select(
@@ -2700,11 +2700,11 @@ def neardup_against_indexed(
         "left_semi",
     )
     base_a = materialize(
-        df.select(id_col, emb_col), norm_expr(F.col(emb_col)), "__n",
+        df.select(id_col, emb_col), norm_expr(emb_col), "__n",
         [id_col, emb_col],
     )
     base_b = materialize(
-        ref_needed, norm_expr(F.col(emb_col)), "__n", [id_col, emb_col]
+        ref_needed, norm_expr(emb_col), "__n", [id_col, emb_col]
     )
     a = base_a.select(
         F.col(id_col).alias("id_new"),

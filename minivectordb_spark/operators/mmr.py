@@ -73,7 +73,7 @@ def mmr_rerank(
     scored = df.select(
         F.col(id_col).alias("id"),
         F.col(emb_col).alias("emb"),
-        cosine_sim(F.col(emb_col), query).alias("cos"),
+        cosine_sim(emb_col, query).alias("cos"),
     )
     pool_df = _reused(
         scored.orderBy(F.col("cos").desc(), F.col("id").asc())
@@ -82,10 +82,10 @@ def mmr_rerank(
     )
 
     a = pool_df.select(
-        F.col("id").alias("ia"), F.col("emb").alias("ea"), norm_expr(F.col("emb")).alias("na")
+        F.col("id").alias("ia"), F.col("emb").alias("ea"), norm_expr("emb").alias("na")
     )
     b = pool_df.select(
-        F.col("id").alias("ib"), F.col("emb").alias("eb"), norm_expr(F.col("emb")).alias("nb")
+        F.col("id").alias("ib"), F.col("emb").alias("eb"), norm_expr("emb").alias("nb")
     )
     pair_df = (
         a.crossJoin(F.broadcast(b))

@@ -16,14 +16,20 @@ vector_database.py:489).
 
 Scoring paths:
 
-- ``cosine_sim``: single query vector as a JVM-side fold
-  (``aggregate(zip_with(...))`` in double precision) — whole-stage codegen,
-  no Python in the loop.  Used for one-off queries.
-- ``knn_batch`` / ``CosineMatmulScorer``: many queries at once via an
-  Arrow-batched pandas UDF doing one BLAS matmul per batch — the throughput
-  path (BASELINE.md target 2).  The query matrix is closed over by the UDF
-  lambda and shipped once per task (broadcast-variable semantics), so the
-  corpus never shuffles.
+- ``cosine_sim`` / ``dot_expr``: one query vector as a JVM-side left fold
+  (``aggregate(zip_with(...))`` in double precision), no Python in the
+  loop.  The expression is built as ONE SQL string (``dot_sql``,
+  ``norm_sql``, ``cosine_sql``) and parsed by ``F.expr``: three py4j
+  round trips at any dimension, where building it from Column objects
+  costs four to five per vector component.  The parsed tree is the same
+  fold, and ``sql_double`` writes each query component so that Spark
+  reads back the same double, so every score is bit-identical.
+- ``knn_batch``: many queries in one job, a broadcast cross join scored
+  with the same fold over two columns (``cosine_sim_cols``).
+- ``CosineMatmulScorer``: many queries via an Arrow-batched pandas UDF
+  doing one BLAS matmul per batch.  The query matrix is closed over by
+  the UDF lambda and shipped once per task (broadcast-variable
+  semantics), so the corpus never shuffles.
 """
 
 from __future__ import annotations
@@ -37,10 +43,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType, StructField, StructType
 
 
-def _as_float_list(vec) -> list[float]:
-    return [float(x) for x in vec]
-
-
 def l2_normalize(vec) -> list[float]:
     """Driver-side query normalization (reference normalizes the query with
     faiss.normalize_L2, vector_database.py:473-475)."""
@@ -51,38 +53,68 @@ def l2_normalize(vec) -> list[float]:
     return [x / n for x in v]
 
 
-def dot_expr(emb: Column, query: Sequence[float]) -> Column:
-    """JVM-side left-fold dot product in double precision.
+def sql_name(col: str) -> str:
+    """A column name as SQL text: backtick-quoted, embedded backticks
+    doubled, so any name reads back as exactly that one column."""
+    return "`" + col.replace("`", "``") + "`"
+
+
+def sql_double(x) -> str:
+    """A double as SQL text that Spark parses back to the same bits.
+
+    ``repr`` is the shortest decimal string that round-trips a Python
+    float (-0.0 and subnormals included); the ``D`` suffix makes it a
+    DOUBLE literal.  NaN and +/-inf have no literal form and go through a
+    string cast instead."""
+    x = float(x)
+    if math.isfinite(x):
+        return repr(x) + "D"
+    word = "NaN" if math.isnan(x) else ("Infinity" if x > 0 else "-Infinity")
+    return f"CAST('{word}' AS DOUBLE)"
+
+
+def dot_sql(emb: str, query: Sequence[float]) -> str:
+    """SQL text of the left-fold dot product of the array expression
+    ``emb`` (SQL text) with a constant query vector, in double precision.
 
     Left-fold order matters: it makes the floating-point result reproducible
     and bit-identical to any engine that sums left-to-right in double (the
     DuckDB correctness oracle does).
     """
-    arr = F.array(*[F.lit(float(x)) for x in query])
-    return F.aggregate(
-        F.zip_with(emb.cast("array<double>"), arr, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    q = ", ".join(sql_double(x) for x in query)
+    return (
+        f"aggregate(zip_with(cast({emb} as array<double>), array({q}), (a, b) -> a * b), "
+        "0D, (acc, x) -> acc + x)"
     )
 
 
-def norm_expr(emb: Column) -> Column:
-    """||v||_2 as a JVM-side left fold in double precision."""
-    return F.sqrt(
-        F.aggregate(
-            F.transform(emb.cast("array<double>"), lambda x: x * x),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
+def norm_sql(emb: str) -> str:
+    """SQL text of ||emb||_2 as a left fold in double precision."""
+    return f"sqrt(aggregate(transform(cast({emb} as array<double>), x -> x * x), 0D, (acc, x) -> acc + x))"
 
 
-def cosine_sim(emb: Column, query: Sequence[float]) -> Column:
-    """cos(embedding, query) — higher is better (canonical similarity,
-    SURVEY.md §2.3 op 20; distance = 1 - sim)."""
-    q = _as_float_list(query)
+def cosine_sql(emb: str, query: Sequence[float], norm: str | None = None) -> str:
+    """SQL text of cos(emb, query); ``norm`` is the SQL text of a staged
+    row norm (default: fold it from ``emb``)."""
+    q = [float(x) for x in query]
     qn = math.sqrt(sum(x * x for x in q))
-    return dot_expr(emb, q) / (norm_expr(emb) * F.lit(qn))
+    return f"{dot_sql(emb, q)} / ({norm or norm_sql(emb)} * {sql_double(qn)})"
+
+
+def dot_expr(emb: str, query: Sequence[float]) -> Column:
+    """Left-fold dot product of embedding column ``emb`` with ``query``."""
+    return F.expr(dot_sql(sql_name(emb), query))
+
+
+def norm_expr(emb: str) -> Column:
+    """||v||_2 of embedding column ``emb`` as a left fold in double."""
+    return F.expr(norm_sql(sql_name(emb)))
+
+
+def cosine_sim(emb: str, query: Sequence[float]) -> Column:
+    """cos(embedding column ``emb``, query) — higher is better (canonical
+    similarity, SURVEY.md §2.3 op 20; distance = 1 - sim)."""
+    return F.expr(cosine_sql(sql_name(emb), query))
 
 
 def dot_cols(emb_a: Column, emb_b: Column) -> Column:
@@ -94,16 +126,12 @@ def dot_cols(emb_a: Column, emb_b: Column) -> Column:
     )
 
 
-def cosine_sim_cols(emb_a: Column, emb_b: Column, norm_a: Column | None = None, norm_b: Column | None = None) -> Column:
-    """cos between two embedding columns (for similarity self-joins).
-
-    Pass precomputed ``norm_a``/``norm_b`` columns when the expression is
-    evaluated per PAIR (joins): recomputing the norm fold per pair triples
-    the work — stage it once per row instead (see operators/util.py)."""
-    dot = dot_cols(emb_a, emb_b)
-    na = norm_a if norm_a is not None else norm_expr(emb_a)
-    nb = norm_b if norm_b is not None else norm_expr(emb_b)
-    return dot / (na * nb)
+def cosine_sim_cols(emb_a: Column, emb_b: Column, norm_a: Column, norm_b: Column) -> Column:
+    """cos between two embedding columns (for similarity joins), given
+    their row norms.  The expression is evaluated per PAIR, so the norms
+    are staged once per row (``norm_expr`` behind operators/util.py's
+    ``materialize``) instead of being re-folded per pair."""
+    return dot_cols(emb_a, emb_b) / (norm_a * norm_b)
 
 
 def knn(
@@ -130,10 +158,12 @@ def knn(
     if pred is not None:
         out = out.filter(pred)
     if prenormalized:
-        out = out.withColumn(score_col, dot_expr(F.col(emb_col), l2_normalize(query)))
+        out = out.withColumn(score_col, dot_expr(emb_col, l2_normalize(query)))
     else:
-        out = out.withColumn(score_col, cosine_sim(F.col(emb_col), query))
-    return out.orderBy(F.col(score_col).desc(), F.col(id_col).asc()).limit(k)
+        out = out.withColumn(score_col, cosine_sim(emb_col, query))
+    # F.desc/F.asc on a name: three py4j round trips each, where
+    # F.col(...).desc() pays ~25 for its call-site bookkeeping
+    return out.orderBy(F.desc(score_col), F.asc(id_col)).limit(k)
 
 
 def knn_batch(
@@ -167,7 +197,7 @@ def knn_batch(
     # expression would redo the fold once per (row, query) pair
     q = materialize(
         queries_df.select(F.col(query_id_col), F.col(query_emb_col).alias("__q_emb")),
-        norm_expr(F.col("__q_emb")),
+        norm_expr("__q_emb"),
         "__q_norm",
         [query_id_col, "__q_emb"],
     )
@@ -177,7 +207,7 @@ def knn_batch(
     # identity at real split counts (plans.width.ensure_parallelism)
     corpus = materialize(
         ensure_parallelism(corpus_df),
-        norm_expr(F.col(corpus_emb_col)),
+        norm_expr(corpus_emb_col),
         "__c_norm",
         corpus_df.columns,
     )
@@ -236,30 +266,23 @@ def maxsim_score(
     composes with the IVF/LSH blocking paths exactly like single-vector
     cosine: block on a pooled or centroid vector first, maxsim only the
     candidates."""
-    from functools import reduce
-
     from minivectordb_spark.operators.util import materialize
 
     qs = [[float(x) for x in q] for q in query_vecs]
     if not qs:
         raise ValueError("maxsim_score: query_vecs must be non-empty")
-    qns = [math.sqrt(sum(x * x for x in q)) for q in qs]
+    emb = sql_name(emb_col)
     staged = materialize(
         df,
-        F.transform(F.col(emb_col), lambda dv: norm_expr(dv)),
+        F.expr(f"transform({emb}, dv -> {norm_sql('dv')})"),
         "__dn",
         [id_col, emb_col],
     )
-    def _per_token_cos(q: list[float], qn: float):
-        return lambda dv, n: dot_expr(dv, q) / (n * F.lit(qn))
-
     per_q = [
-        F.array_max(
-            F.zip_with(F.col(emb_col), F.col("__dn"), _per_token_cos(q, qn))
-        )
-        for q, qn in zip(qs, qns)
+        f"array_max(zip_with({emb}, `__dn`, (dv, n) -> {cosine_sql('dv', q, norm='n')}))"
+        for q in qs
     ]
-    score = F.round(reduce(lambda a, b: a + b, per_q), 6)
+    score = F.expr(f"round({' + '.join(per_q)}, 6)")
     return staged.filter(F.size(F.col(emb_col)) > 0).select(
         F.col(id_col), score.alias(score_col)
     )

@@ -569,7 +569,7 @@ def stream_neardup_ingest(
             hits = existing.filter(F.col("lsh_bucket").isin(probe_vals))
             b = materialize(
                 hits.select("embedding", "lsh_bucket"),
-                norm_expr(F.col("embedding")),
+                norm_expr("embedding"),
                 "__nb",
                 ["embedding", "lsh_bucket"],
             ).select(
@@ -579,7 +579,7 @@ def stream_neardup_ingest(
             )
             a = materialize(
                 survivors.select(id_col, "embedding"),
-                norm_expr(F.col("embedding")),
+                norm_expr("embedding"),
                 "__na",
                 [id_col, "embedding"],
             ).select(

@@ -55,7 +55,10 @@ from pyspark.sql.types import (
 
 from minivectordb_spark.autocut import apply_autocut, autocut_distances
 from minivectordb_spark.filters import TypedMapResolver, compile_filters
-from minivectordb_spark.scoring import cosine_sim, knn
+from minivectordb_spark.scoring import knn
+
+# VectorTable.dim not computed yet (None is a resolved value: no rows)
+_UNRESOLVED = object()
 
 VECTOR_SCHEMA = StructType(
     [
@@ -126,10 +129,20 @@ class VectorTable:
     vector_database.py:18-19).
     """
 
-    def __init__(self, spark: SparkSession, df: DataFrame, dim: int | None = None):
+    def __init__(self, spark: SparkSession, df: DataFrame, dim: Any = _UNRESOLVED):
         self.spark = spark
         self.df = df
-        self.dim = dim
+        self._dim = dim
+
+    @property
+    def dim(self) -> int | None:
+        """Embedding width (None for a table with no rows).  Resolved by one
+        probe job the first time it is read, then kept for this snapshot;
+        opening a table runs no job for it."""
+        if self._dim is _UNRESOLVED:
+            row = self.df.select(F.size("embedding").alias("d")).first()
+            self._dim = row["d"] if row else None
+        return self._dim
 
     # ---------------- construction / persistence ----------------
 
@@ -164,9 +177,11 @@ class VectorTable:
         )
 
         spark = df.sparkSession
+        dim = _UNRESOLVED
         if validate:
             stats = df.select(
                 F.countDistinct(F.size(F.col(emb_col))).alias("ndims"),
+                F.max(F.size(F.col(emb_col))).alias("dim"),
                 F.count(F.lit(1)).alias("n"),
                 F.count_distinct(F.col(id_col)).alias("nid"),
                 F.count(F.col(id_col)).alias("nonnull"),
@@ -175,6 +190,7 @@ class VectorTable:
                 raise ValueError("Embedding dimension mismatch: multiple dims in input")
             if stats["nid"] != stats["n"] or stats["nonnull"] != stats["n"]:
                 raise ValueError("Unique ID already exists.")
+            dim = stats["dim"]
 
         str_m, num_m, ts_m, bool_m, arr_m = [], [], [], [], []
         for c in meta_cols:
@@ -214,7 +230,7 @@ class VectorTable:
         )
         # norm behind a Generate barrier, so the per-element division below
         # reads a column instead of re-folding the norm per element
-        staged = materialize(pre, norm_expr(F.col("embedding")), "norm", pre.columns)
+        staged = materialize(pre, norm_expr("embedding"), "norm", pre.columns)
         norm = F.col("norm")
         shaped = staged.select(
             "id",
@@ -233,17 +249,13 @@ class VectorTable:
             "meta_arr",
             "meta_json",
         )
-        dim_row = df.select(F.size(F.col(emb_col)).alias("d")).limit(1).collect()
-        return cls(spark, shaped, dim=dim_row[0]["d"] if dim_row else None)
+        return cls(spark, shaped, dim=dim)
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "VectorTable":
         """spark.read.parquet replaces the eager full unpickle
         (vector_database.py:28-40) — the scan is lazy and columnar."""
-        df = spark.read.parquet(path)
-        dim_row = df.select(F.size("embedding").alias("d")).limit(1).collect()
-        dim = dim_row[0]["d"] if dim_row else None
-        return cls(spark, df, dim=dim)
+        return cls(spark, spark.read.parquet(path))
 
     def save(
         self,
@@ -284,13 +296,11 @@ class VectorTable:
     @classmethod
     def load_durable(cls, spark: SparkSession, path: str) -> "VectorTable":
         """Open a copy-on-write table (its current manifest snapshot) as a
-        read-optimized VectorTable."""
+        read-optimized VectorTable.  Runs no Spark job: the manifest names
+        the live files and carries the schema."""
         from minivectordb_spark.durable import DurableVectorTable
 
-        d = DurableVectorTable.load(spark, path)
-        df = d.to_df()
-        dim_row = df.select(F.size("embedding").alias("d")).limit(1).collect()
-        return cls(spark, df, dim=dim_row[0]["d"] if dim_row else None)
+        return cls(spark, DurableVectorTable.load(spark, path).to_df())
 
     # ---------------- mutation surface ----------------
 
@@ -327,15 +337,14 @@ class VectorTable:
                 raise ValueError(f"Embedding dimension mismatch: expected {dim}, got {len(v)}")
 
         # uniqueness vs the existing table: one broadcast semi-join per batch
-        if self.df is not None and not self._is_empty():
-            clash = (
-                self.df.select("id")
-                .join(F.broadcast(self.spark.createDataFrame([(i,) for i in ids], ["id"])), "id", "left_semi")
-                .limit(1)
-                .count()
-            )
-            if clash:
-                raise ValueError("Unique ID already exists.")
+        clash = (
+            self.df.select("id")
+            .join(F.broadcast(self.spark.createDataFrame([(i,) for i in ids], ["id"])), "id", "left_semi")
+            .limit(1)
+            .count()
+        )
+        if clash:
+            raise ValueError("Unique ID already exists.")
 
         rows = []
         for uid, vec, md in zip(ids, vecs, metadata_dicts):
@@ -366,7 +375,7 @@ class VectorTable:
         found = self.df.join(ids_df, "id", "left_semi").select("id").distinct().count()
         if found != len(set(ids)):
             raise ValueError("Unique ID does not exist.")
-        return VectorTable(self.spark, self.df.join(ids_df, "id", "left_anti"), dim=self.dim)
+        return VectorTable(self.spark, self.df.join(ids_df, "id", "left_anti"), dim=self._dim)
 
     # ---------------- lookup / query surface ----------------
 
@@ -399,9 +408,11 @@ class VectorTable:
         form, SURVEY.md §2.3 op 20); ``distances=True`` returns 1 - sim
         ascending instead (the usearch variant's contract,
         sharded_vector_database_usearch.py:629-637) with the sign-flipped
-        autocut (autocut_distances)."""
-        if self._is_empty():
-            return [], [], []
+        autocut (autocut_distances).
+
+        One Spark job: the filtered top-k ``collect``.  An empty or fully
+        filtered table needs no probe first; the top-k is then empty and
+        the call returns ``([], [], [])``."""
         pred = compile_filters(metadata_filter, exclude_filter, or_filters, TypedMapResolver())
         # score the stored unit vectors (embedding_norm) — the write-once
         # normalization means search does one dot per row, no norm fold
@@ -411,8 +422,6 @@ class VectorTable:
             pred=pred, prenormalized=True,
         )
         rows = result.collect()
-        if not rows:
-            return [], [], []
         ids = [r["id"] for r in rows]
         scores = [float(r["score"]) for r in rows]
         metas = [_reassemble_metadata(r) for r in rows]
@@ -445,8 +454,6 @@ class VectorTable:
         order."""
         from minivectordb_spark.scoring import knn_batch
 
-        if self._is_empty():
-            return [([], [], []) for _ in embeddings]
         pred = compile_filters(metadata_filter, exclude_filter, or_filters, TypedMapResolver())
         queries_df = self.spark.createDataFrame(
             [(i, [float(x) for x in e]) for i, e in enumerate(embeddings)],
@@ -500,8 +507,3 @@ class VectorTable:
         if path is None:
             raise ValueError("persist_to_disk requires a path (Parquet directory)")
         self.save(path, max_records_per_file=max_records_per_file)
-
-    # ---------------- internals ----------------
-
-    def _is_empty(self) -> bool:
-        return self.df.limit(1).count() == 0

@@ -492,3 +492,108 @@ def test_mmr_matches_independent_python(spark):
     out = mmr_rerank(df, q, k=k, lam=0.7, pool=12).collect()
     got = [r["id"] for r in sorted(out, key=lambda r: r["rank"])]
     assert got == want
+
+
+# --- query vectors as SQL text: exact literals, few py4j round trips -------
+
+
+def _left_fold(xs, ys):
+    import numpy as np
+
+    acc = np.float64(0.0)
+    for a, b in zip(xs, ys):
+        acc = acc + np.float64(a) * np.float64(b)
+    return acc
+
+
+def _bits(x) -> bytes:
+    import math
+    import struct
+
+    # every NaN compares as one value: the fold's NaN payload is not part
+    # of the contract
+    return b"nan" if math.isnan(x) else struct.pack("<d", x)
+
+
+@pytest.mark.parametrize("dim", [64, 384, 1024])
+def test_query_literals_score_bit_exact(spark, dim):
+    """knn and cosine_sim scores equal a NumPy left fold in double, bit for
+    bit, for query components that stress the SQL literal text: -0.0, the
+    smallest subnormal, the largest finite double, NaN and +/-inf.  The
+    embedding column name carries a backtick."""
+    import math
+
+    import numpy as np
+
+    from minivectordb_spark.scoring import cosine_sim, knn, l2_normalize
+
+    rng = np.random.default_rng(dim)
+    corpus = rng.standard_normal((6, dim)).astype(np.float32)
+    col = "e`mb"
+    df = spark.createDataFrame(
+        [(f"r{i}", [float(x) for x in v]) for i, v in enumerate(corpus)],
+        f"id string, `{col.replace('`', '``')}` array<float>",
+    )
+    base = [float(x) for x in rng.standard_normal(dim)]
+    base[1], base[2], base[3] = -0.0, 5e-324, -5e-324
+    queries = [base]
+    for special in (1.7976931348623157e308, 1.8e308, float("nan"), float("inf"), float("-inf")):
+        q = list(base)
+        q[dim // 2] = special
+        queries.append(q)
+
+    with np.errstate(all="ignore"):
+        for q in queries:
+            qn = math.sqrt(sum(x * x for x in q))
+            unit = l2_normalize(q)
+            want_cos = {
+                f"r{i}": _left_fold(v, q) / (np.sqrt(_left_fold(v, v)) * np.float64(qn))
+                for i, v in enumerate(corpus)
+            }
+            want_dot = {f"r{i}": _left_fold(v, unit) for i, v in enumerate(corpus)}
+            got_cos = {
+                r["id"]: r["s"] for r in df.select("id", cosine_sim(col, q).alias("s")).collect()
+            }
+            got_knn = {
+                r["id"]: r["score"]
+                for r in knn(df, q, k=len(corpus), emb_col=col, prenormalized=True).collect()
+            }
+            assert {k: _bits(v) for k, v in got_cos.items()} == {k: _bits(v) for k, v in want_cos.items()}
+            assert {k: _bits(v) for k, v in got_knn.items()} == {k: _bits(v) for k, v in want_dot.items()}
+
+
+def _py4j_calls(spark, monkeypatch, build):
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(command, *args, **kwargs):
+        # py4j's "m d" commands release Java objects whose Python proxies
+        # were garbage-collected; when they run is up to the Python GC,
+        # not the code under test
+        if not command.startswith("m\nd\n"):
+            calls.append(1)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    try:
+        build()
+    finally:
+        monkeypatch.setattr(client, "send_command", send)
+    return len(calls)
+
+
+def test_query_expressions_take_few_py4j_round_trips(spark, monkeypatch):
+    """A query vector becomes one SQL string, so building a search plan
+    costs a constant number of py4j round trips, not a few per vector
+    component (a per-element literal array took 1,699 at dim 384)."""
+    import numpy as np
+
+    from minivectordb_spark.operators.ann import _assignment_struct
+    from minivectordb_spark.scoring import knn
+
+    df = spark.createDataFrame([("a", [1.0] * 384)], "id string, embedding array<float>")
+    q = [float(x) for x in np.random.default_rng(0).standard_normal(384)]
+    assert _py4j_calls(spark, monkeypatch, lambda: knn(df, q, k=5)) < 50
+    cents = [(c, [float(x) for x in np.random.default_rng(c).standard_normal(64)]) for c in range(16)]
+    assert _py4j_calls(spark, monkeypatch, lambda: _assignment_struct("embedding", cents, "__n")) < 50

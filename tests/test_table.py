@@ -220,3 +220,44 @@ def test_save_cluster_by_roundtrip(spark, tmp_path):
     assert t2.count() == 40
     ids, _, _ = t2.find_most_similar([1.0, 0.0], metadata_filter={"type": "t2"}, k=50)
     assert len(ids) == 10
+
+
+def _jobs_in(spark, group, fn):
+    """Run ``fn`` under its own job group; return (result, Spark jobs run)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_durable_open_and_search_job_counts(spark, tmp_path):
+    """Opening a durable table runs no Spark job, a search runs exactly
+    one (the top-k collect), and ``dim`` is probed once, on first read."""
+    root = str(tmp_path / "jobs")
+    VectorTable.empty(spark).store_embeddings_batch(
+        [f"id{i}" for i in range(12)], [[float(i), 1.0] for i in range(12)]
+    ).save_durable(root, n_buckets=4)
+    vt, n_open = _jobs_in(spark, "vt-open", lambda: VectorTable.load_durable(spark, root))
+    assert n_open == 0
+    (ids, _, _), n_search = _jobs_in(spark, "vt-search", lambda: vt.find_most_similar([1.0, 0.0], k=3))
+    assert n_search == 1 and ids == ["id11", "id10", "id9"]
+    dim, n_dim = _jobs_in(spark, "vt-dim", lambda: (vt.dim, vt.dim))
+    assert dim == (2, 2) and n_dim == 1
+
+
+def test_empty_results_without_probe(spark):
+    """No emptiness probe runs before a search: an empty table and a
+    filter that matches nothing both come back as empty triples."""
+    empty = VectorTable.empty(spark)
+    assert empty.find_most_similar([1.0, 0.0], k=3) == ([], [], [])
+    assert empty.find_most_similar_batch([[1.0, 0.0], [0.0, 1.0]], k=3) == [([], [], [])] * 2
+    t = empty.store_embeddings_batch(["a", "b"], [[1.0, 0.0], [0.0, 1.0]], [{"g": "x"}, {"g": "x"}])
+    assert t.count() == 2
+    none = {"g": "nope"}
+    assert t.find_most_similar([1.0, 0.0], metadata_filter=none, k=3) == ([], [], [])
+    assert t.find_most_similar_batch([[1.0, 0.0]] * 3, metadata_filter=none, k=3) == [([], [], [])] * 3
+    with pytest.raises(ValueError, match="already exists"):
+        empty.store_embeddings_batch(["c", "c"], [[1.0, 0.0], [0.0, 1.0]])
