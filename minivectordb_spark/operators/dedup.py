@@ -22,6 +22,7 @@ DuckDB oracle reproduces every value bit-for-bit.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -140,6 +141,7 @@ def _shingle_frame(
 
 from minivectordb_spark.plans.width import ensure_parallelism as _parallel
 from minivectordb_spark.plans.width import verify_repartition
+from minivectordb_spark.operators.util import collect_small_graph
 from minivectordb_spark.operators.util import materialize as _barrier
 from minivectordb_spark.operators.util import run_concurrent
 
@@ -852,7 +854,6 @@ def connected_components(
     id_b: str = "id_b",
     max_iter: int = 15,
     hot_degree: int = 100_000,
-    collect_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Resolve duplicate-pair edges into groups: (id, component) where
     ``component`` is the minimum id reachable from ``id`` — the step that
@@ -883,49 +884,23 @@ def connected_components(
     algorithm's.
     """
     edges_fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = (
-        edges_fwd.union(
-            edges_fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .cache()
-    )
-    # Size gate: the PAIR set after any of the bucketed pair operators is
-    # orders of magnitude smaller than the corpus (it lists near-dups, not
-    # rows), and below ``collect_threshold`` edges (default 1M directed
-    # edges ~ 32 MB of longs) a driver-side union-find with path
+    edges = edges_fwd.union(
+        edges_fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).distinct()
+    # Small-graph gate (shared with graph.pagerank): the PAIR set after
+    # any of the bucketed pair operators is orders of magnitude smaller
+    # than the corpus (it lists near-dups, not rows), and at or under
+    # util.SMALL_GRAPH_MAX_EDGES a driver-side union-find with path
     # compression beats 3-8 distributed rounds of join+groupBy+checkpoint
-    # job overhead outright.  Same constant-bounded-collect class as the
-    # BM25 stats rows or the K-centroid collect: the threshold bounds the
-    # driver transfer regardless of corpus size.  Above the gate —
-    # billions of near-dup edges at 100 TB — the distributed min-label
-    # loop below runs unchanged (the unit suite pins it via
-    # collect_threshold=0).  Both paths produce component = min reachable
-    # id, verified equal in tests.
-    n_edges = edges.count()  # also materializes the cache for hot_dst
-    if n_edges <= collect_threshold:
-        rows = edges.collect()
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
-
-        for r in rows:
-            a, b = find(r["src"]), find(r["dst"])
-            if a != b:
-                # union by min so every root IS its component's min id
-                lo, hi = (a, b) if a < b else (b, a)
-                parent[hi] = lo
-        out = [(x, find(x)) for x in {v for r in rows for v in (r["src"], r["dst"])}]
+    # job overhead outright.  Above the gate — billions of near-dup edges
+    # at 100 TB — the distributed min-label loop below runs unchanged.
+    # Both paths produce component = min reachable id, verified equal in
+    # tests.
+    edges, _, small = collect_small_graph(edges)
+    if small is not None:
         edges.unpersist()
-        id_type = pairs.schema[id_a].dataType.simpleString()
-        return pairs.sparkSession.createDataFrame(
-            out, f"id {id_type}, component {id_type}"
+        return _components_on_driver(
+            pairs.sparkSession, small, edges.schema["src"].dataType.simpleString()
         )
     hot_dst = (
         edges.groupBy("dst")
@@ -1015,6 +990,36 @@ def connected_components(
     _unpersist_cc(edges, hot_dst, edges_hot if has_hot else None,
                   edges_cold if has_hot else None)
     return labels
+
+
+def _components_on_driver(spark, edges: pa.Table, id_type: str) -> DataFrame:
+    """``connected_components`` over a collected symmetric edge table:
+    union-find with path compression, union by min id so every root IS
+    its component's min id."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != x:
+            parent[x], x = root, parent[x]
+        return root
+
+    src = edges["src"].to_pylist()
+    for a, b in zip(src, edges["dst"].to_pylist()):
+        a, b = find(a), find(b)
+        if a != b:
+            lo, hi = (a, b) if a < b else (b, a)
+            parent[hi] = lo
+    # the edge list is symmetric, so every node appears as a src
+    ids = list(set(src))
+    t = edges.schema.field("src").type
+    out = pa.table({
+        "id": pa.array(ids, t),
+        "component": pa.array([find(x) for x in ids], t),
+    })
+    return spark.createDataFrame(out, f"id {id_type}, component {id_type}")
 
 
 def _unpersist_cc(*frames) -> None:

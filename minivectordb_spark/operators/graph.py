@@ -1,4 +1,5 @@
-"""Link-graph analytics: PageRank as a DataFrame power iteration.
+"""Link-graph analytics: PageRank, triangle counts, k-core and label
+propagation over DataFrame edge lists.
 
 The reference engine has no graph surface (its nearest neighbor is the
 duplicate-pair resolution this repo already generalizes in
@@ -11,49 +12,80 @@ Engine-exactness: ranks are carried as **integer micro-units** (a total
 mass of ``total_micros`` split across nodes) and every division is an
 integer division on nonnegative operands — no float ever carries a
 quotient, so a DuckDB twin that unrolls the same recurrence (see
-``__spark_entry__.py``) reproduces the ranks bit-for-bit at any scale.
-The float-division formulation would drift ulps per iteration and across
-libms; this one cannot.
+``__spark_entry__.py``) reproduces the ranks bit-for-bit at any scale,
+and so does the NumPy driver path below.  The float-division
+formulation would drift ulps per iteration and across libms; this one
+cannot.
 
-Scale design (100 TB / billions of edges):
+PageRank has two paths behind one small-graph gate, shared with
+``connected_components`` (``operators.util.collect_small_graph``): the
+gate counts the distinct edges and, at or under
+``util.SMALL_GRAPH_MAX_EDGES``, collects them as one Arrow table.  Both
+paths return identical rows.
 
-- Per iteration exactly TWO distributed steps: one equi-join of the edge
-  list with the current rank frame on ``src`` (edges are repartitioned by
-  ``src`` ONCE and cached, so every iteration's join reuses that layout
-  and only the tiny rank frame moves), and one ``groupBy(dst).sum`` whose
-  partial aggregation reduces each map partition to one row per distinct
-  ``dst`` before the exchange — a mega-hub destination (the skew case)
-  receives pre-combined partials, never the raw edge stream.
-- ``localCheckpoint`` truncates lineage every iteration so round N's plan
-  does not embed rounds 1..N-1 (the classic iterative-Spark trap; same
-  discipline as ``connected_components`` and the BPE loop).  Checkpoints
-  are LAZY: the caller's single action executes all rounds in sequence —
-  the loop itself launches no jobs.
-- The dangling-mass term is a one-row aggregate broadcast-crossed into
-  the rank update — it stays inside the plan; the only driver-side
-  scalar in the whole operator is the upfront node count.
+- Driver path (at or under the limit): node ids become dense indices and
+  the recurrence runs in NumPy int64 with an exact integer scatter-add.
+  The whole operator is the gate's two jobs plus the caller's action on
+  a local table; the distributed loop pays ~10 jobs and a checkpoint
+  barrier per round, which on a small graph is its whole wall.
+- Distributed path (above the limit; the only one that runs a graph
+  larger than driver memory, 100 TB / billions of edges):
+
+  - Per iteration exactly TWO distributed steps: one equi-join of the
+    edge list with the current rank frame on ``src`` (edges are
+    repartitioned by ``src`` ONCE and cached, so every iteration's join
+    reuses that layout and only the tiny rank frame moves), and one
+    ``groupBy(dst).sum`` whose partial aggregation reduces each map
+    partition to one row per distinct ``dst`` before the exchange — a
+    mega-hub destination (the skew case) receives pre-combined partials,
+    never the raw edge stream.
+  - An EAGER ``localCheckpoint`` before every second round truncates
+    lineage, so no round's plan embeds more than two rounds (the classic
+    iterative-Spark trap; same discipline as ``connected_components``
+    and the BPE loop).  Each checkpoint is a materialization job and a
+    driver barrier; the rounds after the last one are returned lazy and
+    run in the caller's action.
+  - The dangling-mass term is a one-row aggregate broadcast-crossed into
+    the rank update — it stays inside the plan; the only driver-side
+    scalars are the gate's edge count and the node count.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
+from minivectordb_spark.operators import util
 from minivectordb_spark.operators.dedup import _reused
 from minivectordb_spark.plans import width
+from minivectordb_spark.scoring import sql_name
+
+_LONG_MAX = (1 << 63) - 1
+
+
+def _edge_frame(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The distinct ``(src, dst)`` pairs with no null endpoint, both
+    columns cast to the node-id type: the common type of the two input
+    columns, as Spark resolves ``coalesce(src, dst)``."""
+    s, d = sql_name(src), sql_name(dst)
+    t = edges.selectExpr(f"coalesce({s}, {d})").schema[0].dataType.simpleString()
+    return (
+        edges.selectExpr(f"CAST({s} AS {t}) AS src", f"CAST({d} AS {t}) AS dst")
+        .where("src IS NOT NULL AND dst IS NOT NULL")
+        .distinct()
+    )
 
 
 def pagerank_diagnostics(
     edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> dict:
     """Falsifiable scale counters for a pagerank input (the
-    scaling-counter discipline: record what the plan actually moved).
-    Constant-size result: five scalars."""
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .cache()
-    )
-    n_edges = e.count()
+    scaling-counter discipline: record what the plan actually moved),
+    plus ``path``: the side of the small-graph gate ``pagerank`` takes
+    on this input (``"driver"`` or ``"distributed"``).  Constant-size
+    result: six scalars."""
+    e, n_edges, small = util.collect_small_graph(_edge_frame(edges, src, dst))
     nodes = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
@@ -77,7 +109,28 @@ def pagerank_diagnostics(
         "n_dangling": int(row["dang"]),
         "max_out_degree": int(row["mx_out"]),
         "max_in_degree": int(mx_in or 0),
+        "path": "driver" if small is not None else "distributed",
     }
+
+
+def _check_pagerank_args(iterations, total_micros, damping_pct) -> None:
+    """Reject, before any job runs, the arguments on which the two paths
+    could disagree: with a negative operand Spark's ``div`` truncates
+    while NumPy's ``//`` floors, and a long overflow raises mid-job under
+    ANSI Spark but wraps silently in NumPy.  The largest intermediate is
+    ``damping_pct * (inbound + dangling share)``, at most ``damping_pct
+    * 2 * total_micros``; ``total_micros`` itself must fit a long too."""
+    if not 0 <= damping_pct <= 100:
+        raise ValueError(f"damping_pct must be in [0, 100], got {damping_pct}")
+    if total_micros < 0:
+        raise ValueError(f"total_micros must be >= 0, got {total_micros}")
+    if iterations < 0:
+        raise ValueError(f"iterations must be >= 0, got {iterations}")
+    if max(damping_pct, 1) * 2 * total_micros > _LONG_MAX:
+        raise ValueError(
+            f"damping_pct * 2 * total_micros = {damping_pct * 2 * total_micros} "
+            "overflows a long; lower total_micros"
+        )
 
 
 def pagerank(
@@ -90,7 +143,8 @@ def pagerank(
 ) -> DataFrame:
     """Power-iteration PageRank over a directed edge list; returns
     ``(id, rank_micro)`` for every node that appears as a source or a
-    destination.
+    destination, ``id`` typed as the input ids.  Duplicate edges count
+    once; edges with a null endpoint are dropped.
 
     Recurrence (all integer, all operands nonnegative, ``div`` =
     truncating integer division == floor here)::
@@ -109,25 +163,34 @@ def pagerank(
 
     ``iterations`` is fixed rather than convergence-tested so the DuckDB
     twin can unroll it; rank movement between the last two iterations is
-    the caller's convergence probe if one is needed.
+    the caller's convergence probe if one is needed.  ``ValueError``
+    (before any job) for ``damping_pct`` outside [0, 100], a negative
+    ``total_micros`` or ``iterations``, or a ``total_micros`` whose
+    products overflow a long.
+
+    At or under ``util.SMALL_GRAPH_MAX_EDGES`` distinct edges the
+    recurrence runs on the driver over the collected edge list and the
+    result is a local table; above it, as a distributed loop whose last
+    rounds stay lazy (see the module docstring).  The rows are identical.
     """
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .repartition("src")
-        .cache()
-    )
+    _check_pagerank_args(iterations, total_micros, damping_pct)
+    d, n_edges, small = util.collect_small_graph(_edge_frame(edges, src, dst))
+    spark = edges.sparkSession
+    if small is not None:
+        d.unpersist()
+        return _pagerank_driver(
+            spark, small, d.schema["src"].dataType.simpleString(),
+            iterations, total_micros, damping_pct,
+        )
+    e = d.repartition("src").cache()
     nodes = (
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
         .cache()
     )
-    n = nodes.count()
-    if n == 0:
-        e.unpersist()
-        nodes.unpersist()
-        return edges.sparkSession.createDataFrame([], "id long, rank_micro long")
+    n = nodes.count()  # fills e's cache, after which d's is unused
+    d.unpersist()
     base = total_micros // n
     teleport = ((100 - damping_pct) * base) // 100
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__odeg"))
@@ -139,8 +202,6 @@ def pagerank(
     # (one when ``iterations`` is odd, two when even) bind at the
     # caller's action, at the session setting, preserving the
     # .explain/lineage contract below.
-    n_edges = e.count()
-    spark = edges.sparkSession
     p = width.iteration_width(spark, n_edges)
     with width.shuffle_scope(spark, p):
         # (src, dst, __odeg) is loop-invariant: join it once, keep it
@@ -155,6 +216,37 @@ def pagerank(
             ranks, nodes, ew, outdeg, iterations, n, teleport, damping_pct
         )
     return ranks
+
+
+def _pagerank_driver(spark, edges: pa.Table, id_type: str, iterations,
+                     total_micros, damping_pct) -> DataFrame:
+    """``pagerank``'s recurrence over a collected edge table, in NumPy:
+    ids become dense indices, every operand is int64 and nonnegative (so
+    ``//`` is Spark's ``div``), and inbound sums use an exact integer
+    scatter-add, never float weights."""
+    schema = f"id {id_type}, rank_micro long"
+    m = edges.num_rows
+    if m == 0:
+        return spark.createDataFrame([], schema)
+    codes = pa.concat_arrays(
+        edges["src"].chunks + edges["dst"].chunks
+    ).dictionary_encode()
+    idx = codes.indices.to_numpy().astype(np.int64)
+    s, d = idx[:m], idx[m:]
+    n = len(codes.dictionary)
+    odeg = np.bincount(s, minlength=n)
+    dangling = odeg == 0
+    base = total_micros // n
+    teleport = ((100 - damping_pct) * base) // 100
+    r = np.full(n, base, dtype=np.int64)
+    for _ in range(iterations):
+        dm = r[dangling].sum() // n
+        inb = np.zeros(n, dtype=np.int64)
+        np.add.at(inb, d, r[s] // odeg[s])
+        r = teleport + (damping_pct * (inb + dm)) // 100
+    return spark.createDataFrame(
+        pa.table({"id": codes.dictionary, "rank_micro": r}), schema
+    )
 
 
 def _pagerank_rounds(

@@ -11,10 +11,12 @@ these tiny graphs, checked much tighter below).
 """
 
 import datetime
+import random
 
 import pytest
 from pyspark.sql import functions as F
 
+from minivectordb_spark.operators import util
 from minivectordb_spark.operators.graph import pagerank, pagerank_diagnostics
 from minivectordb_spark.operators.linkage import (
     blocked_best_match,
@@ -42,67 +44,166 @@ def _ranks(df):
 # pagerank
 # ---------------------------------------------------------------------------
 
-def test_pagerank_two_node_cycle_symmetric(spark):
-    r = _ranks(pagerank(_edges(spark, [(1, 2), (2, 1)]), iterations=4))
-    assert set(r) == {1, 2}
-    assert r[1] == r[2]
-    # symmetric 2-cycle is a fixpoint at uniform mass: rank stays ~N/2
-    assert abs(r[1] - TOTAL // 2) <= 4  # <= 1 micro floor loss per round
+def test_pagerank_two_node_cycle_symmetric(spark, graph_paths):
+    for _ in graph_paths:
+        r = _ranks(pagerank(_edges(spark, [(1, 2), (2, 1)]), iterations=4))
+        assert set(r) == {1, 2}
+        assert r[1] == r[2]
+        # symmetric 2-cycle is a fixpoint at uniform mass: rank stays ~N/2
+        assert abs(r[1] - TOTAL // 2) <= 4  # <= 1 micro floor loss per round
 
 
-def test_pagerank_dangling_mass_redistributed(spark):
-    # 1 -> 2, 2 dangling.  Without the dangling term node 2's mass would
-    # leak out of the system each round; with it, total mass stays ~TOTAL.
-    out = pagerank(_edges(spark, [(1, 2)]), iterations=5)
-    r = _ranks(out)
-    total = sum(r.values())
-    assert abs(total - TOTAL) < 1_000  # floors shed < 1 micro per term per round
-    assert r[2] > r[1]  # 2 receives 1's full contribution plus teleport
+def test_pagerank_dangling_mass_redistributed(spark, graph_paths):
+    for _ in graph_paths:
+        # 1 -> 2, 2 dangling.  Without the dangling term node 2's mass would
+        # leak out of the system each round; with it, total mass stays ~TOTAL.
+        out = pagerank(_edges(spark, [(1, 2)]), iterations=5)
+        r = _ranks(out)
+        total = sum(r.values())
+        assert abs(total - TOTAL) < 1_000  # floors shed < 1 micro per term per round
+        assert r[2] > r[1]  # 2 receives 1's full contribution plus teleport
 
 
-def test_pagerank_matches_float_power_iteration(spark):
-    edges = [(1, 2), (1, 3), (2, 3), (3, 1), (4, 3), (4, 1), (5, 4)]
-    iters = 5
-    got = _ranks(pagerank(_edges(spark, edges), iterations=iters))
+def test_pagerank_matches_float_power_iteration(spark, graph_paths):
+    for _ in graph_paths:
+        edges = [(1, 2), (1, 3), (2, 3), (3, 1), (4, 3), (4, 1), (5, 4)]
+        iters = 5
+        got = _ranks(pagerank(_edges(spark, edges), iterations=iters))
 
-    # independent float oracle: textbook damped PageRank, same fixed
-    # iteration count, uniform dangling redistribution
-    nodes = sorted({n for e in edges for n in e})
-    n = len(nodes)
-    outdeg = {}
-    for s, _ in edges:
-        outdeg[s] = outdeg.get(s, 0) + 1
-    rank = {u: 1.0 / n for u in nodes}
-    for _ in range(iters):
-        dang = sum(rank[u] for u in nodes if u not in outdeg)
-        inb = {u: 0.0 for u in nodes}
-        for s, d in edges:
-            inb[d] += rank[s] / outdeg[s]
-        rank = {
-            u: 0.15 / n + 0.85 * (inb[u] + dang / n) for u in nodes
-        }
-    for u in nodes:
-        # integer recurrence floors at each of ~3 terms per round; on a
-        # 5-node graph drift stays far below 1e-6 of total mass per node
-        assert got[u] / TOTAL == pytest.approx(rank[u], abs=1e-6)
-    # ordering identical
-    assert sorted(nodes, key=lambda u: (got[u], u)) == sorted(
-        nodes, key=lambda u: (rank[u], u)
+        # independent float oracle: textbook damped PageRank, same fixed
+        # iteration count, uniform dangling redistribution
+        nodes = sorted({n for e in edges for n in e})
+        n = len(nodes)
+        outdeg = {}
+        for s, _ in edges:
+            outdeg[s] = outdeg.get(s, 0) + 1
+        rank = {u: 1.0 / n for u in nodes}
+        for _ in range(iters):
+            dang = sum(rank[u] for u in nodes if u not in outdeg)
+            inb = {u: 0.0 for u in nodes}
+            for s, d in edges:
+                inb[d] += rank[s] / outdeg[s]
+            rank = {
+                u: 0.15 / n + 0.85 * (inb[u] + dang / n) for u in nodes
+            }
+        for u in nodes:
+            # integer recurrence floors at each of ~3 terms per round; on a
+            # 5-node graph drift stays far below 1e-6 of total mass per node
+            assert got[u] / TOTAL == pytest.approx(rank[u], abs=1e-6)
+        # ordering identical
+        assert sorted(nodes, key=lambda u: (got[u], u)) == sorted(
+            nodes, key=lambda u: (rank[u], u)
+        )
+
+
+def test_pagerank_deterministic_and_duplicate_edges_collapse(spark, graph_paths):
+    for _ in graph_paths:
+        e1 = _edges(spark, [(1, 2), (2, 3), (3, 1)])
+        e2 = _edges(spark, [(1, 2), (1, 2), (2, 3), (3, 1), (3, 1)])
+        assert _ranks(pagerank(e1, iterations=3)) == _ranks(
+            pagerank(e2, iterations=3)
+        )
+
+
+def test_pagerank_empty_graph(spark, graph_paths):
+    for _ in graph_paths:
+        out = pagerank(_edges(spark, []), iterations=3)
+        assert out.count() == 0
+        assert [f.name for f in out.schema.fields] == ["id", "rank_micro"]
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_pagerank_paths_identical_on_random_graph(spark, graph_paths, id_type):
+    """Both paths of the small-graph gate return identical rows and the
+    same schema, ``id`` typed as the input, on a seeded random multigraph
+    with duplicate edges, self-loops and dangling sinks."""
+    rng = random.Random(17)
+    pairs = [(rng.randrange(40), rng.randrange(40)) for _ in range(150)]
+    pairs += pairs[:25]  # duplicate edges
+    pairs += [(i, i) for i in range(0, 40, 6)]  # self-loops
+    pairs += [(rng.randrange(40), 40 + i) for i in range(8)]  # sinks
+    conv = str if id_type == "string" else int
+    edges = spark.createDataFrame(
+        [(conv(a), conv(b)) for a, b in pairs], f"src {id_type}, dst {id_type}"
     )
+    spark_type = {"long": "bigint", "string": "string"}[id_type]
+    for iterations in (3, 10):
+        got = {}
+        for path in graph_paths:
+            out = pagerank(edges, iterations=iterations)
+            got[path] = (out.schema.simpleString(), sorted(map(tuple, out.collect())))
+        assert got["driver"] == got["distributed"]
+        assert got["driver"][0] == f"struct<id:{spark_type},rank_micro:bigint>"
+        assert len(got["driver"][1]) == 48
 
 
-def test_pagerank_deterministic_and_duplicate_edges_collapse(spark):
-    e1 = _edges(spark, [(1, 2), (2, 3), (3, 1)])
-    e2 = _edges(spark, [(1, 2), (1, 2), (2, 3), (3, 1), (3, 1)])
-    assert _ranks(pagerank(e1, iterations=3)) == _ranks(
-        pagerank(e2, iterations=3)
+LONG_MAX = (1 << 63) - 1
+
+
+def _rejected_before_any_job(spark, graph_paths, **kwargs):
+    """``pagerank(**kwargs)`` raises ValueError on both paths without
+    running a Spark job."""
+    sc = spark.sparkContext
+    edges = _edges(spark, [(1, 2), (2, 1)])
+    for path in graph_paths:
+        group = f"pagerank-args-{sorted(kwargs.items())}-{path}"
+        sc.setJobGroup(group, group)
+        try:
+            with pytest.raises(ValueError):
+                pagerank(edges, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], path
+
+
+def test_pagerank_rejects_damping_outside_percent(spark, graph_paths):
+    _rejected_before_any_job(spark, graph_paths, damping_pct=-1)
+    _rejected_before_any_job(spark, graph_paths, damping_pct=101)
+
+
+def test_pagerank_rejects_negative_total(spark, graph_paths):
+    _rejected_before_any_job(spark, graph_paths, total_micros=-1)
+
+
+def test_pagerank_rejects_negative_iterations(spark, graph_paths):
+    _rejected_before_any_job(spark, graph_paths, iterations=-1)
+
+
+def test_pagerank_rejects_long_overflow(spark, graph_paths):
+    """damping_pct * 2 * total_micros must fit a long; the largest total
+    that does runs, and both paths agree on it."""
+    _rejected_before_any_job(
+        spark, graph_paths, damping_pct=85, total_micros=LONG_MAX // 170 + 1
     )
+    edges = _edges(spark, [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1)])
+    got = {
+        path: _ranks(pagerank(edges, total_micros=LONG_MAX // 170))
+        for path in graph_paths
+    }
+    assert got["driver"] == got["distributed"]
 
 
-def test_pagerank_empty_graph(spark):
-    out = pagerank(_edges(spark, []), iterations=3)
-    assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == ["id", "rank_micro"]
+def test_small_graph_gate_concurrent_callers_restore_aqe(spark):
+    """Concurrent gates (more threads than cores) each count and collect
+    their own graph, and afterwards the session's AQE setting is back to
+    its value: no gate restores the "false" another one set."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    frames = [_edges(spark, [(i, j) for j in range(i + 1)]) for i in range(8)]
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futs = [pool.submit(util.collect_small_graph, f) for f in frames]
+            got = [f.result(timeout=120) for f in futs]
+    finally:
+        sys.setswitchinterval(interval)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == prev == "true"
+    for cached, _, _ in got:
+        cached.unpersist()
+    assert [(n, t.num_rows) for _, n, t in got] == [(i + 1, i + 1) for i in range(8)]
 
 
 # ---------------------------------------------------------------------------
@@ -229,17 +330,19 @@ def test_linkage_equidistant_ties_pick_min_right_id(spark):
     assert len(best) == 1 and best[0]["rid"] == 20  # both dist 1 -> min rid
 
 
-def test_pagerank_diagnostics_counters(spark):
+def test_pagerank_diagnostics_counters(spark, graph_paths):
     # 1->2, 1->3, 3->1; 2 dangling; in-degree max at 1 (from 3) and 3? no:
     # dst counts: 2<-1, 3<-1, 1<-1 — all in-degree 1; out: 1 has 2
-    d = pagerank_diagnostics(_edges(spark, [(1, 2), (1, 3), (3, 1), (1, 2)]))
-    assert d == {
-        "n_nodes": 3,
-        "n_edges": 3,  # duplicate (1,2) collapses
-        "n_dangling": 1,  # node 2
-        "max_out_degree": 2,  # node 1
-        "max_in_degree": 1,
-    }
+    for path in graph_paths:
+        d = pagerank_diagnostics(_edges(spark, [(1, 2), (1, 3), (3, 1), (1, 2)]))
+        assert d == {
+            "n_nodes": 3,
+            "n_edges": 3,  # duplicate (1,2) collapses
+            "n_dangling": 1,  # node 2
+            "max_out_degree": 2,  # node 1
+            "max_in_degree": 1,
+            "path": path,  # the gate's decision, as pagerank takes it
+        }
 
 
 def test_linkage_diagnostics_counts_block_products(spark):

@@ -271,47 +271,49 @@ def test_neardup_lsh_blocking_vs_bruteforce(spark):
         assert brute[p] == c
 
 
-@pytest.mark.parametrize("collect_threshold", [0, 1_000_000])
-def test_connected_components_chain_and_clique(spark, collect_threshold):
+@pytest.mark.parametrize("max_edges", [0, 1_000_000])
+def test_connected_components_chain_and_clique(spark, monkeypatch, max_edges):
     """A 5-node chain (worst-case diameter) and a separate triangle must
     both collapse to their min id; disconnected nodes absent from pairs.
-    Parametrized over BOTH paths: the distributed min-label loop
-    (collect_threshold=0) and the size-gated driver union-find."""
+    Parametrized over BOTH paths of the small-graph gate
+    (``util.SMALL_GRAPH_MAX_EDGES``): the distributed min-label loop
+    (max_edges=0) and the driver union-find (the default limit)."""
+    from minivectordb_spark.operators import util
     from minivectordb_spark.operators.dedup import connected_components
 
+    monkeypatch.setattr(util, "SMALL_GRAPH_MAX_EDGES", max_edges)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12)],
         ["id_a", "id_b"],
     )
     got = {
         r["id"]: r["component"]
-        for r in connected_components(
-            pairs, collect_threshold=collect_threshold
-        ).collect()
+        for r in connected_components(pairs).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 12: 10}
 
 
-def test_connected_components_empty(spark):
+def test_connected_components_empty(spark, graph_paths):
     from minivectordb_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame([], "id_a long, id_b long")
-    assert connected_components(pairs).count() == 0
-    assert connected_components(pairs, collect_threshold=0).count() == 0
+    for _ in graph_paths:
+        assert connected_components(pairs).count() == 0
 
 
-def test_connected_components_star_hot_path(spark):
+def test_connected_components_star_hot_path(spark, graph_paths):
     """10k-node star (VERDICT r3 item 9): the hub's degree exceeds
     hot_degree, so its label lookups take the broadcast path — edges for
     the hot destination never shuffle — and the result is identical to
     the unsplit algorithm: every spoke collapses to the hub's min id."""
     from minivectordb_spark.operators.dedup import connected_components
 
+    graph_paths.force("distributed")
     n = 10_000
     pairs = spark.range(1, n).select(
         F.lit(0).alias("id_a"), F.col("id").alias("id_b")
     )
-    out = connected_components(pairs, hot_degree=100, collect_threshold=0)
+    out = connected_components(pairs, hot_degree=100)
     assert out.count() == n
     assert out.agg(F.max("component"), F.min("component")).collect()[0] == (0, 0)
     # plus a mixed graph: one hot star + one cold triangle in the same call
@@ -323,19 +325,18 @@ def test_connected_components_star_hot_path(spark):
     )
     got = {
         r["id"]: r["component"]
-        for r in connected_components(
-            mixed, hot_degree=100, collect_threshold=0
-        ).collect()
+        for r in connected_components(mixed, hot_degree=100).collect()
         if r["id"] >= 20_000
     }
     assert got == {20_000: 20_000, 20_001: 20_000, 20_002: 20_000}
 
 
-def test_connected_components_hot_split_plan(spark):
+def test_connected_components_hot_split_plan(spark, graph_paths):
     """The hot-destination label lookup must compile to a broadcast join
     (no Exchange of the hot edge rows on dst)."""
     from minivectordb_spark.operators.dedup import connected_components
 
+    graph_paths.force("distributed")
     n = 2_000
     pairs = spark.range(1, n).select(
         F.lit(0).alias("id_a"), F.col("id").alias("id_b")
@@ -343,8 +344,8 @@ def test_connected_components_hot_split_plan(spark):
     # behavioral proxy for "no hot partition": with hot_degree above the
     # hub degree the guard is off; below it the guard is on — both must
     # agree exactly, proving the split changes the plan, not the answer
-    on = connected_components(pairs, hot_degree=100, collect_threshold=0).collect()
-    off = connected_components(pairs, hot_degree=10**9, collect_threshold=0).collect()
+    on = connected_components(pairs, hot_degree=100).collect()
+    off = connected_components(pairs, hot_degree=10**9).collect()
     assert sorted(map(tuple, on)) == sorted(map(tuple, off))
 
 
@@ -1085,15 +1086,17 @@ def test_vocabulary_top_n_zero(spark):
     assert vocabulary(df, top_n=0).count() == 0
 
 
-def test_connected_components_nonconvergence_raises(spark):
+def test_connected_components_nonconvergence_raises(spark, graph_paths):
     from minivectordb_spark.operators.dedup import connected_components
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(8)], ["id_a", "id_b"]
     )
+    graph_paths.force("distributed")
     with pytest.raises(RuntimeError, match="converge"):
-        connected_components(chain, max_iter=1, collect_threshold=0)
+        connected_components(chain, max_iter=1)
     # with enough rounds the same chain resolves fine
+    graph_paths.force("driver")
     got = {r["id"]: r["component"] for r in connected_components(chain, max_iter=10).collect()}
     assert set(got.values()) == {0}
 
@@ -1554,20 +1557,21 @@ def test_semantic_dedup_cluster_cap_bounds_blocks(spark):
     assert len(dropped) >= 20
 
 
-def test_connected_components_long_chain(spark):
+def test_connected_components_long_chain(spark, graph_paths):
     """A 200-hop chain (the loose-threshold similarity-chain shape that
     defeats plain O(diameter) min-label propagation at max_iter=15) must
     converge via pointer jumping in O(log diameter) rounds and collapse
     to the chain head."""
     from minivectordb_spark.operators.dedup import connected_components
 
+    graph_paths.force("distributed")
     n = 200
     pairs = spark.range(n - 1).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
     )
     got = {
         r["id"]: r["component"]
-        for r in connected_components(pairs, collect_threshold=0).collect()
+        for r in connected_components(pairs).collect()
     }
     assert len(got) == n
     assert set(got.values()) == {0}
@@ -1773,7 +1777,7 @@ def test_dsir_plan_broadcast_ratio_table(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_connected_components_driver_matches_distributed(spark):
+def test_connected_components_driver_matches_distributed(spark, graph_paths):
     """Randomized equivalence: the size-gated driver union-find and the
     distributed min-label loop must return identical (id, component)
     sets on an arbitrary multigraph with chains, cliques and isolates."""
@@ -1787,8 +1791,10 @@ def test_connected_components_driver_matches_distributed(spark):
     ]
     edges = [(a, b) for a, b in edges if a != b]
     pairs = spark.createDataFrame(edges, ["id_a", "id_b"])
+    graph_paths.force("driver")
     drv = sorted(map(tuple, connected_components(pairs).collect()))
-    dist = sorted(map(tuple, connected_components(pairs, collect_threshold=0).collect()))
+    graph_paths.force("distributed")
+    dist = sorted(map(tuple, connected_components(pairs).collect()))
     assert drv == dist
 
 

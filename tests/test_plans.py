@@ -273,17 +273,57 @@ def test_profile_single_scan(spark, sf):
     assert plan.count("FileScan parquet") == 1, plan
 
 
-def test_pagerank_lineage_truncated_to_last_round(spark, sf):
+def test_pagerank_lineage_truncated_to_last_round(spark, sf, graph_paths):
     """The returned (lazy) final round must not embed rounds 0..N-1: its
     plan reaches the previous round through a checkpoint scan
     (ExistingRDD), and contains exactly the one groupBy(dst) aggregation
-    of the final round — the iterative-lineage trap guard."""
+    of the final round — the iterative-lineage trap guard.  The test
+    graph is below the small-graph gate, so the distributed path is
+    forced."""
+    graph_paths.force("distributed")
     df = _q("pagerank", spark, sf)
     plan = physical_plan(df)
     assert "ExistingRDD" in plan, plan
     # one final-round contribution aggregate, partial+final = 2 HashAggregate
     # mentions keyed on dst; rounds 0..N-2 would multiply this
     assert plan.count("hashpartitioning(dst") <= 1, plan
+
+
+def test_pagerank_driver_path_is_a_local_table(spark, sf, graph_paths):
+    """Below the small-graph gate the ranks are computed on the driver:
+    the returned plan is a local table with no shuffle left to run."""
+    graph_paths.force("driver")
+    df = _q("pagerank", spark, sf)
+    plan = physical_plan(df)
+    assert "LocalTableScan" in plan, plan
+    assert "Exchange" not in plan, plan
+
+
+def _pagerank_jobs(spark, sf, group):
+    """Spark jobs of one ``q_pagerank`` run through the noop sink, after
+    one identical run (the distributed path's cached frames then hit,
+    so the count does not depend on which tests ran before)."""
+    sc = spark.sparkContext
+    counts = []
+    for i in range(2):
+        sc.setJobGroup(f"{group}-{i}", group)
+        try:
+            _q("pagerank", spark, sf).write.format("noop").mode("overwrite").save()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(f"{group}-{i}")))
+    return counts[-1]
+
+
+def test_pagerank_job_ceilings(spark, sf, graph_paths):
+    """Job counts of the two paths at test scale.  The driver path is the
+    schema read, the gate's count and collect, and the sink.  The
+    distributed count (~10 jobs per round) is pinned exactly, so any
+    change to the loop's job count shows here."""
+    graph_paths.force("driver")
+    assert _pagerank_jobs(spark, sf, "pagerank-jobs-driver") <= 5
+    graph_paths.force("distributed")
+    assert _pagerank_jobs(spark, sf, "pagerank-jobs-distributed") == 49
 
 
 def test_setsim_prefix_equi_join_no_cartesian(spark, sf):

@@ -35,7 +35,7 @@ SHOW = {
     "events_gapfill": "Gap filling: sequence() spine x distinct types (broadcast) LEFT-joined to the hourly counts — build side never the corpus.",
     "events_salted_skew": "Salted skew join: the hot key fans out over (ukey, __salt) — the join exchange hashes BOTH columns, so no single reducer owns the hot key.",
     "int8_search": "Int8 quantized search: mapInPandas partial top-k per Arrow batch -> per-query window over |batches|*k rows, never the corpus.",
-    "pagerank": "PageRank final iteration: rank frame joins the cached src-partitioned edge list; groupBy(dst) sum partial-aggregates map-side; lineage ends at the prior round's checkpoint.",
+    "pagerank": "PageRank below the small-graph gate (every sf0.01 graph): the ranks were computed on the driver over the collected edge list, so the plan is one LocalTableScan. Above the gate the final round joins the cached src-partitioned edge list, partial-aggregates groupBy(dst) map-side, and its lineage ends at the prior round's checkpoint.",
     "record_linkage": "Record linkage: block-key hash equi-join bounds candidates to block size; levenshtein verifies JVM-side; WindowGroupLimit forwards one row per left id before the exchange.",
     "profile_events": "Single-pass profiler: one HashAggregate over one scan (Expand fans the multi-column distincts inside the same pass); stack unpivot is driver-free.",
 }
