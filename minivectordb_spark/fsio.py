@@ -37,6 +37,36 @@ resolves, in order: the ``SCRATCH_ROOT`` module knob, the
 ``spark.minivectordb.scratchDir`` session conf, and finally a
 ``_minivectordb_scratch`` directory under ``spark.sql.warehouse.dir``
 (shared storage on any correctly-configured cluster).
+
+Persisted-index lifecycle (IVF, dedup and near-dup indexes — every
+family goes through ``save_index_generation`` and
+``append_index_generation``; a family supplies only its manifest
+params and the tables it builds):
+
+- **Generations.**  A save writes its tables into a fresh
+  ``gen=<N>-<token>`` dir (``new_gen_dir``; the random token means two
+  racing saves never share a dir).  The manifest records ``generation``,
+  ``gen_dir``, the previous ``prev_gen_dir`` and, when the source is
+  stat-able, the freshness ``fingerprint``; ``skip_if_fresh`` reuses an
+  index whose fingerprint matches instead of rebuilding it.
+- **Epoch CAS.**  The manifest is published as the immutable epoch file
+  ``_manifest/<name>.e<E+1>.json`` by exclusive create
+  (``publish_index_manifest``).  Exactly one of two writers racing from
+  epoch E wins; the other gets ``ConcurrentIndexMutation``.
+- **Loser cleanup.**  A save that loses the CAS deletes its own gen dir
+  and re-raises; the live index and its epoch are untouched.
+- **Retention.**  After a winning save, ``sweep_index_generations``
+  keeps the new and the previous generation (probes planned against
+  the previous one keep working through the swap) and deletes the rest.
+- **Append.**  An append CAS-publishes the fingerprint-dropped manifest
+  first (``begin_index_append``: serializes racing appends, and a crash
+  mid-append costs a rebuild, never a stale fresh-looking index),
+  appends into the live generation (``gen_data``), and finally checks
+  that generation is still live (``end_index_append``: a rebuild that
+  swapped generations mid-append raises instead of losing the batch).
+- **Legacy layouts.**  A single-file manifest loads as epoch 0, and a
+  manifest without ``gen_dir`` (or, for IVF, no manifest at all —
+  ``load_index_or_empty``) serves data from the path's root dirs.
 """
 
 from __future__ import annotations
@@ -264,29 +294,31 @@ def list_dir(path: str, spark=None) -> list[str]:
         return []
 
 
-def _create_exclusive(path: str, text: str, spark=None) -> bool:
+def create_exclusive(path: str, text: str, spark=None) -> bool:
     """Publish ``text`` at ``path`` iff ``path`` does not exist — the
-    CAS primitive (durable.py's immutable-version pattern).  The content
-    is staged to a temp file first and moved in whole, so a winner can
-    never be torn.  Returns False when the target already exists (the
-    caller lost the race)."""
+    CAS primitive of the index epoch log and of durable.py's version
+    files.  The content is staged to a temp file first and moved in
+    whole, so a winner can never be torn, and a write that fails partway
+    leaves nothing at ``path``.  Returns False when the target already
+    exists (the caller lost the race)."""
     lp = _local_path(path)
     if lp is not None:
         d = os.path.dirname(lp) or "."
         os.makedirs(d, exist_ok=True)
         tmp = os.path.join(d, f".{os.path.basename(lp)}.tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            fh.write(text)
         try:
-            os.link(tmp, lp)  # atomic fail-if-exists publication
-            return True
-        except FileExistsError:
-            return False
-        except OSError:  # filesystem without hardlinks: exists-check gate
-            if os.path.exists(lp):
+            with open(tmp, "w") as fh:
+                fh.write(text)
+            try:
+                os.link(tmp, lp)  # atomic fail-if-exists publication
+                return True
+            except FileExistsError:
                 return False
-            os.replace(tmp, lp)
-            return True
+            except OSError:  # filesystem without hardlinks: exists-check gate
+                if os.path.exists(lp):
+                    return False
+                os.replace(tmp, lp)
+                return True
         finally:
             try:
                 os.remove(tmp)
@@ -343,6 +375,16 @@ def load_index_manifest(path: str, name: str, spark=None) -> tuple[dict, int]:
     return read_manifest(f"{root}/{name}", spark), 0
 
 
+def load_index_or_empty(path: str, name: str, spark=None) -> tuple[dict, int]:
+    """``load_index_manifest``, or ``({}, 0)`` when ``path`` holds no
+    manifest: a fresh build target, or an IVF index written before
+    manifests existed (its data sits at the legacy root dirs)."""
+    try:
+        return load_index_manifest(path, name, spark)
+    except (OSError, ValueError):
+        return {}, 0
+
+
 def publish_index_manifest(
     path: str, name: str, payload: dict, expected_epoch: int, spark=None
 ) -> int:
@@ -357,7 +399,7 @@ def publish_index_manifest(
     root = path.rstrip("/")
     new_epoch = int(expected_epoch) + 1
     target = f"{root}/{_MANIFEST_DIR}/{_epoch_file(name, new_epoch)}"
-    if not _create_exclusive(target, json.dumps(payload), spark):
+    if not create_exclusive(target, json.dumps(payload), spark):
         raise ConcurrentIndexMutation(
             f"epoch {new_epoch} of {root}/{name} was published by a "
             f"concurrent writer; reload the manifest and retry"
@@ -435,6 +477,67 @@ def sweep_index_generations(
     if len(keep_set) > 1:  # current + a real previous generation exist
         for sub in legacy_subdirs:
             delete(f"{root}/{sub}", recursive=True, spark=spark)
+
+
+def _write_index_tables(path: str, m: dict, tables: dict, mode: str) -> None:
+    """Write ``{subdir: (DataFrame, partition column or None)}`` into the
+    generation ``m`` names, overlapped (``util.run_concurrent``): each
+    write's driver fixed cost and task tail back-fill the others'."""
+    from minivectordb_spark.operators.util import run_concurrent
+
+    def writer(sub, df, col):
+        def write():
+            w = df.repartition(col).write.partitionBy(col) if col else df.write
+            w.mode(mode).parquet(gen_data(path, m, sub))
+
+        return write
+
+    run_concurrent(*(writer(sub, df, col) for sub, (df, col) in tables.items()))
+
+
+def save_index_generation(
+    path: str, name: str, fingerprint: str | None, build, skip_if_fresh=False
+) -> bool:
+    """Save a new generation of the index at ``path`` (the lifecycle in
+    the module docstring).  ``build()`` returns ``(params, tables)``:
+    the family's manifest params and its tables as ``{subdir:
+    (DataFrame, partition column or None)}``.  It runs only when the
+    save is not skipped.  ``skip_if_fresh`` is a bool, or a callable
+    asked only on a fingerprint match whose truth allows the skip.
+    Returns True when a generation was written, False when a fresh
+    index was reused."""
+    cur, epoch = load_index_or_empty(path, name)
+    fresh = fingerprint is not None and cur.get("fingerprint") == fingerprint
+    if fresh and skip_if_fresh and (skip_if_fresh is True or skip_if_fresh()):
+        return False
+    gen, gen_dir = new_gen_dir(cur)
+    params, tables = build()
+    _write_index_tables(path, {"gen_dir": gen_dir}, tables, "overwrite")
+    m = dict(params, generation=gen, gen_dir=gen_dir)
+    if cur.get("gen_dir"):
+        m["prev_gen_dir"] = cur["gen_dir"]
+    if fingerprint is not None:
+        m["fingerprint"] = fingerprint
+    try:
+        publish_index_manifest(path, name, m, epoch)
+    except ConcurrentIndexMutation:
+        delete(f"{path.rstrip('/')}/{gen_dir}", recursive=True)
+        raise
+    sweep_index_generations(path, [gen_dir, cur.get("gen_dir")], list(tables))
+    return True
+
+
+def append_index_generation(
+    path: str, name: str, m: dict, epoch: int, build, spark=None
+) -> None:
+    """Append to the live generation of the index whose manifest ``m``
+    was read at ``epoch``: ``begin_index_append``, then the tables
+    ``build()`` returns (as in ``save_index_generation``), then
+    ``end_index_append``.  ``build`` runs after the fingerprint is
+    dropped, so a failure while building leaves a stale-marked index."""
+    begin_index_append(path, name, m, epoch)
+    _write_index_tables(path, m, build(), "append")
+    end_index_append(path, name, m, spark)
 
 
 def scratch_dir(spark, prefix: str) -> str:

@@ -31,6 +31,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from minivectordb_spark import fsio
 
 
 def seed_centroids(df: DataFrame, n: int, id_col: str = "vec_id", emb_col: str = "embedding") -> DataFrame:
@@ -586,17 +587,20 @@ def _ivf_source_fingerprint(
 _IVF_MANIFEST = "_index_manifest.json"
 
 
-def _load_ivf_or_empty(path: str, spark=None) -> tuple[dict, int]:
-    """(manifest, epoch) of an IVF layout; ({}, 0) when no manifest
-    exists — both a fresh build target and a pre-r14 legacy index whose
-    build had no stat-able fingerprint (those wrote no manifest at
-    all), with data at the legacy roots either way."""
-    from minivectordb_spark import fsio
+def _assignment_rows(
+    df: DataFrame, cents: list[tuple[int, list[float]]], id_col: str, emb_col: str
+) -> DataFrame:
+    """(id, embedding, centroid_id) rows of the assignments table."""
+    from minivectordb_spark.operators.util import materialize
+    from minivectordb_spark.scoring import norm_expr
 
-    try:
-        return fsio.load_index_manifest(path, _IVF_MANIFEST, spark)
-    except (OSError, ValueError):
-        return {}, 0
+    staged = materialize(df, norm_expr(emb_col), "__n", [id_col, emb_col])
+    best = _assignment_struct(emb_col, cents, norm_col="__n")
+    return materialize(staged, best, "__best", [id_col, emb_col]).select(
+        F.col(id_col),
+        F.col(emb_col),
+        (-F.col("__best.neg_id")).alias("centroid_id"),
+    )
 
 
 def save_ivf_index(
@@ -623,55 +627,23 @@ def save_ivf_index(
     its write cost if repeat searches reuse it, and a stale index is worse
     than no index, so freshness is checked, never assumed.  Returns True
     when the index was (re)built, False when a fresh one was reused.
-
-    Re-saving over an existing index writes the new GENERATION into its
-    own tokenized ``gen=<N>-...`` dir and publishes via the CAS
-    manifest-epoch log (``fsio.publish_index_manifest`` — same contract
-    as ``save_dedup_index``, VERDICT r13 item 1): searches of the
-    previous generation keep working through the swap, and a losing
-    concurrent writer gets ``ConcurrentIndexMutation``."""
-    from minivectordb_spark import fsio
-    from minivectordb_spark.operators.util import materialize
-    from minivectordb_spark.scoring import norm_expr
-
+    Generations, the CAS publish and retention: ``fsio`` module
+    docstring."""
     cents = _collect_centroids(centroids)
     fp = (
         _ivf_source_fingerprint(df, cents, id_col, emb_col)
         if _fingerprint == "auto"
         else _fingerprint
     )
-    cur, epoch = _load_ivf_or_empty(path)
-    if skip_if_fresh and fp is not None and cur.get("fingerprint") == fp:
-        return False
-    gen, gen_dir = fsio.new_gen_dir(cur)
-    staged = materialize(df, norm_expr(emb_col), "__n", [id_col, emb_col])
-    best = _assignment_struct(emb_col, cents, norm_col="__n")
-    assigned = materialize(staged, best, "__best", [id_col, emb_col]).select(
-        F.col(id_col),
-        F.col(emb_col),
-        (-F.col("__best.neg_id")).alias("centroid_id"),
-    )
-    (
-        assigned.repartition("centroid_id")
-        .write.partitionBy("centroid_id")
-        .mode("overwrite")
-        .parquet(f"{path}/{gen_dir}/assignments")
-    )
-    centroids.write.mode("overwrite").parquet(f"{path}/{gen_dir}/centroids")
-    m = {"generation": gen, "gen_dir": gen_dir}
-    if cur.get("gen_dir"):
-        m["prev_gen_dir"] = cur["gen_dir"]
-    if fp is not None:
-        m["fingerprint"] = fp
-    try:
-        fsio.publish_index_manifest(path, _IVF_MANIFEST, m, epoch)
-    except fsio.ConcurrentIndexMutation:
-        fsio.delete(f"{path.rstrip('/')}/{gen_dir}", recursive=True)
-        raise
-    fsio.sweep_index_generations(
-        path, [gen_dir, cur.get("gen_dir")], ["assignments", "centroids"]
-    )
-    return True
+
+    def build():
+        assigned = _assignment_rows(df, cents, id_col, emb_col)
+        return {}, {
+            "assignments": (assigned, "centroid_id"),
+            "centroids": (centroids, None),
+        }
+
+    return fsio.save_index_generation(path, _IVF_MANIFEST, fp, build, skip_if_fresh)
 
 
 def ivf_index_balance(spark, path: str) -> dict:
@@ -688,12 +660,10 @@ def ivf_index_balance(spark, path: str) -> dict:
     capped-penalty economics as the near-dup occupancy trigger: refit
     the centroids — a fresh ``save_ivf_index`` — before a worst-case
     probe costs more than ~4x a balanced one).  Drift degrades IVF
-    recall too, but that is query-dependent (measured separately by
-    ``tools/ivf_recall_probe.py``); this check bounds the COST axis
+    recall too, but that is query-dependent (measured r14, PLANS.md "r14:
+    IVF recall axis measured"); this check bounds the COST axis
     with one aggregate over the assignments table."""
-    from minivectordb_spark import fsio
-
-    m, _ = _load_ivf_or_empty(path, spark)
+    m, _ = fsio.load_index_or_empty(path, _IVF_MANIFEST, spark)
     counts = (
         spark.read.parquet(fsio.gen_data(path, m, "assignments"))
         .groupBy("centroid_id")
@@ -743,12 +713,10 @@ def rebuild_ivf_index_if_unbalanced(
     mismatched refit must fail at the call, not later at assign time).
     Column names are recovered from the assignments schema (written as
     id, emb, centroid_id).  Returns True when a rebuild happened."""
-    from minivectordb_spark import fsio
-
     st = ivf_index_balance(spark, path)
     if not (force or st["balance_ratio"] > threshold):
         return False
-    m, _ = _load_ivf_or_empty(path, spark)
+    m, _ = fsio.load_index_or_empty(path, _IVF_MANIFEST, spark)
     corpus_all = spark.read.parquet(fsio.gen_data(path, m, "assignments"))
     id_col, emb_col = [c for c in corpus_all.columns if c != "centroid_id"][:2]
     corpus = corpus_all.select(id_col, emb_col)
@@ -796,37 +764,22 @@ def update_ivf_index(
     ``skip_if_fresh`` must not match it against the original source —
     the next ``save_ivf_index(skip_if_fresh=True)`` call rebuilds.
     Id uniqueness vs already-indexed rows is the caller's contract (the
-    durable table's ingest gates enforce it upstream).  Concurrency
-    contract (r14): CAS epoch bump + fingerprint-drop first
-    (``fsio.begin_index_append`` — the r12 crash ordering and the
-    multi-writer serialization point in one write), generation-survival
-    check last (``fsio.end_index_append`` — a rebuild that swapped
-    generations mid-append raises instead of silently dropping the
-    batch)."""
-    from minivectordb_spark import fsio
-    from minivectordb_spark.operators.util import materialize
-    from minivectordb_spark.scoring import norm_expr
-
+    durable table's ingest gates enforce it upstream).  The append's
+    concurrency contract: ``fsio`` module docstring."""
     spark = df_new.sparkSession
-    m, epoch = _load_ivf_or_empty(path, spark)
+    m, epoch = fsio.load_index_or_empty(path, _IVF_MANIFEST, spark)
     cents = _collect_centroids(
         spark.read.parquet(fsio.gen_data(path, m, "centroids"))
     )
-    staged = materialize(df_new, norm_expr(emb_col), "__n", [id_col, emb_col])
-    best = _assignment_struct(emb_col, cents, norm_col="__n")
-    assigned = materialize(staged, best, "__best", [id_col, emb_col]).select(
-        F.col(id_col),
-        F.col(emb_col),
-        (-F.col("__best.neg_id")).alias("centroid_id"),
+    fsio.append_index_generation(
+        path, _IVF_MANIFEST, m, epoch,
+        lambda: {
+            "assignments": (
+                _assignment_rows(df_new, cents, id_col, emb_col), "centroid_id"
+            )
+        },
+        spark,
     )
-    fsio.begin_index_append(path, _IVF_MANIFEST, m, epoch)
-    (
-        assigned.repartition("centroid_id")
-        .write.partitionBy("centroid_id")
-        .mode("append")
-        .parquet(fsio.gen_data(path, m, "assignments"))
-    )
-    fsio.end_index_append(path, _IVF_MANIFEST, m, spark)
 
 
 def ivf_search_indexed(
@@ -843,11 +796,10 @@ def ivf_search_indexed(
     the scan's PartitionFilters show the pruning (plan-asserted in
     test_plans).  Same (id, score) contract and same results as the
     on-the-fly ``ivf_search`` given the same centroids."""
-    from minivectordb_spark import fsio
     from minivectordb_spark.operators.util import materialize
     from minivectordb_spark.scoring import cosine_sql, norm_expr, sql_name
 
-    m, _ = _load_ivf_or_empty(path, spark)
+    m, _ = fsio.load_index_or_empty(path, _IVF_MANIFEST, spark)
     centroids = spark.read.parquet(fsio.gen_data(path, m, "centroids"))
     cents = _collect_centroids(centroids)
     probes = _rank_probes(cents, query, nprobe)

@@ -26,6 +26,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from minivectordb_spark import fsio
 from minivectordb_spark.operators.hashing import MERSENNE_P, md5i32, minhash_coeffs
 from minivectordb_spark.operators.text import _exact_avg_micros, tokens
 from minivectordb_spark.scoring import cosine_sim_cols
@@ -143,7 +144,6 @@ from minivectordb_spark.plans.width import ensure_parallelism as _parallel
 from minivectordb_spark.plans.width import verify_repartition
 from minivectordb_spark.operators.util import collect_small_graph
 from minivectordb_spark.operators.util import materialize as _barrier
-from minivectordb_spark.operators.util import run_concurrent
 
 
 def _reused(df: DataFrame) -> DataFrame:
@@ -2043,35 +2043,6 @@ _DEDUP_MANIFEST = "_dedup_index_manifest.json"
 _NEARDUP_MANIFEST = "_neardup_index_manifest.json"
 
 
-def _gen_data(path: str, m: dict, sub: str) -> str:
-    from minivectordb_spark import fsio
-
-    return fsio.gen_data(path, m, sub)
-
-
-def _load_index_or_empty(path: str, name: str) -> tuple[dict, int]:
-    """(manifest, epoch) of an existing index, or ({}, 0) when ``path``
-    holds no index yet (fresh build target)."""
-    from minivectordb_spark import fsio
-
-    try:
-        return fsio.load_index_manifest(path, name)
-    except (OSError, ValueError):
-        return {}, 0
-
-
-def _begin_index_append(path: str, name: str, m: dict, epoch: int) -> None:
-    from minivectordb_spark import fsio
-
-    fsio.begin_index_append(path, name, m, epoch)
-
-
-def _end_index_append(path: str, name: str, m: dict) -> None:
-    from minivectordb_spark import fsio
-
-    fsio.end_index_append(path, name, m)
-
-
 def save_dedup_index(
     reference: DataFrame,
     path: str,
@@ -2113,19 +2084,8 @@ def save_dedup_index(
     (``update_dedup_index`` drops the fingerprint — an appended index
     corresponds to no single source snapshot).  Returns True when the
     index was (re)built, False when a fresh one was reused.
-
-    Re-saving over an existing index writes the NEW GENERATION into its
-    own ``gen=<N>-<token>`` dir and publishes it by a CAS manifest-epoch
-    bump (``fsio.publish_index_manifest``) — probes of the previous
-    generation keep working through the swap (the previous generation's
-    data is retained until the next publish), a losing concurrent
-    writer gets a clean ``ConcurrentIndexMutation``, and object stores
-    never see a manifest rename window (epoch files are immutable,
-    exclusive-created).  This is the snapshot-isolation translation of
-    the reference's lock-serialized persistence
-    (vector_database.py:19,538-548), the same contract durable.py's CAS
-    gives the CoW table (VERDICT r13 item 1)."""
-    from minivectordb_spark import fsio
+    Generations, the CAS publish and retention: ``fsio`` module
+    docstring."""
     from minivectordb_spark.operators.util import source_fingerprint
 
     params = {
@@ -2141,53 +2101,25 @@ def save_dedup_index(
         if _fingerprint == "auto"
         else _fingerprint
     )
-    cur, epoch = _load_index_or_empty(path, _DEDUP_MANIFEST)
-    if skip_if_fresh and fp is not None and cur.get("fingerprint") == fp:
-        return False
 
-    gen, gen_dir = fsio.new_gen_dir(cur)
-    sh_ref = _reused(_shingle_frame(reference, text_col, id_col, k))
-    buckets = _band_buckets(sh_ref, id_col, n_hashes, band_size, seed).withColumn(
-        "bp", F.substring(F.col("band_hash"), 1, prefix_len)
+    def build():
+        sh_ref = _reused(_shingle_frame(reference, text_col, id_col, k))
+        buckets = _band_buckets(sh_ref, id_col, n_hashes, band_size, seed).withColumn(
+            "bp", F.substring(F.col("band_hash"), 1, prefix_len)
+        )
+        return params, {
+            "buckets": (buckets, "bp"),
+            "shingles": (sh_ref.select(F.col(id_col), F.col("sh")), None),
+        }
+
+    return fsio.save_index_generation(
+        path, _DEDUP_MANIFEST, fp, build, skip_if_fresh
     )
-    # the two table writes are independent once sh_ref exists — overlap
-    # them (util.run_concurrent, guide §2.6): each write's driver fixed
-    # cost (plan/commit) and task tail back-fill the other's
-    run_concurrent(
-        lambda: (
-            buckets.repartition("bp")
-            .write.partitionBy("bp")
-            .mode("overwrite")
-            .parquet(f"{path}/{gen_dir}/buckets")
-        ),
-        lambda: (
-            sh_ref.select(F.col(id_col), F.col("sh"))
-            .write.mode("overwrite")
-            .parquet(f"{path}/{gen_dir}/shingles")
-        ),
-    )
-    m = dict(params)
-    m["generation"], m["gen_dir"] = gen, gen_dir
-    if cur.get("gen_dir"):
-        m["prev_gen_dir"] = cur["gen_dir"]
-    if fp is not None:
-        m["fingerprint"] = fp
-    try:
-        fsio.publish_index_manifest(path, _DEDUP_MANIFEST, m, epoch)
-    except fsio.ConcurrentIndexMutation:
-        fsio.delete(f"{path.rstrip('/')}/{gen_dir}", recursive=True)
-        raise
-    fsio.sweep_index_generations(
-        path, [gen_dir, cur.get("gen_dir")], ["buckets", "shingles"]
-    )
-    return True
 
 
 def _load_dedup_manifest(path: str, id_col: str) -> tuple[dict, int]:
     """(manifest, epoch); resolves the generation-aware epoch log with
     legacy single-file fallback (``fsio.load_index_manifest``)."""
-    from minivectordb_spark import fsio
-
     m, epoch = fsio.load_index_manifest(path, _DEDUP_MANIFEST)
     if m["id_col"] != id_col:
         raise ValueError(
@@ -2228,9 +2160,9 @@ def dedup_index_candidates(
         .distinct()
         .collect()
     ]
-    rb = sh_new.sparkSession.read.parquet(_gen_data(path, m, "buckets")).filter(
-        F.col("bp").isin(prefixes)
-    )
+    rb = sh_new.sparkSession.read.parquet(
+        fsio.gen_data(path, m, "buckets")
+    ).filter(F.col("bp").isin(prefixes))
     return (
         rb.alias("r")
         .join(
@@ -2270,7 +2202,7 @@ def dedup_against_indexed(
     m, _ = _load_dedup_manifest(path, id_col)
     sh_new = _reused(_shingle_frame(df, text_col, id_col, m["k"]))
     cand = _reused(dedup_index_candidates(sh_new, path, id_col=id_col))
-    sh_ref = spark.read.parquet(_gen_data(path, m, "shingles"))
+    sh_ref = spark.read.parquet(fsio.gen_data(path, m, "shingles"))
     ref_needed = sh_ref.join(
         F.broadcast(cand.select(F.col("id_ref").alias(id_col)).distinct()),
         id_col,
@@ -2310,39 +2242,23 @@ def update_dedup_index(
     indexed corpus — the same lifecycle contract as ``update_ivf_index``
     (append between full rebuilds).  Id uniqueness vs already-indexed
     docs is the caller's contract (the ingest gates enforce it
-    upstream).
-
-    Concurrency contract (r14): the append STARTS with a CAS
-    manifest-epoch bump that also drops the freshness fingerprint
-    (``_begin_index_append`` — two appends racing from the same epoch
-    get one clean ``ConcurrentIndexMutation``, and the r12
-    invalidate-before-append crash ordering is preserved in the same
-    write), appends into the manifest's live generation dir, and ENDS
-    by verifying the generation survived (``_end_index_append`` — a
-    rebuild that swapped generations mid-append raises instead of
-    silently dropping the batch)."""
+    upstream).  The append's concurrency contract: ``fsio`` module
+    docstring."""
     m, epoch = _load_dedup_manifest(path, id_col)
-    _begin_index_append(path, _DEDUP_MANIFEST, m, epoch)
-    sh_new = _reused(_shingle_frame(df_new, text_col, id_col, m["k"]))
-    buckets = _band_buckets(
-        sh_new, id_col, m["n_hashes"], m["band_size"], m["seed"]
-    ).withColumn("bp", F.substring(F.col("band_hash"), 1, m.get("prefix_len", 2)))
-    # independent appends into the same generation dir — overlapped like
-    # save_dedup_index's writes (util.run_concurrent, guide §2.6)
-    run_concurrent(
-        lambda: (
-            buckets.repartition("bp")
-            .write.partitionBy("bp")
-            .mode("append")
-            .parquet(_gen_data(path, m, "buckets"))
-        ),
-        lambda: (
-            sh_new.select(F.col(id_col), F.col("sh"))
-            .write.mode("append")
-            .parquet(_gen_data(path, m, "shingles"))
-        ),
-    )
-    _end_index_append(path, _DEDUP_MANIFEST, m)
+
+    def build():
+        sh_new = _reused(_shingle_frame(df_new, text_col, id_col, m["k"]))
+        buckets = _band_buckets(
+            sh_new, id_col, m["n_hashes"], m["band_size"], m["seed"]
+        ).withColumn(
+            "bp", F.substring(F.col("band_hash"), 1, m.get("prefix_len", 2))
+        )
+        return {
+            "buckets": (buckets, "bp"),
+            "shingles": (sh_new.select(F.col(id_col), F.col("sh")), None),
+        }
+
+    fsio.append_index_generation(path, _DEDUP_MANIFEST, m, epoch, build)
 
 
 def _emb_element_type(df: DataFrame, emb_col: str) -> str:
@@ -2378,11 +2294,11 @@ def save_neardup_index(
     snapshot of one plane choice, rebuilt when the corpus outgrows it
     (same lifecycle as IVF centroids).
 
-    Measured staleness law (tools/index_staleness.py, r12): growing the
-    corpus past the build point via ``update_neardup_index`` degrades
-    COST, never recall — candidates per probe row grow exactly linearly
-    with corpus growth (256 -> 2,498 -> 25,022 at 1x/10x/100x on a
-    5k-built index) while recall on planted duplicates stays 1.0 at
+    Measured staleness law (PLANS.md "r12: frozen-index staleness law"):
+    growing the corpus past the build point via ``update_neardup_index``
+    degrades COST, never recall — candidates per probe row grow exactly
+    linearly with corpus growth (256 -> 2,498 -> 25,022 at 1x/10x/100x
+    on a 5k-built index) while recall on planted duplicates stays 1.0 at
     every decade; a fresh rebuild at 100x (planes re-resolved, P 7 ->
     13) is ~22x cheaper to probe.  REBUILD TRIGGER (mechanized):
     ``neardup_index_staleness`` computes the one-aggregate occupancy
@@ -2400,15 +2316,8 @@ def save_neardup_index(
     re-checks the occupancy trigger on a fingerprint-FRESH index (the
     misconfigured-explicit-planes case — fresh fingerprint, 10x probe
     cost) and rebuilds instead of reusing.  Returns True when (re)built,
-    False when a fresh index was reused.
-
-    Re-saving over an existing index writes the new GENERATION into its
-    own tokenized ``gen=<N>-...`` dir and publishes via the CAS
-    manifest-epoch log (see ``save_dedup_index`` — same snapshot-
-    isolation contract, VERDICT r13 item 1): in-flight probes keep the
-    previous generation through the swap, and a losing concurrent
-    writer raises ``ConcurrentIndexMutation`` with the index intact."""
-    from minivectordb_spark import fsio
+    False when a fresh index was reused.  Generations, the CAS publish
+    and retention: ``fsio`` module docstring."""
     from minivectordb_spark.operators.ann import random_projection_buckets
     from minivectordb_spark.operators.util import source_fingerprint
 
@@ -2420,80 +2329,58 @@ def save_neardup_index(
         if _fingerprint == "auto"
         else _fingerprint
     )
-    cur, epoch = _load_index_or_empty(path, _NEARDUP_MANIFEST)
-    if skip_if_fresh and fp is not None and cur.get("fingerprint") == fp:
-        if not (
+
+    def build():
+        resolved = _neardup_resolve_planes(
+            reference, emb_col, id_col, planes, target_block_size, max_planes
+        )
+        buckets = random_projection_buckets(
+            reference, resolved, id_col=id_col, emb_col=emb_col
+        ).withColumn("bp", F.pmod(F.col("bucket"), F.lit(n_dirs)))
+        # canonical element type = the SOURCE's element type, pinned in
+        # the manifest (ADVICE r11): storing at source precision keeps the
+        # exact verify cosine identical to neardup_against / the oracle (a
+        # float32 downcast can flip round(cosine, 6) >= threshold for
+        # borderline pairs when the source is double); appends cast to
+        # the pinned type so one directory never mixes element types
+        # (FAILED_READ_FILE.PARQUET_COLUMN_DATA_TYPE_MISMATCH — found by
+        # the streaming-gate test)
+        emb_type = _emb_element_type(reference, emb_col)
+        embeddings = reference.select(
+            F.col(id_col),
+            F.col(emb_col).cast(f"array<{emb_type}>").alias(emb_col),
+        )
+        params = {
+            "id_col": id_col,
+            "emb_col": emb_col,
+            "planes": resolved,
+            "n_dirs": n_dirs,
+            "emb_type": emb_type,
+            # build knobs recorded so the staleness check and an in-place
+            # rebuild replay the build's OWN economics (not a caller guess)
+            "target_block_size": target_block_size,
+            "max_planes": max_planes,
+        }
+        return params, {
+            "buckets": (buckets, "bp"),
+            "embeddings": (embeddings, None),
+        }
+
+    def within_budget():  # asked only of a fingerprint-fresh index
+        return not (
             rebuild_if_stale
             and neardup_index_staleness(reference.sparkSession, path)["stale"]
-        ):
-            return False
+        )
 
-    gen, gen_dir = fsio.new_gen_dir(cur)
-    planes = _neardup_resolve_planes(
-        reference, emb_col, id_col, planes, target_block_size, max_planes
+    return fsio.save_index_generation(
+        path, _NEARDUP_MANIFEST, fp, build, skip_if_fresh and within_budget
     )
-    buckets = random_projection_buckets(
-        reference, planes, id_col=id_col, emb_col=emb_col
-    ).withColumn("bp", F.pmod(F.col("bucket"), F.lit(n_dirs)))
-    # canonical element type = the SOURCE's element type, pinned in the
-    # manifest (ADVICE r11): storing at source precision keeps the exact
-    # verify cosine identical to neardup_against / the oracle (a float32
-    # downcast can flip round(cosine, 6) >= threshold for borderline
-    # pairs when the source is double); appends cast to the pinned type
-    # so one directory never mixes element types (FAILED_READ_FILE.
-    # PARQUET_COLUMN_DATA_TYPE_MISMATCH — found by the streaming-gate
-    # test)
-    emb_type = _emb_element_type(reference, emb_col)
-    # the bucket and embedding writes are independent — overlapped like
-    # save_dedup_index's pair (util.run_concurrent, guide §2.6)
-    run_concurrent(
-        lambda: (
-            buckets.repartition("bp")
-            .write.partitionBy("bp")
-            .mode("overwrite")
-            .parquet(f"{path}/{gen_dir}/buckets")
-        ),
-        lambda: (
-            reference.select(
-                F.col(id_col),
-                F.col(emb_col).cast(f"array<{emb_type}>").alias(emb_col),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{path}/{gen_dir}/embeddings")
-        ),
-    )
-    m = {
-        "id_col": id_col,
-        "emb_col": emb_col,
-        "planes": planes,
-        "n_dirs": n_dirs,
-        "emb_type": emb_type,
-        # build knobs recorded so the staleness check and an in-place
-        # rebuild replay the build's OWN economics (not a caller guess)
-        "target_block_size": target_block_size,
-        "max_planes": max_planes,
-        "generation": gen,
-        "gen_dir": gen_dir,
-    }
-    if cur.get("gen_dir"):
-        m["prev_gen_dir"] = cur["gen_dir"]
-    if fp is not None:
-        m["fingerprint"] = fp
-    try:
-        fsio.publish_index_manifest(path, _NEARDUP_MANIFEST, m, epoch)
-    except fsio.ConcurrentIndexMutation:
-        fsio.delete(f"{path.rstrip('/')}/{gen_dir}", recursive=True)
-        raise
-    fsio.sweep_index_generations(
-        path, [gen_dir, cur.get("gen_dir")], ["buckets", "embeddings"]
-    )
-    return True
 
 
 def dedup_index_stats(spark, path: str) -> dict:
     """Bucket-occupancy stats for a ``save_dedup_index`` layout — the
-    CONTRAST case to ``neardup_index_staleness`` (measured r12,
-    tools/index_staleness.py): band-bucket keys live in md5 hash space
+    CONTRAST case to ``neardup_index_staleness`` (measured r12, PLANS.md
+    "r12: frozen-index staleness law"): band-bucket keys live in md5 hash space
     and the banding parameters (n_hashes, band_size, shingle k) are
     scale-free, so per-bucket occupancy tracks DUPLICATE DENSITY, not
     corpus size — appends never inflate probe cost the way frozen
@@ -2503,11 +2390,9 @@ def dedup_index_stats(spark, path: str) -> dict:
     incoming data's duplicate rate rose, not that the index aged.
     Audit-weight (one groupBy over the bucket table), not a per-cycle
     check like the near-dup metadata count."""
-    from minivectordb_spark import fsio
-
     m, _ = fsio.load_index_manifest(path, _DEDUP_MANIFEST, spark)
     occ = (
-        spark.read.parquet(_gen_data(path, m, "buckets"))
+        spark.read.parquet(fsio.gen_data(path, m, "buckets"))
         .groupBy("band_hash")
         .agg(F.count(F.lit(1)).alias("c"))
         .agg(
@@ -2530,7 +2415,7 @@ def dedup_index_stats(spark, path: str) -> dict:
 def neardup_index_staleness(spark, path: str) -> dict:
     """One-aggregate occupancy stats for a ``save_neardup_index`` layout
     — the mechanized form of the measured staleness law
-    (tools/index_staleness.py, r12): probe cost is LINEAR in average
+    (PLANS.md "r12: frozen-index staleness law"): probe cost is LINEAR in average
     bucket occupancy (= corpus_rows / 2^P with P frozen at build time)
     while recall stays 1.0, so the only thing staleness costs is time —
     and the trigger that bounds it is ``avg_occupancy > 4 *
@@ -2542,8 +2427,6 @@ def neardup_index_staleness(spark, path: str) -> dict:
     Returns ``{rows, n_planes, avg_occupancy, target_block_size,
     occupancy_ratio, stale}`` where ``occupancy_ratio`` is
     avg_occupancy / target_block_size (rebuild at > 4)."""
-    from minivectordb_spark import fsio
-
     m, _ = fsio.load_index_manifest(path, _NEARDUP_MANIFEST, spark)
     n_planes = len(m["planes"])
     # pre-r13 manifests did not record build knobs: the threshold below
@@ -2553,7 +2436,7 @@ def neardup_index_staleness(spark, path: str) -> dict:
     # (ADVICE r13); a rebuild rewrites the manifest with knobs recorded
     knobs_missing = m.get("target_block_size") is None
     tbs = int(m.get("target_block_size") or 64)
-    rows = spark.read.parquet(_gen_data(path, m, "buckets")).count()
+    rows = spark.read.parquet(fsio.gen_data(path, m, "buckets")).count()
     occ = rows / float(2**n_planes)
     return {
         "rows": int(rows),
@@ -2591,10 +2474,8 @@ def rebuild_neardup_index_if_stale(
     st = neardup_index_staleness(spark, path)
     if not (force or st["stale"]):
         return False
-    from minivectordb_spark import fsio
-
     m, _ = fsio.load_index_manifest(path, _NEARDUP_MANIFEST, spark)
-    corpus = spark.read.parquet(_gen_data(path, m, "embeddings"))
+    corpus = spark.read.parquet(fsio.gen_data(path, m, "embeddings"))
     save_neardup_index(
         corpus,
         path,
@@ -2624,7 +2505,6 @@ def neardup_index_candidates(
     ``pmod(bucket, n_dirs)`` layout column (the probe dirs are a bounded
     <= n_dirs driver collect); the only keyed shuffle is the
     candidate-sized distinct."""
-    from minivectordb_spark import fsio
     from minivectordb_spark.operators.ann import random_projection_probes
 
     spark = df.sparkSession
@@ -2657,7 +2537,7 @@ def neardup_index_candidates(
         .distinct()
         .collect()
     ]
-    rb = spark.read.parquet(_gen_data(path, m, "buckets")).filter(
+    rb = spark.read.parquet(fsio.gen_data(path, m, "buckets")).filter(
         F.col("bp").isin(dirs)
     )
     return (
@@ -2687,7 +2567,6 @@ def neardup_against_indexed(
     verify semi-joins the stored embedding table down to candidate ids
     before the exact cosine.  Probing policy (``max_probes``) is a
     probe-time choice — bucket KEYS depend only on the frozen planes."""
-    from minivectordb_spark import fsio
     from minivectordb_spark.operators.util import materialize
     from minivectordb_spark.scoring import norm_expr
 
@@ -2699,7 +2578,7 @@ def neardup_against_indexed(
             multiprobe=multiprobe, max_probes=max_probes,
         )
     )
-    ref_needed = spark.read.parquet(_gen_data(path, m, "embeddings")).join(
+    ref_needed = spark.read.parquet(fsio.gen_data(path, m, "embeddings")).join(
         F.broadcast(cand.select(F.col("id_ref").alias(id_col)).distinct()),
         id_col,
         "left_semi",
@@ -2747,38 +2626,26 @@ def update_neardup_index(
     the index's FROZEN planes — the probe -> accept -> append loop for
     embeddings, batch-cost only (same lifecycle as ``update_ivf_index`` /
     ``update_dedup_index``; rebuild when the corpus outgrows the plane
-    count).  Concurrency contract (r14): CAS epoch bump +
-    fingerprint-drop first, generation-survival check last — see
-    ``update_dedup_index``."""
-    from minivectordb_spark import fsio
+    count).  The append's concurrency contract: ``fsio`` module
+    docstring."""
     from minivectordb_spark.operators.ann import random_projection_buckets
 
     m, epoch = fsio.load_index_manifest(
         path, _NEARDUP_MANIFEST, df_new.sparkSession
     )
-    _begin_index_append(path, _NEARDUP_MANIFEST, m, epoch)
-    buckets = random_projection_buckets(
-        df_new, m["planes"], id_col=id_col, emb_col=emb_col
-    ).withColumn("bp", F.pmod(F.col("bucket"), F.lit(m["n_dirs"])))
-    # cast to the manifest-pinned element type (source precision at build
-    # time; "float" fallback for pre-emb_type manifests) so appends never
-    # mix parquet element types in the embeddings directory
-    emb_type = m.get("emb_type", "float")
-    # independent appends, overlapped (util.run_concurrent, guide §2.6)
-    run_concurrent(
-        lambda: (
-            buckets.repartition("bp")
-            .write.partitionBy("bp")
-            .mode("append")
-            .parquet(_gen_data(path, m, "buckets"))
-        ),
-        lambda: (
-            df_new.select(
-                F.col(id_col),
-                F.col(emb_col).cast(f"array<{emb_type}>").alias(emb_col),
-            )
-            .write.mode("append")
-            .parquet(_gen_data(path, m, "embeddings"))
-        ),
-    )
-    _end_index_append(path, _NEARDUP_MANIFEST, m)
+
+    def build():
+        buckets = random_projection_buckets(
+            df_new, m["planes"], id_col=id_col, emb_col=emb_col
+        ).withColumn("bp", F.pmod(F.col("bucket"), F.lit(m["n_dirs"])))
+        # cast to the manifest-pinned element type (source precision at
+        # build time; "float" fallback for pre-emb_type manifests) so
+        # appends never mix parquet element types in the embeddings dir
+        emb_type = m.get("emb_type", "float")
+        embeddings = df_new.select(
+            F.col(id_col),
+            F.col(emb_col).cast(f"array<{emb_type}>").alias(emb_col),
+        )
+        return {"buckets": (buckets, "bp"), "embeddings": (embeddings, None)}
+
+    fsio.append_index_generation(path, _NEARDUP_MANIFEST, m, epoch, build)

@@ -381,6 +381,77 @@ def _partial_topk_rows(scores: np.ndarray, ids: np.ndarray, kk: int) -> np.ndarr
     return np.asarray(order[:kk], dtype=np.int64)
 
 
+def _matmul_score_topk(
+    corpus_df: DataFrame,
+    k: int,
+    id_col: str,
+    emb_col: str,
+    query_ids: list,
+    batch_scores,
+) -> DataFrame:
+    """(query_id, id, score) with per-query exact top-k, scored one Arrow
+    batch at a time: ``batch_scores(unit)`` maps the batch's
+    unit-normalized embeddings (rows, dim) to a (rows, |Q|) score matrix.
+
+    Each mapInPandas partition emits only its LOCAL top-k per query
+    (partial top-k, the map-side combine of TakeOrderedAndProject), so
+    the shuffle carries at most partitions * |Q| * k rows; a per-query
+    window then keeps the global top-k."""
+    from pyspark.sql import Window
+
+    id_type = corpus_df.schema[id_col].dataType
+    out_schema = StructType(
+        [
+            StructField("query_id", IntegerType()),
+            StructField(id_col, id_type),
+            StructField("score", DoubleType()),
+        ]
+    )
+
+    def score_partition(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            emb = np.vstack(pdf[emb_col].to_numpy()).astype(np.float64)
+            norms = np.linalg.norm(emb, axis=1, keepdims=True)
+            norms[norms == 0.0] = 1.0
+            sims = batch_scores(emb / norms)
+            ids = pdf[id_col].to_numpy()
+            kk = min(k, sims.shape[0])
+            frames = []
+            for j in range(sims.shape[1]):
+                # partial top-k per query within this batch, globally
+                # consistent (score desc, id asc) tiebreak
+                rows = _partial_topk_rows(sims[:, j], ids, kk)
+                frames.append(
+                    pd.DataFrame(
+                        {
+                            "query_id": j,
+                            id_col: ids[rows],
+                            "score": sims[rows, j].astype(np.float64),
+                        }
+                    )
+                )
+            yield pd.concat(frames, ignore_index=True)
+
+    partial = corpus_df.select(id_col, emb_col).mapInPandas(
+        score_partition, schema=out_schema
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col(id_col).asc()
+    )
+    final = (
+        partial.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .drop("__rn")
+    )
+    # map positional query index back to caller's query ids
+    mapping = F.array(*[F.lit(q) for q in query_ids])
+    return final.withColumn("query_id", mapping[F.col("query_id")])
+
+
 class Int8MatmulScorer:
     """Quantized batch scorer — the usearch variant's int8 cosine analogue
     (sharded_vector_database_usearch.py:621-627: per-query index with
@@ -408,59 +479,15 @@ class Int8MatmulScorer:
         emb_col: str = "embedding",
     ) -> DataFrame:
         q8 = self.q8
-        qids = self.query_ids
-        id_type = corpus_df.schema[id_col].dataType
-        out_schema = StructType(
-            [
-                StructField("query_id", IntegerType()),
-                StructField(id_col, id_type),
-                StructField("score", DoubleType()),
-            ]
-        )
         inv = 1.0 / (self.SCALE * self.SCALE)
 
-        def score_partition(batches):
-            import pandas as pd
+        def batch_scores(unit):
+            e8 = np.clip(np.rint(unit * 127.0), -127, 127).astype(np.int8)
+            return (e8.astype(np.int32) @ q8.astype(np.int32).T) * inv
 
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                emb = np.vstack(pdf[emb_col].to_numpy()).astype(np.float64)
-                norms = np.linalg.norm(emb, axis=1, keepdims=True)
-                norms[norms == 0.0] = 1.0
-                e8 = np.clip(np.rint(emb / norms * 127.0), -127, 127).astype(np.int8)
-                sims = (e8.astype(np.int32) @ q8.astype(np.int32).T) * inv
-                ids = pdf[id_col].to_numpy()
-                kk = min(k, sims.shape[0])
-                frames = []
-                for j in range(sims.shape[1]):
-                    rows = _partial_topk_rows(sims[:, j], ids, kk)
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": j,
-                                id_col: ids[rows],
-                                "score": sims[rows, j].astype(np.float64),
-                            }
-                        )
-                    )
-                yield pd.concat(frames, ignore_index=True)
-
-        from pyspark.sql import Window
-
-        partial = corpus_df.select(id_col, emb_col).mapInPandas(
-            score_partition, schema=out_schema
+        return _matmul_score_topk(
+            corpus_df, k, id_col, emb_col, self.query_ids, batch_scores
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col(id_col).asc()
-        )
-        final = (
-            partial.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .drop("__rn")
-        )
-        mapping = F.array(*[F.lit(q) for q in qids])
-        return final.withColumn("query_id", mapping[F.col("query_id")])
 
 
 class CosineMatmulScorer:
@@ -490,64 +517,13 @@ class CosineMatmulScorer:
         id_col: str = "id",
         emb_col: str = "embedding",
     ) -> DataFrame:
-        """Returns (query_id, id, score) with per-query exact top-k.
-
-        Each mapInPandas partition emits only its LOCAL top-k per query
-        (partial top-k, the map-side combine of TakeOrderedAndProject), so
-        the shuffle carries at most partitions * |Q| * k rows.
-        """
+        """Returns (query_id, id, score) with per-query exact top-k
+        (``_matmul_score_topk``)."""
         qn = self.qn
-        qids = self.query_ids
-        id_type = corpus_df.schema[id_col].dataType
-        out_schema = StructType(
-            [
-                StructField("query_id", IntegerType()),
-                StructField(id_col, id_type),
-                StructField("score", DoubleType()),
-            ]
-        )
 
-        def score_partition(batches):
-            import pandas as pd
+        def batch_scores(unit):
+            return unit @ qn.T  # (rows, |Q|) one BLAS call
 
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                emb = np.vstack(pdf[emb_col].to_numpy()).astype(np.float64)
-                norms = np.linalg.norm(emb, axis=1, keepdims=True)
-                norms[norms == 0.0] = 1.0
-                sims = (emb / norms) @ qn.T  # (rows, |Q|) one BLAS call
-                ids = pdf[id_col].to_numpy()
-                kk = min(k, sims.shape[0])
-                frames = []
-                for j in range(sims.shape[1]):
-                    # partial top-k per query within this batch, globally
-                    # consistent (score desc, id asc) tiebreak
-                    rows = _partial_topk_rows(sims[:, j], ids, kk)
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": j,
-                                id_col: ids[rows],
-                                "score": sims[rows, j].astype(np.float64),
-                            }
-                        )
-                    )
-                yield pd.concat(frames, ignore_index=True)
-
-        from pyspark.sql import Window
-
-        partial = corpus_df.select(id_col, emb_col).mapInPandas(
-            score_partition, schema=out_schema
+        return _matmul_score_topk(
+            corpus_df, k, id_col, emb_col, self.query_ids, batch_scores
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col(id_col).asc()
-        )
-        final = (
-            partial.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .drop("__rn")
-        )
-        # map positional query index back to caller's query ids
-        mapping = F.array(*[F.lit(q) for q in qids])
-        return final.withColumn("query_id", mapping[F.col("query_id")])

@@ -720,9 +720,9 @@ def stream_ivf_index_ingest(
         # resolve it first; a manifest-less path with no legacy
         # centroids dir means no index yet
         from minivectordb_spark import fsio
-        from minivectordb_spark.operators.ann import _load_ivf_or_empty
+        from minivectordb_spark.operators.ann import _IVF_MANIFEST
 
-        m, _ = _load_ivf_or_empty(index_path, spark)
+        m, _ = fsio.load_index_or_empty(index_path, _IVF_MANIFEST, spark)
         if not m and not os.path.exists(os.path.join(index_path, "centroids")):
             save_ivf_index(
                 embedded,

@@ -243,7 +243,7 @@ def test_compact_and_vacuum(spark, base_df, tmp_path):
         )
     before = {r["id"] for r in t.to_df().collect()}
 
-    t2 = t.compact(target_files_per_bucket=1)
+    t2 = t.compact()
     assert t2.manifest["version"] == t.manifest["version"] + 1
     assert {r["id"] for r in t2.to_df().collect()} == before
     for k in range(2):
@@ -569,3 +569,60 @@ def test_mutations_run_constant_jobs_not_per_bucket(spark, tmp_path):
     )
     assert delete_jobs < bound, f"delete dispatched {delete_jobs} jobs"
     assert t4.count() == 80
+
+
+def test_compact_runs_constant_jobs_not_per_bucket(spark, tmp_path):
+    """Compacting 16 fragmented buckets is one scan and one partitioned
+    write, not one write job per bucket; each bucket ends as one file."""
+    n_buckets = 16
+    wide = spark.createDataFrame(
+        [(str(i), [float(i), 1.0], f"m{i}") for i in range(64)],
+        "id string, embedding array<double>, tag string",
+    )
+    root = str(tmp_path / "cow_compact_jobs")
+    t = DurableVectorTable.create(wide, root, id_col="id", n_buckets=n_buckets)
+    t = t.store_embeddings_batch(
+        spark.createDataFrame(
+            [(str(1000 + i), [2.0, 2.0], "x") for i in range(128)],
+            "id string, embedding array<double>, tag string",
+        )
+    )
+
+    def n_files(tbl, k):
+        return sum(
+            1 for f in os.listdir(tbl._bucket_path(k)) if f.endswith(".parquet")
+        )
+
+    assert all(n_files(t, k) > 1 for k in range(n_buckets))
+    before = sorted(r["id"] for r in t.to_df().collect())
+    t2, jobs = _count_jobs(spark, "durable-compact", t.compact)
+    assert jobs <= 4, f"compact dispatched {jobs} jobs for {n_buckets} buckets"
+    assert all(n_files(t2, k) == 1 for k in range(n_buckets))
+    assert sorted(r["id"] for r in t2.to_df().collect()) == before
+
+
+def test_failed_manifest_write_leaves_no_torn_version(
+    spark, base_df, tmp_path, monkeypatch
+):
+    """A manifest write that fails partway must not leave a truncated
+    ``v<N>.json``: that file would make every later mutation from
+    version N-1 a ConcurrentWriteError and break ``vacuum``."""
+    root = str(tmp_path / "cow_torn")
+    t = DurableVectorTable.create(base_df, root, id_col="id", n_buckets=2)
+    rewrite = DurableVectorTable._rewrite_buckets_one_pass
+
+    def rewrite_then_poison(self, merged, rows_after, buckets):
+        rewrite(self, merged, rows_after, buckets)
+        next(iter(buckets.values()))["note"] = {"not", "json"}
+
+    monkeypatch.setattr(
+        DurableVectorTable, "_rewrite_buckets_one_pass", rewrite_then_poison
+    )
+    with pytest.raises(TypeError):
+        t.delete_embeddings_batch(["0"])
+    monkeypatch.undo()
+
+    t2 = DurableVectorTable.load(spark, root).delete_embeddings_batch(["0"])
+    assert t2.manifest["version"] == 1
+    t2.vacuum(keep_versions=1, grace_seconds=0)
+    assert DurableVectorTable.load(spark, root).count() == 39

@@ -37,8 +37,8 @@ def test_epoch_file_naming_roundtrip():
 
 def test_create_exclusive_local_winner_loser(tmp_path):
     p = str(tmp_path / "m" / "e1.json")
-    assert fsio._create_exclusive(p, '{"a": 1}')
-    assert not fsio._create_exclusive(p, '{"a": 2}')  # loser leaves winner
+    assert fsio.create_exclusive(p, '{"a": 1}')
+    assert not fsio.create_exclusive(p, '{"a": 2}')  # loser leaves winner
     assert json.loads(open(p).read()) == {"a": 1}
     # no stray temp files
     assert os.listdir(tmp_path / "m") == ["e1.json"]
@@ -47,8 +47,8 @@ def test_create_exclusive_local_winner_loser(tmp_path):
 def test_create_exclusive_hadoop_route(tmp_path, spark, monkeypatch):
     monkeypatch.setattr(fsio, "_local_path", lambda p: None)
     p = f"file://{tmp_path}/m/e1.json"
-    assert fsio._create_exclusive(p, '{"a": 1}')
-    assert not fsio._create_exclusive(p, '{"a": 2}')
+    assert fsio.create_exclusive(p, '{"a": 1}')
+    assert not fsio.create_exclusive(p, '{"a": 2}')
     assert fsio.read_manifest(p) == {"a": 1}
 
 
@@ -490,3 +490,101 @@ def test_ivf_legacy_manifestless_layout_still_serves(spark, tmp_path, vecs):
     m1, e1 = fsio.load_index_manifest(idx, IVF_M)
     assert e1 == 1 and "gen_dir" not in m1
     assert len(ivf_search_indexed(spark, idx, q, k=6, nprobe=4).collect()) == 6
+
+
+# ------------------------------------------------- one lifecycle, every family
+
+
+def test_lifecycle_on_every_family(spark, tmp_path, docs, vecs, monkeypatch):
+    """Each index family saves and appends through fsio's one lifecycle:
+    a fresh save is skipped without writing, a save that loses the CAS
+    removes its own generation and leaves the live index and its epoch
+    as they were, and an append whose generation a rebuild swapped
+    mid-flight raises."""
+    from minivectordb_spark.operators import ann, dedup
+
+    cents = ann.seed_centroids(vecs, 4)
+    new_doc = spark.createDataFrame(
+        [(1001, "a genuinely novel string nothing here shares at all")],
+        "doc_id long, text string",
+    )
+    new_vec = spark.createDataFrame(
+        [(901, [123.0, -55.5, 77.0])], "vec_id long, embedding array<double>"
+    )
+    families = {
+        IVF_M: (
+            lambda p, **kw: ann.save_ivf_index(vecs, cents, p, **kw),
+            lambda p: ann.update_ivf_index(new_vec, p),
+        ),
+        DEDUP_M: (
+            lambda p, **kw: dedup.save_dedup_index(docs, p, **kw),
+            lambda p: dedup.update_dedup_index(new_doc, p),
+        ),
+        NEARDUP_M: (
+            lambda p, **kw: dedup.save_neardup_index(
+                vecs, p, target_block_size=4, **kw
+            ),
+            lambda p: dedup.update_neardup_index(new_vec, p),
+        ),
+    }
+
+    def tree(p):
+        return sorted(
+            os.path.join(d, f) for d, _, fs in os.walk(p) for f in fs
+        )
+
+    for name, (save, update) in families.items():
+        idx = str(tmp_path / name)
+        assert save(idx)
+        live = fsio.load_index_manifest(idx, name)
+        files = tree(idx)
+
+        assert save(idx, skip_if_fresh=True) is False, name
+        assert tree(idx) == files, name
+
+        with monkeypatch.context() as mp:
+            mp.setattr(fsio, "create_exclusive", lambda *a, **k: False)
+            with pytest.raises(fsio.ConcurrentIndexMutation):
+                save(idx)
+        assert fsio.load_index_manifest(idx, name) == live, name
+        assert tree(idx) == files, name
+
+        write = fsio._write_index_tables
+
+        def write_then_rebuild(*args):
+            write(*args)
+            monkeypatch.setattr(fsio, "_write_index_tables", write)
+            save(idx)  # a rebuild swaps generations mid-append
+
+        monkeypatch.setattr(fsio, "_write_index_tables", write_then_rebuild)
+        with pytest.raises(fsio.ConcurrentIndexMutation, match="rebuilt"):
+            update(idx)
+        monkeypatch.setattr(fsio, "_write_index_tables", write)
+
+
+def test_index_lifecycle_has_one_owner():
+    """The generation lifecycle lives in fsio.py: no other package module
+    calls its primitives, so no family keeps a hand-written copy."""
+    import ast
+    import pathlib
+
+    import minivectordb_spark
+
+    primitives = {
+        "new_gen_dir",
+        "publish_index_manifest",
+        "sweep_index_generations",
+        "begin_index_append",
+        "end_index_append",
+    }
+    pkg = pathlib.Path(minivectordb_spark.__file__).parent
+    owner = pkg / "fsio.py"
+    callers = sorted(
+        f"{p.relative_to(pkg)}:{node.lineno}"
+        for p in pkg.rglob("*.py")
+        if p != owner
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "attr", getattr(node.func, "id", None)) in primitives
+    )
+    assert callers == []
