@@ -3749,27 +3749,18 @@ def q_stream_attribution_bounded(spark, sf_dir):
     # a per-batch fixed cost dominated by state-store commits, so (a)
     # n_slices 8 -> 4 (still >= 3 watermark advances — pruning stays
     # positive at every scale, total evictions are data-determined and
-    # unchanged) and (b) state_partitions=4 (state is KB-scale here;
-    # committing 32 partitions x 4 store instances per batch was the
-    # floor: measured 30.8 s -> 5.4 s at sf0.1 going 32 -> 8, and the
-    # r13 bracket 8 -> 4 shaved another ~1 s (6.7-7.3 -> 5.7-5.9 s)
-    # with identical sink rows; 4 keeps one state task per core group
-    # at gate scale — production sizes this knob to state bytes, and
-    # the x10 decade (PLANS r13) shows wall is fixed cost, counters
-    # exactly linear).  Sub-wave walls are recorded in the counters so
-    # the split stays falsifiable per round.
+    # unchanged) and (b) state stores sized to state, not scan width
+    # (committing 32 partitions x 4 store instances per batch was the
+    # floor: measured 30.8 s -> 5.4 s at sf0.1 going 32 -> 8; the x10
+    # decade (PLANS r13) shows wall is fixed cost, counters exactly
+    # linear).  The operator derives that width from the staged source's
+    # estimated bytes (plans.width.state_width).  Sub-wave walls are
+    # recorded in the counters so the split stays falsifiable per round.
     import time as _time
 
     t0 = _time.time()
     n_files = stage_time_ordered(ev, "ts", src, n_slices=4)
     t1 = _time.time()
-    # r15 re-bracket (same protocol as the r13 8->4 bracket): per-batch
-    # durationMs shows addBatch ~0.65 s + planning ~0.15 s as the floor;
-    # state is ~11k rows (< 1 MB), so halving the store instances again
-    # (4 -> 2) shaves the commit slice without touching any counter the
-    # harness records (rows/pruned identical, measured 5.2-5.7 -> 4.9-5.2
-    # stream wall).  Production sizes this knob to state BYTES; at gate
-    # scale 2 is already generous for sub-MB state.
     counters = attribution_stream_bounded(
         spark,
         src,
@@ -3778,7 +3769,6 @@ def q_stream_attribution_bounded(spark, sf_dir):
         schema="event_id long, event_type string, user_id long, ts timestamp",
         within="60 minutes",
         watermark="1 minute",
-        state_partitions=2,
     )
     counters["stage_wall_s"] = round(t1 - t0, 3)
     counters["stream_wall_s"] = round(_time.time() - t1, 3)

@@ -230,21 +230,6 @@ def write_manifest(path: str, payload: dict, spark=None) -> None:
     write_text_atomic(path, json.dumps(payload), spark)
 
 
-def invalidate_fingerprint(path: str, manifest_name: str, spark=None) -> None:
-    """Drop a persisted index's freshness fingerprint BEFORE an
-    incremental append (ordering is the contract, ADVICE r12: invalidate
-    first so a crash between steps leaves at worst a spurious rebuild —
-    never a fresh-looking index that matches no single source snapshot).
-    The rewrite is atomic via ``write_text_atomic``."""
-    p = f"{path.rstrip('/')}/{manifest_name}"
-    try:
-        m = read_manifest(p, spark)
-    except (OSError, ValueError):
-        return
-    if m.pop("fingerprint", None) is not None:
-        write_manifest(p, m, spark)
-
-
 class ConcurrentIndexMutation(RuntimeError):
     """Another writer published the epoch this mutation raced for.
 

@@ -49,7 +49,7 @@ def plan_size_bytes(df: DataFrame) -> int | None:
 #: mapInArrow pass pays a ~0.3-0.6 s wall floor (worker round-trips,
 #: Arrow stream setup) REGARDLESS of data size; the retained Catalyst
 #: expression twins pay none.  Measured crossover on the bench host
-#: (tools/crossover_probe.py): at 0.6 MB the chains tie, at 2.4 MB the
+#: (VERDICT.md, round 15 item 1): at 0.6 MB the chains tie, at 2.4 MB the
 #: kernel is ~5x faster — so below ~1 MB of (projected) input the
 #: expression chain wins, above it the kernel does.  At 100 TB every
 #: corpus is far above the floor and the kernels always run; this gate

@@ -1,8 +1,9 @@
 """Partition width: every shuffle and map-stage width decision, in one
-place — the session width (verify/probe pins), the iterative clamp, the
-heavy law and the scan width, one function each.  The only package code
-that reads ``spark.sql.shuffle.partitions`` (``session.py`` sets its
-initial value); ``shuffle_scope`` is the only code that sets it.
+place — the session width (verify/probe pins), the iterative and
+stateful-stream clamps, the heavy law and the scan width, one function
+each.  The only package code that reads ``spark.sql.shuffle.partitions``
+(``session.py`` sets its initial value); ``shuffle_scope`` is the only
+code that sets it.
 """
 
 from __future__ import annotations
@@ -63,9 +64,32 @@ def iteration_width(spark, n_rows: int) -> int:
     (default true) it refuses to coalesce below the session parallelism.
     A 100 TB graph keeps the session's full width.  Apply it with
     ``shuffle_scope``."""
-    return min(
-        session_width(spark), max(1, -(-int(n_rows) // EDGES_PER_ITER_PARTITION))
-    )
+    return _size_down(spark, n_rows, EDGES_PER_ITER_PARTITION)
+
+
+def state_width(spark, n_bytes: int | None) -> int:
+    """Width for a stateful stream over a source of ``n_bytes`` (a
+    Catalyst estimate; ``None`` keeps the session width):
+    ``clamp(ceil(n_bytes / AGG_PARTITION_BYTES), 1, session)`` — the
+    ``iteration_width`` law in bytes.
+
+    A stateful query binds its state-store partition count PERMANENTLY
+    at checkpoint creation from the session's shuffle width (AQE cannot
+    re-plan stateful streams), and each batch commits every state-store
+    instance: 4 instances x partitions delta files, plus tasks over tiny
+    slices.  So the width should track state size, not scan width
+    (measured at sf0.1: 32 partitions ~3.7 s/batch, 8 ~1.1 s/batch,
+    identical sink and counters).  The state never exceeds the source,
+    so the source bytes bound it from above.  Apply it with
+    ``shuffle_scope`` around ``start()``."""
+    if n_bytes is None:
+        return session_width(spark)
+    return _size_down(spark, n_bytes, AGG_PARTITION_BYTES)
+
+
+def _size_down(spark, n: int, per_partition: int) -> int:
+    """``clamp(ceil(n / per_partition), 1, session)``."""
+    return min(session_width(spark), max(1, -(-int(n) // per_partition)))
 
 
 def heavy_width(spark, n_rows: int, row_bytes: int) -> int:

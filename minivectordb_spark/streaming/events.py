@@ -114,6 +114,117 @@ def stream_events(spark: SparkSession, path: str, max_files_per_trigger: int = 1
     )
 
 
+# ---------------------------------------------------------------------------
+# The micro-batch path every ingest below shares
+# ---------------------------------------------------------------------------
+
+#: AnalysisException conditions that mean "nothing written at this path
+#: yet": no directory at all, or a directory without data files
+_NOTHING_WRITTEN = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
+def _micro_batches(stream_df: DataFrame, checkpoint: str, write_batch, *args):
+    """The writer every ingest returns: ``write_batch(batch_df, batch_id,
+    *args)`` runs on each micro-batch until the source is drained
+    (``availableNow``).  Source progress is exactly-once through
+    ``checkpoint``; the body runs at-least-once (a failed epoch replays
+    under its original id), so every ``write_batch`` is replay-safe."""
+    return (
+        stream_df.writeStream.foreachBatch(
+            lambda batch_df, batch_id: write_batch(batch_df, batch_id, *args)
+        )
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+    )
+
+
+def _read_written(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet frame at ``path``, or ``None`` when nothing has been
+    written there yet (an ingest's first micro-batch).  Every other
+    analysis error propagates — read as "no table", a schema mismatch
+    would silently switch off the uniqueness anti-join."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() in _NOTHING_WRITTEN:
+            return None
+        raise
+
+
+def _append_new(df: DataFrame, path: str, id_col: str, finish=None) -> None:
+    """The replay-safe append: left-anti-join ``df`` against the ids
+    already at ``path`` (a column-pruned scan of ``id_col``), apply
+    ``finish`` to what is left, and append it."""
+    existing = _read_written(df.sparkSession, path)
+    if existing is not None:
+        df = df.join(existing.select(id_col), id_col, "left_anti")
+    if finish is not None:
+        df = finish(df)
+    df.write.mode("append").parquet(path)
+
+
+def _gated_ingest(
+    stream_df: DataFrame,
+    checkpoint: str,
+    id_col: str,
+    gate,
+    sinks: dict,
+    after_append=None,
+):
+    """The per-batch contract of every row-gated ingest (vector,
+    decontaminated, quality, corpus-dedup, near-dup-corpus, anomaly):
+
+    1. ``dropDuplicates([id_col])`` — one row per id within the batch;
+    2. ``gate(fresh)`` — the rows the gate keeps;
+    3. per ``path: finish`` in ``sinks``, ``_append_new``: ids already at
+       ``path`` are anti-joined away, ``finish`` (route to this sink,
+       embed) runs on the rest, and they are appended;
+    4. ``after_append(kept)`` when given — the index growth.
+
+    A duplicate id across micro-batches therefore leaves exactly one
+    row, and a batch replayed after its append landed appends nothing.
+    The existence check reads only ``id_col``; at real scale the same
+    body targets a Delta MERGE or an id-bucketed layout, so the probe
+    touches one bucket, not every file.
+
+    With ``after_append`` the kept rows are eagerly localCheckpoint-ed:
+    one gate run (an index probe) serves both the appends and the hook,
+    with no read-write race against the index the hook grows.  The hook
+    gets the PRE-anti-join kept rows, so every crash point converges on
+    replay:
+
+    * crash BEFORE the table append — replay is a plain re-run.
+    * crash BETWEEN table append and hook — on replay the probe still
+      passes the batch's rows (the index does not contain them yet),
+      the table anti-join drops them (already appended, benign), and
+      the hook receives the same non-empty rows, so the index catches
+      up.  Anti-joining FIRST would hand the hook an empty frame here
+      and the index would permanently under-cover the batch.
+    * crash AFTER both — on replay the probe rejects the batch's rows
+      as duplicates of their own indexed copies; both appends are
+      empty no-ops.
+
+    Residual cost of this ordering: a row the probe passes but the
+    table anti-join drops (same id re-sent with changed, non-duplicate
+    content) gets its buckets appended to the index even though the
+    table kept the FIRST version.  Extra index rows are the documented-
+    benign direction (candidates/hits are distinct-ed; bytes reclaimed
+    at the next full rebuild)."""
+
+    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        kept = gate(batch_df.dropDuplicates([id_col]))
+        if after_append is not None:
+            kept = kept.localCheckpoint(eager=True)
+        for path, finish in sinks.items():
+            _append_new(kept, path, id_col, finish)
+        if after_append is not None:
+            after_append(kept)
+
+    return _micro_batches(stream_df, checkpoint, _write_batch)
+
+
 def stream_vector_ingest(
     stream_df: DataFrame,
     table_path: str,
@@ -124,38 +235,22 @@ def stream_vector_ingest(
 ):
     """Streaming analogue of the reference write path
     (vector_database.py:57-117): embed each micro-batch with the pluggable
-    embedder and append to the Parquet-backed vector table.
-
-    Uniqueness is enforced per micro-batch with the same anti-join the
-    batch path uses (foreachBatch gives the batch API): duplicates within
-    the micro-batch are dropped first, then ids already present in the
-    table are anti-joined away — a duplicate id replayed across
-    micro-batches leaves exactly one surviving row.  The existence check
-    reads only ``id_col`` from the table (column-pruned scan); at real
-    scale the same foreachBatch body targets a Delta MERGE or an
-    id-bucketed layout so the probe touches one bucket, not every file.
-    Source-side progress is exactly-once via the checkpoint.
+    embedder and append to the Parquet-backed vector table.  No gate:
+    uniqueness and replay follow ``_gated_ingest``, and only the rows
+    that survive its anti-join are embedded.
     """
-    from pyspark.errors import AnalysisException
-
     from minivectordb_spark.embedder import embed_column
 
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fresh = batch_df.dropDuplicates([id_col])
-        spark = batch_df.sparkSession
-        try:
-            existing_ids = spark.read.parquet(table_path).select(id_col)
-        except AnalysisException:  # first micro-batch: table not created yet
-            existing_ids = None
-        if existing_ids is not None:
-            fresh = fresh.join(existing_ids, id_col, "left_anti")
-        embedded = embed_column(fresh, text_col, out_col="embedding", model=model)
-        embedded.write.mode("append").parquet(table_path)
-
-    return (
-        stream_df.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
+    return _gated_ingest(
+        stream_df,
+        checkpoint,
+        id_col,
+        gate=lambda fresh: fresh,
+        sinks={
+            table_path: lambda new: embed_column(
+                new, text_col, out_col="embedding", model=model
+            )
+        },
     )
 
 
@@ -242,11 +337,7 @@ def stream_durable_ingest(
             t.store_embeddings_batch(new_rows)
         _note("commit_sec", t0)
 
-    return (
-        stream_df.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return _micro_batches(stream_df, checkpoint, _write_batch)
 
 
 def stream_decontaminated_ingest(
@@ -262,25 +353,21 @@ def stream_decontaminated_ingest(
     """Streaming corpus ingest with a benchmark-decontamination gate: each
     micro-batch drops documents sharing >= ``min_overlap`` distinct
     ``window``-token grams with the held-out evaluation set
-    (``operators/dedup.decontaminate``) before appending, with the same
-    per-batch uniqueness anti-join as ``stream_vector_ingest``.  This is
-    the continuous-crawl shape of the batch ``decontaminate`` query — eval
-    sets are fixed per training run, so the gate is a STATIC broadcast
-    probe inside every batch.
+    (``operators/dedup.decontaminate``) before appending; uniqueness and
+    replay follow ``_gated_ingest``.  This is the continuous-crawl shape
+    of the batch ``decontaminate`` query — eval sets are fixed per
+    training run, so the gate is a STATIC broadcast probe inside every
+    batch.
 
     The benchmark frame is eagerly localCheckpoint-ed once at wiring time:
     every micro-batch re-reads the materialized blocks instead of
     re-shingling the eval set.  Batch==stream equivalence is pinned by
     tests/test_streaming_multimodal.py."""
-    from pyspark.errors import AnalysisException
-
     from minivectordb_spark.operators.dedup import decontaminate
 
     bench = benchmark_df.select(id_col, text_col).localCheckpoint(eager=True)
 
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fresh = batch_df.dropDuplicates([id_col])
+    def _gate(fresh: DataFrame) -> DataFrame:
         flagged = decontaminate(
             fresh,
             bench,
@@ -289,83 +376,10 @@ def stream_decontaminated_ingest(
             window=window,
             min_overlap=min_overlap,
         ).select(id_col)
-        clean = fresh.join(flagged, id_col, "left_anti")
-        try:
-            existing_ids = spark.read.parquet(table_path).select(id_col)
-        except AnalysisException:
-            existing_ids = None
-        if existing_ids is not None:
-            clean = clean.join(existing_ids, id_col, "left_anti")
-        clean.write.mode("append").parquet(table_path)
+        return fresh.join(flagged, id_col, "left_anti")
 
-    return (
-        stream_df.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
-
-
-def _index_gated_ingest(
-    stream_df: DataFrame,
-    table_path: str,
-    checkpoint: str,
-    id_col: str,
-    probe_fn,
-    append_fn,
-):
-    """Shared skeleton of the persisted-index ingest gates
-    (``stream_corpus_dedup_ingest`` text / ``stream_neardup_corpus_ingest``
-    embeddings): per micro-batch, dedup ids in-batch, drop rows
-    ``probe_fn`` rejects against the index, append the probe survivors
-    minus already-ingested ids to the table, then hand the SAME eagerly-
-    checkpointed PRE-anti-join probe survivors to ``append_fn`` to grow
-    the index — one probe materialization shared by the table append and
-    the index update (no read-write race against the index being
-    updated).
-
-    Crash/replay contract (every replay converges because ``append_fn``
-    receives the pre-anti-join probe survivors, not the table-append
-    frame):
-
-    * crash BEFORE the table append — replay is a plain re-run.
-    * crash BETWEEN table append and ``append_fn`` — on replay the
-      probe still passes the batch's rows (the index does not contain
-      them yet), the table anti-join drops them (already appended,
-      benign), and ``append_fn`` receives the same non-empty probe
-      survivors, so the index catches up.  Anti-joining FIRST would
-      instead hand ``append_fn`` an empty frame here and the index
-      would permanently under-cover the batch.
-    * crash AFTER both appends — on replay the probe rejects the
-      batch's rows as duplicates of their own indexed copies, so both
-      appends are empty no-ops.
-
-    Residual cost of this ordering: a row the probe passes but the
-    table anti-join drops (same id re-sent with changed, non-duplicate
-    content) gets its buckets appended to the index even though the
-    table kept the FIRST version.  Extra index rows are the documented-
-    benign direction (candidates/hits are distinct-ed; bytes reclaimed
-    at the next full rebuild)."""
-    from pyspark.errors import AnalysisException
-
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fresh = batch_df.dropDuplicates([id_col])
-        probe_survivors = probe_fn(fresh).localCheckpoint(eager=True)
-        try:
-            existing_ids = spark.read.parquet(table_path).select(id_col)
-        except AnalysisException:
-            existing_ids = None
-        survivors = probe_survivors
-        if existing_ids is not None:
-            survivors = survivors.join(existing_ids, id_col, "left_anti")
-        survivors.write.mode("append").parquet(table_path)
-        if append_fn is not None:
-            append_fn(probe_survivors)
-
-    return (
-        stream_df.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
+    return _gated_ingest(
+        stream_df, checkpoint, id_col, _gate, sinks={table_path: None}
     )
 
 
@@ -393,34 +407,29 @@ def stream_corpus_dedup_ingest(
     "same id replayed recently?", this gate answers "near-duplicate of
     ANYTHING ever accepted?", which no bounded in-memory state can.
 
-    Failure/replay note: every crash point converges on replay — see the
-    ``_index_gated_ingest`` crash/replay contract (the index update runs
-    on the PRE-anti-join probe survivors, so a crash between the table
-    append and the index append self-heals instead of leaving the index
-    permanently under-covered).  Re-appended bucket/shingle rows are
-    benign for correctness (candidates are distinct-ed, verify hits are
-    distinct-ed) — they cost index bytes only, reclaimed at the next
-    full ``save_dedup_index`` rebuild; the table append itself is
-    guarded by the same per-batch uniqueness anti-join as
-    ``stream_vector_ingest``."""
+    Uniqueness, replay and the crash points of the index update follow
+    ``_gated_ingest``.  Re-appended bucket/shingle rows are benign for
+    correctness (candidates and verify hits are distinct-ed) — they cost
+    index bytes only, reclaimed at the next full ``save_dedup_index``
+    rebuild."""
     from minivectordb_spark.operators.dedup import (
         dedup_against_indexed,
         update_dedup_index,
     )
 
-    return _index_gated_ingest(
+    return _gated_ingest(
         stream_df,
-        table_path,
         checkpoint,
         id_col,
-        probe_fn=lambda fresh: dedup_against_indexed(
+        gate=lambda fresh: dedup_against_indexed(
             fresh, index_path, text_col=text_col, id_col=id_col,
             threshold=threshold,
         ),
-        append_fn=(
+        sinks={table_path: None},
+        after_append=(
             (
-                lambda survivors: update_dedup_index(
-                    survivors.select(id_col, text_col), index_path,
+                lambda kept: update_dedup_index(
+                    kept.select(id_col, text_col), index_path,
                     text_col=text_col, id_col=id_col,
                 )
             )
@@ -448,27 +457,26 @@ def stream_neardup_corpus_ingest(
     scan), appends the cosine-survivors, and with ``update_index``
     appends their buckets/embeddings back so later batches dedup against
     earlier ones.  Cross-batch "near-duplicate of any embedding ever
-    accepted?" with the state on disk; same replay-benign contract as
-    the text gate (distinct-ed candidates/hits; table append uniqueness
-    anti-joined)."""
+    accepted?" with the state on disk; uniqueness and replay follow
+    ``_gated_ingest``, with the text gate's benign re-appends."""
     from minivectordb_spark.operators.dedup import (
         neardup_against_indexed,
         update_neardup_index,
     )
 
-    return _index_gated_ingest(
+    return _gated_ingest(
         stream_df,
-        table_path,
         checkpoint,
         id_col,
-        probe_fn=lambda fresh: neardup_against_indexed(
+        gate=lambda fresh: neardup_against_indexed(
             fresh, index_path, emb_col=emb_col, id_col=id_col,
             threshold=threshold, max_probes=max_probes,
         ),
-        append_fn=(
+        sinks={table_path: None},
+        after_append=(
             (
-                lambda survivors: update_neardup_index(
-                    survivors.select(id_col, emb_col), index_path,
+                lambda kept: update_neardup_index(
+                    kept.select(id_col, emb_col), index_path,
                     emb_col=emb_col, id_col=id_col,
                 )
             )
@@ -513,8 +521,6 @@ def stream_neardup_ingest(
     connected-components retains {a} — the standard trade of any
     single-pass dedup, documented not hidden.
     """
-    from pyspark.errors import AnalysisException
-
     from minivectordb_spark.embedder import embed_column
     from minivectordb_spark.operators.ann import (
         default_projection_planes,
@@ -554,10 +560,7 @@ def stream_neardup_ingest(
         ).localCheckpoint()
 
         # against-table: probe only the partitions this batch can touch
-        try:
-            existing = spark.read.parquet(table_path)
-        except AnalysisException:
-            existing = None
+        existing = _read_written(spark, table_path)
         if existing is not None:
             probes = random_projection_probes(
                 survivors, planes, id_col=id_col, emb_col="embedding"
@@ -609,11 +612,7 @@ def stream_neardup_ingest(
         )
         out.write.partitionBy("lsh_bucket").mode("append").parquet(table_path)
 
-    return (
-        stream_df.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return _micro_batches(stream_df, checkpoint, _write_batch)
 
 
 def stream_quality_ingest(
@@ -632,42 +631,29 @@ def stream_quality_ingest(
     (``operators/text.hash_classifier_score`` — map-only, weights are
     expression literals) and only documents with ``score >= min_score``
     (and ``< max_score`` when given — CCNet-style band selection) are
-    appended, with the same per-batch uniqueness anti-join as the other
-    ingest gates.  The model is FROZEN at wiring time, exactly how a
-    production quality filter deploys a fitted classifier; because the
-    gate is a pure per-row expression, this is the cheapest of the
-    streaming gates — no state, no broadcast, no probe table.
+    appended; uniqueness and replay follow ``_gated_ingest``.  The model
+    is FROZEN at wiring time, exactly how a production quality filter
+    deploys a fitted classifier; because the gate is a pure per-row
+    expression, this is the cheapest of the streaming gates — no state,
+    no broadcast, no probe table.
 
     Batch==stream equivalence is pinned by
     tests/test_streaming_multimodal.py."""
-    from pyspark.errors import AnalysisException
-
     from minivectordb_spark.operators.text import hash_classifier_score
 
     frozen = [float(w) for w in weights]
 
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fresh = batch_df.dropDuplicates([id_col])
+    def _gate(fresh: DataFrame) -> DataFrame:
         scored = hash_classifier_score(
             fresh, frozen, bias=bias, text_col=text_col, id_col=id_col
         )
         keep = scored.filter(F.col("score") >= min_score)
         if max_score is not None:
             keep = keep.filter(F.col("score") < max_score)
-        kept = fresh.join(keep.select(id_col), id_col)
-        try:
-            existing_ids = spark.read.parquet(table_path).select(id_col)
-        except AnalysisException:
-            existing_ids = None
-        if existing_ids is not None:
-            kept = kept.join(existing_ids, id_col, "left_anti")
-        kept.write.mode("append").parquet(table_path)
+        return fresh.join(keep.select(id_col), id_col)
 
-    return (
-        stream_df.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
+    return _gated_ingest(
+        stream_df, checkpoint, id_col, _gate, sinks={table_path: None}
     )
 
 
@@ -696,8 +682,6 @@ def stream_ivf_index_ingest(
     gates; at real scale the id column rides a Delta/Iceberg table and
     the probe is a MERGE."""
     import os
-
-    from pyspark.errors import AnalysisException
 
     from minivectordb_spark.embedder import embed_column
     from minivectordb_spark.operators.ann import (
@@ -731,23 +715,14 @@ def stream_ivf_index_ingest(
                 id_col=id_col,
             )
             return
-        try:
-            indexed_ids = spark.read.parquet(
-                fsio.gen_data(index_path, m, "assignments")
-            ).select(id_col)
-        except AnalysisException:
-            indexed_ids = None
+        indexed = _read_written(spark, fsio.gen_data(index_path, m, "assignments"))
         novel = embedded
-        if indexed_ids is not None:
-            novel = embedded.join(indexed_ids, id_col, "left_anti")
+        if indexed is not None:
+            novel = embedded.join(indexed.select(id_col), id_col, "left_anti")
         if novel.limit(1).count():
             update_ivf_index(novel, index_path, id_col=id_col)
 
-    return (
-        stream_df.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-    )
+    return _micro_batches(stream_df, checkpoint, _write_batch)
 
 
 def stream_source_stats_ingest(
@@ -785,16 +760,9 @@ def stream_source_stats_ingest(
     |sources|-row aggregate + one anti-join against the hash store —
     never a corpus-wide pass.  Batch==stream equivalence AND replay
     idempotence are pinned by tests/test_streaming_multimodal.py."""
-
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _source_stats_write_batch(
-            batch_df, batch_id, stats_path, text_col, source_col
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
+    return _micro_batches(
+        stream_df, checkpoint, _source_stats_write_batch,
+        stats_path, text_col, source_col,
     )
 
 
@@ -811,11 +779,8 @@ def _source_stats_write_batch(
     excludes the batch's OWN partition (so a replay after a mid-batch
     failure reproduces — not skips — its first-seen rows).  Module-level
     so the replay contract is directly unit-testable."""
-    from pyspark.errors import AnalysisException
-
     from minivectordb_spark.operators.text import source_per_doc
 
-    spark = batch_df.sparkSession
     per_doc = source_per_doc(batch_df, text_col, source_col)
     per_doc.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -824,16 +789,15 @@ def _source_stats_write_batch(
         F.sum("__q").cast("decimal(28,6)").alias("qsum"),
     ).write.mode("overwrite").parquet(f"{stats_path}/partials/batch={batch_id}")
     fresh = per_doc.select("source", "__h").distinct()
-    try:
-        seen = (
-            spark.read.parquet(f"{stats_path}/hashes")
-            .where(F.col("batch") != F.lit(int(batch_id)))
-            .select("source", "__h")
-        )
-    except AnalysisException:
-        seen = None
+    seen = _read_written(batch_df.sparkSession, f"{stats_path}/hashes")
     if seen is not None:
-        fresh = fresh.join(seen, ["source", "__h"], "left_anti")
+        fresh = fresh.join(
+            seen.where(F.col("batch") != F.lit(int(batch_id))).select(
+                "source", "__h"
+            ),
+            ["source", "__h"],
+            "left_anti",
+        )
     # materialize BEFORE the overwrite deletes the target partition —
     # the anti-join's scan must never race the delete of batch={id}
     fresh = fresh.localCheckpoint(eager=True)
@@ -910,15 +874,9 @@ def stream_heavy_hitters_ingest(
     candidate-cardinality aggregate — never corpus-wide."""
     from minivectordb_spark.operators.sketches import _hh_k
 
-    k = _hh_k(theta)
-
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _heavy_hitters_write_batch(batch_df, batch_id, store_path, col, k)
-
-    return (
-        stream_df.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
+    return _micro_batches(
+        stream_df, checkpoint, _heavy_hitters_write_batch,
+        store_path, col, _hh_k(theta),
     )
 
 
@@ -1004,14 +962,8 @@ def stream_rollup_ingest(
     ``read_rollup`` folds the state log by the monoid ⊕ and equals a
     batch full recompute bit-exactly (the decimal sum is associative and
     order-independent) — pinned by the batch==stream equivalence test."""
-
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _rollup_write_batch(batch_df, batch_id, store_path, keys, value_col)
-
-    return (
-        stream_df.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
+    return _micro_batches(
+        stream_df, checkpoint, _rollup_write_batch, store_path, keys, value_col
     )
 
 
@@ -1170,7 +1122,6 @@ def attribution_stream_bounded(
     within: str = "60 minutes",
     watermark: str = "1 minute",
     timeout: int = 300,
-    state_partitions: int | None = None,
 ) -> dict:
     """Run the attribution join as a BOUNDED-STATE stream over a
     time-ordered staged source (``stage_time_ordered``) and return the
@@ -1207,25 +1158,18 @@ def attribution_stream_bounded(
     over batch ids 0..lastProgress.batchId — a gap raises instead of
     returning silently-short counters.
 
-    ``state_partitions`` (r11): number of state-store partitions for
-    this query, bound PERMANENTLY at checkpoint creation from the
-    session's shuffle-partition count (AQE cannot re-plan stateful
-    streams).  A stateful query's per-batch fixed cost is dominated by
-    committing every state-store instance every batch — 4 instances x
-    partitions delta files + 32-task stages over tiny slices — so
-    partitions should track STATE SIZE, not the session's batch scan
-    width (measured at sf0.1: 32 partitions -> ~3.7 s/batch, 8 -> ~1.1
-    s/batch, identical sink and counters).  The query runs inside
-    ``plans.width.shuffle_scope`` (set before ``start()``, always
-    restored).
+    State-store width: ``plans.width.state_width`` of the staged
+    source's estimated bytes (``operators.util.plan_size_bytes`` — no
+    job runs), applied with ``shuffle_scope`` around ``start()`` and
+    always restored.
     """
     import json as _json
     import time as _time
-    from contextlib import nullcontext
 
     from pyspark.sql.streaming import StreamingQueryListener
 
-    from minivectordb_spark.plans.width import shuffle_scope
+    from minivectordb_spark.operators.util import plan_size_bytes
+    from minivectordb_spark.plans.width import shuffle_scope, state_width
 
     class _ProgressCollector(StreamingQueryListener):
         def __init__(self):
@@ -1243,13 +1187,11 @@ def attribution_stream_bounded(
         def onQueryTerminated(self, event):
             pass
 
+    width = state_width(spark, plan_size_bytes(spark.read.schema(schema).parquet(src)))
     collector = _ProgressCollector()
     spark.streams.addListener(collector)
-    scope = nullcontext()
-    if state_partitions:
-        scope = shuffle_scope(spark, state_partitions)
     try:
-        with scope:
+        with shuffle_scope(spark, width):
             stream = (
                 spark.readStream.schema(schema)
                 .option("maxFilesPerTrigger", 1)
@@ -1357,15 +1299,12 @@ def stream_anomaly_ingest(
     float-free integer tests, so a replayed batch reproduces
     bit-identical decisions.
 
-    Replay safety: both sinks get the per-batch dropDuplicates + anti-join
-    uniqueness of the other ingest gates, so an at-least-once foreachBatch
-    replay cannot duplicate a row in either path.  Map-only per batch:
-    the stats frame is |keys| rows, broadcast; no state store.
+    Both sinks follow ``_gated_ingest``'s uniqueness and replay
+    contract.  Map-only per batch: the stats frame is |keys| rows,
+    broadcast; no state store.
 
     Batch==stream equivalence is pinned by
     tests/test_streaming_multimodal.py."""
-    from pyspark.errors import AnalysisException
-
     from minivectordb_spark.operators.anomaly import mad_flag, zscore_flag
 
     if flagger not in ("zscore", "mad"):
@@ -1373,34 +1312,19 @@ def stream_anomaly_ingest(
     flag_fn = zscore_flag if flagger == "zscore" else mad_flag
     frozen = [tuple(s) for s in stats]
 
-    def _append_unique(df: DataFrame, path: str) -> None:
-        spark = df.sparkSession
-        try:
-            existing = spark.read.parquet(path).select(id_col)
-        except AnalysisException:
-            existing = None
-        if existing is not None:
-            df = df.join(existing, id_col, "left_anti")
-        df.write.mode("append").parquet(path)
-
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fresh = batch_df.dropDuplicates([id_col])
-        flagged = flag_fn(
+    return _gated_ingest(
+        stream_df,
+        checkpoint,
+        id_col,
+        gate=lambda fresh: flag_fn(
             fresh, frozen, value_col, key_col, z=z, min_n=min_n, scale=scale
-        )
-        _append_unique(
-            flagged.filter(~F.col("is_outlier")).drop(
+        ),
+        sinks={
+            table_path: lambda new: new.filter(~F.col("is_outlier")).drop(
                 "is_outlier", "side", "value_scaled"
             ),
-            table_path,
-        )
-        _append_unique(
-            flagged.filter(F.col("is_outlier")).drop("is_outlier"),
-            quarantine_path,
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
+            quarantine_path: lambda new: new.filter(F.col("is_outlier")).drop(
+                "is_outlier"
+            ),
+        },
     )

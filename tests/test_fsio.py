@@ -35,16 +35,6 @@ def test_local_missing_raises_filenotfound(tmp_path):
         fsio.read_manifest(str(tmp_path / "absent.json"))
 
 
-def test_invalidate_fingerprint_drops_key_only(tmp_path):
-    d = str(tmp_path)
-    fsio.write_manifest(f"{d}/m.json", {"k": 3, "fingerprint": "abc"})
-    fsio.invalidate_fingerprint(d, "m.json")
-    assert fsio.read_manifest(f"{d}/m.json") == {"k": 3}
-    # idempotent, and a missing manifest is a no-op
-    fsio.invalidate_fingerprint(d, "m.json")
-    fsio.invalidate_fingerprint(d, "missing.json")
-
-
 def test_local_path_classification():
     assert fsio._local_path("/tmp/x") == "/tmp/x"
     assert fsio._local_path("file:///tmp/x") == "/tmp/x"
@@ -80,26 +70,26 @@ def test_hadoop_roundtrip_atomic_rename(tmp_path, spark, hadoop_route):
 def test_hadoop_invalidate_and_delete(tmp_path, spark, hadoop_route):
     d = f"file://{tmp_path}"
     fsio.write_manifest(f"{d}/m.json", {"x": 1, "fingerprint": "g"})
-    fsio.invalidate_fingerprint(d, "m.json")
-    assert fsio.read_manifest(f"{d}/m.json") == {"x": 1}
-    fsio.delete(f"{d}/m.json")
+    m, epoch = fsio.load_index_manifest(d, "m.json")
+    fsio.begin_index_append(d, "m.json", m, epoch)
+    assert fsio.load_index_manifest(d, "m.json") == ({"x": 1}, 1)
+    fsio.delete(f"{d}/_manifest", recursive=True)
     with pytest.raises(FileNotFoundError):
-        fsio.read_manifest(f"{d}/m.json")
+        fsio.load_index_manifest(d, "m.json")
 
 
 def test_index_manifest_io_survives_hadoop_route(tmp_path, spark, hadoop_route):
     """The dedup-index manifest cycle (save -> skip-if-fresh probe shape
-    -> invalidate) through the Hadoop API — what a hdfs:// index dir
-    exercises on a cluster."""
+    -> fingerprint drop of an append) through the Hadoop API — what a
+    hdfs:// index dir exercises on a cluster."""
     d = f"file://{tmp_path}/idx"
     m = {"id_col": "doc_id", "k": 5, "fingerprint": "abc"}
     fsio.write_manifest(f"{d}/_dedup_index_manifest.json", m)
     got = fsio.read_manifest(f"{d}/_dedup_index_manifest.json")
     assert got == m
-    fsio.invalidate_fingerprint(d, "_dedup_index_manifest.json")
-    assert "fingerprint" not in fsio.read_manifest(
-        f"{d}/_dedup_index_manifest.json"
-    )
+    fsio.begin_index_append(d, "_dedup_index_manifest.json", got, 0)
+    now, _ = fsio.load_index_manifest(d, "_dedup_index_manifest.json")
+    assert "fingerprint" not in now
 
 
 class _RenameRefusingFS:

@@ -529,11 +529,14 @@ def test_kcore_lineage_truncated_single_degree_exchange(spark, sf):
 def test_iteration_shuffle_scope_sizes_and_restores(spark):
     """r11: iterative loops scope shuffle partitions to the measured
     working set — p = clamp(ceil(n / EDGES_PER_ITER_PARTITION), 1,
-    session) — and the scope always restores, exception-safe."""
+    session) — and the scope always restores, exception-safe.  Stateful
+    streams take the same clamp over the source's estimated bytes."""
     from minivectordb_spark.plans.width import (
+        AGG_PARTITION_BYTES,
         EDGES_PER_ITER_PARTITION,
         iteration_width,
         shuffle_scope,
+        state_width,
     )
 
     conf = "spark.sql.shuffle.partitions"
@@ -542,6 +545,10 @@ def test_iteration_shuffle_scope_sizes_and_restores(spark):
     # a 100 TB graph keeps the session width
     assert iteration_width(spark, 10**12) == int(prev)
     assert iteration_width(spark, 5 * EDGES_PER_ITER_PARTITION) == min(int(prev), 5)
+    assert state_width(spark, 1 << 20) == 1
+    assert state_width(spark, 2 * AGG_PARTITION_BYTES) == min(int(prev), 2)
+    # no estimate, or 100 TB of state: the session width
+    assert state_width(spark, None) == state_width(spark, 10**14) == int(prev)
     with shuffle_scope(spark, iteration_width(spark, 100)) as p:
         assert p == 1 and spark.conf.get(conf) == "1"
     assert spark.conf.get(conf) == prev

@@ -1074,8 +1074,6 @@ def test_bounded_state_attribution_prunes_and_matches_batch(spark, tmp_path):
     parts_before = spark.conf.get("spark.sql.shuffle.partitions")
     counters = attribution_stream_bounded(
         spark, src, out, ck, schema=cols, watermark="1 minute",
-        state_partitions=5,  # r11 knob: state stores sized to state, not
-        # scan width; the session conf must come back untouched
     )
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts_before
     got = sorted(
