@@ -145,6 +145,7 @@ class DurableVectorTable:
         n_buckets: int = 16,
     ) -> "DurableVectorTable":
         """Write ``df`` as generation 0 of every bucket."""
+        path = _local_root(path)
         spark = df.sparkSession
         if os.path.exists(os.path.join(path, _MANIFEST_DIR, _LATEST)):
             raise ConcurrentWriteError(
@@ -201,6 +202,7 @@ class DurableVectorTable:
         ``version``: every published manifest is immutable and generations
         are only removed by ``vacuum``, so any un-vacuumed version reads
         exactly the snapshot it was committed as."""
+        path = _local_root(path)
         if version is None:
             with open(os.path.join(path, _MANIFEST_DIR, _LATEST)) as f:
                 version = int(f.read().strip())
@@ -593,6 +595,16 @@ class ConcurrentWriteError(RuntimeError):
     about to publish.  The losing mutation's generation dirs are orphans
     (no manifest references them) and are reclaimed by ``vacuum``; the
     caller should re-``load`` the table and retry on the new snapshot."""
+
+
+def _local_root(path: str) -> str:
+    """The table root as a driver-local path: a plain path, or the path of
+    a ``file://`` URI.  The table's file IO goes through ``os``, so any
+    other scheme is refused here, before anything is written."""
+    local = fsio._local_path(path)
+    if local is None:
+        raise ValueError(f"a durable table needs a local path or a file:// URI, got {path!r}")
+    return local
 
 
 def _publish(path: str, manifest: dict) -> None:

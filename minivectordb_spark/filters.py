@@ -1,4 +1,4 @@
-"""Mongo-like filter DSL -> Catalyst ``Column`` compiler.
+"""Mongo-like filter DSL -> a Catalyst ``Column`` or a driver-side row mask.
 
 Reference semantics (minivectordb/vector_database.py:157-386, duplicated in
 the sharded variants), preserved exactly where observable:
@@ -42,22 +42,47 @@ Known deviations (typed-map edges, intentional):
    (vector_database.py:172); that accidental substring mode is not
    supported — use an explicit list-typed field.
 
-Everything compiles to ONE boolean ``Column`` so Catalyst can reorder,
-short-circuit and push the conjuncts down to the Parquet scan — the
-declarative replacement for the reference's inverted-index probes.
+The DSL is parsed once (``parse_filters``: dict lists, the operator check,
+and the typed map each operand addresses), then emitted one of two ways:
+
+- ``emit_column`` / ``compile_filters``: ONE boolean ``Column`` so Catalyst
+  can reorder, short-circuit and push the conjuncts down to the Parquet
+  scan — the declarative replacement for the reference's inverted-index
+  probes;
+- ``arrow_mask``: a NumPy row mask over the typed maps of a snapshot
+  collected to the driver (VectorTable's small-snapshot gate), with
+  exactly the rows the Column keeps, Spark's double ordering included.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
-from typing import Any, Mapping, Sequence
+import math
+import operator
+from functools import reduce
+from typing import Any, Mapping, NamedTuple, Sequence
+from zoneinfo import ZoneInfo
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 VALID_OPS = ("$gt", "$gte", "$lt", "$lte", "$ne", "$in")
 
+#: typed map of each operand kind (FIXTURES.md F1), as VectorTable names them
+_MAP_COLUMNS = {
+    "str": "meta_str",
+    "num": "meta_num",
+    "ts": "meta_ts",
+    "bool": "meta_bool",
+    "arr": "meta_arr",
+}
+
 _OP_BUILDERS = {
+    "$eq": lambda c, v: c == v,
     "$gt": lambda c, v: c > v,
     "$gte": lambda c, v: c >= v,
     "$lt": lambda c, v: c < v,
@@ -148,30 +173,30 @@ class TypedMapResolver(FieldResolver):
         meta_bool: str = "meta_bool",
         meta_arr: str = "meta_arr",
     ):
-        self._cols = {
-            "str": meta_str,
-            "num": meta_num,
-            "ts": meta_ts,
-            "bool": meta_bool,
-            "arr": meta_arr,
-        }
+        self._cols = {"str": meta_str, "num": meta_num, "ts": meta_ts, "bool": meta_bool, "arr": meta_arr}
 
     def _map_for(self, operand: Any, in_op: bool = False) -> str:
-        if in_op:
-            return self._cols["arr"]
-        if isinstance(operand, bool):
-            return self._cols["bool"]
-        if isinstance(operand, (int, float)):
-            return self._cols["num"]
-        if isinstance(operand, (_dt.datetime, _dt.date)):
-            return self._cols["ts"]
-        return self._cols["str"]
+        return self._cols[_kind(operand, in_op)]
 
     def value(self, key: str, operand: Any, in_op: bool = False) -> Column:
         return F.col(self._map_for(operand, in_op)).getItem(key)
 
     def present(self, key: str, operand: Any, in_op: bool = False) -> Column:
         return self.value(key, operand, in_op).isNotNull()
+
+
+def _kind(operand: Any, in_op: bool = False) -> str:
+    """The typed map an operand addresses: by operand type, bool before
+    int (Python bools are ints); a ``$in`` operand addresses the lists."""
+    if in_op:
+        return "arr"
+    if isinstance(operand, bool):
+        return "bool"
+    if isinstance(operand, (int, float)):
+        return "num"
+    if isinstance(operand, (_dt.datetime, _dt.date)):
+        return "ts"
+    return "str"
 
 
 class CompositeResolver(FieldResolver):
@@ -194,14 +219,8 @@ class CompositeResolver(FieldResolver):
 
 
 def _lit(operand: Any) -> Column:
-    if isinstance(operand, bool):
-        return F.lit(operand)
-    if isinstance(operand, int):
+    if isinstance(operand, int) and not isinstance(operand, bool):
         return F.lit(operand).cast("double")
-    if isinstance(operand, float):
-        return F.lit(operand)
-    if isinstance(operand, (_dt.datetime, _dt.date)):
-        return F.lit(operand)
     return F.lit(operand)
 
 
@@ -227,35 +246,6 @@ def _safe(pred: Column) -> Column:
     return F.coalesce(pred, F.lit(False))
 
 
-def _compile_op(key: str, op: str, operand: Any, resolver: FieldResolver) -> Column:
-    if op not in VALID_OPS:
-        raise ValueError(f"Invalid operator: {op}")
-    if op == "$in":
-        value, present = _resolve(resolver, key, operand, in_op=True)
-        operand_lit = F.lit(str(operand)) if not isinstance(operand, str) else F.lit(operand)
-        return present & F.array_contains(value, operand_lit)
-    value, present = _resolve(resolver, key, operand)
-    return present & _OP_BUILDERS[op](value, _lit(operand))
-
-
-def _compile_spec(key: str, spec: Any, resolver: FieldResolver) -> Column:
-    """One ``{key: spec}`` pair -> predicate.
-
-    Plain value = equality; operator dict = conjunction of ALL ops
-    (documented superset of vector_database.py:164's first-op-only quirk).
-    """
-    if isinstance(spec, Mapping):
-        if not spec:
-            return _false()
-        pred = None
-        for op, operand in spec.items():
-            p = _compile_op(key, op, operand, resolver)
-            pred = p if pred is None else (pred & p)
-        return pred
-    value, present = _resolve(resolver, key, spec)
-    return present & (value == _lit(spec))
-
-
 def _as_dict_list(filters: Any) -> list[dict]:
     if filters is None:
         return []
@@ -271,51 +261,107 @@ def _as_dict_list(filters: Any) -> list[dict]:
     raise ValueError(f"Filter must be a dict or list of dicts, got {type(filters)}")
 
 
-def compile_and(and_filters: Any, resolver: FieldResolver) -> Column | None:
-    """AND across every (key, spec) pair of every dict (vector_database.py:238-318)."""
-    dicts = _as_dict_list(and_filters)
-    pred = None
-    for d in dicts:
-        for key, spec in d.items():
-            p = _compile_spec(key, spec, resolver)
-            pred = p if pred is None else (pred & p)
-    return pred
+# ---------------- one parse ----------------
 
 
-def compile_or(or_filters: Any, resolver: FieldResolver) -> Column | None:
-    """OR across dicts AND across keys within a dict (vector_database.py:157-236).
+class Term(NamedTuple):
+    """One comparison: the stored value of ``key`` ``op`` ``operand``.
+    ``op`` is ``"$eq"`` for a plain value; ``kind`` names the typed map
+    the operand addresses (``_kind``)."""
 
-    Empty dicts are dropped (vector_database.py:371); all-empty input means
-    "no OR constraint".
-    """
-    dicts = [d for d in _as_dict_list(or_filters) if d]
-    if not dicts:
+    key: str
+    op: str
+    operand: Any
+    kind: str
+
+
+class ParsedFilters(NamedTuple):
+    """A filter composition parsed once, for either emitter.  A spec is a
+    tuple of terms (their conjunction) or ``None`` (constant false: an
+    empty operator dict, or an operator dict used as an exclude value)."""
+
+    and_specs: tuple
+    or_specs: tuple
+    exclude_specs: tuple
+
+
+def _parse_spec(key: str, spec: Any) -> tuple | None:
+    """One ``{key: spec}`` pair.  Plain value = equality; operator dict =
+    conjunction of ALL ops (documented superset of vector_database.py:164's
+    first-op-only quirk)."""
+    if not isinstance(spec, Mapping):
+        return (Term(key, "$eq", spec, _kind(spec)),)
+    if not spec:
         return None
-    pred = None
-    for d in dicts:
-        for key, spec in d.items():
-            p = _compile_spec(key, spec, resolver)
-            pred = p if pred is None else (pred | p)
-    return pred
+    terms = []
+    for op, operand in spec.items():
+        if op not in VALID_OPS:
+            raise ValueError(f"Invalid operator: {op}")
+        terms.append(Term(key, op, operand, _kind(operand, op == "$in")))
+    return tuple(terms)
 
 
-def compile_exclude(exclude_filter: Any, resolver: FieldResolver) -> Column | None:
-    """Equality-only union of matches, to be negated (vector_database.py:320-352).
+def parse_filters(
+    metadata_filter: Any = None,
+    exclude_filter: Any = None,
+    or_filters: Any = None,
+) -> ParsedFilters:
+    """AND across every pair of every ``metadata_filter`` dict
+    (vector_database.py:238-318); OR across every pair of every
+    ``or_filters`` dict, empty dicts dropped (vector_database.py:157-236,
+    :371); ``exclude_filter`` is equality-only (vector_database.py:320-352):
+    an operator dict there compares a dict against the stored scalar and
+    never matches."""
+    def pairs(filters):
+        return [(k, s) for d in _as_dict_list(filters) for k, s in d.items()]
 
-    An operator-dict value never matches in the reference (dict == scalar is
-    always False) -> constant-false contribution here.
-    """
-    dicts = _as_dict_list(exclude_filter)
-    pred = None
-    for d in dicts:
-        for key, spec in d.items():
-            if isinstance(spec, Mapping):
-                p = _false()
-            else:
-                value, present = _resolve(resolver, key, spec)
-                p = _safe(present & (value == _lit(spec)))
-            pred = p if pred is None else (pred | p)
-    return pred
+    return ParsedFilters(
+        tuple(_parse_spec(k, s) for k, s in pairs(metadata_filter)),
+        tuple(_parse_spec(k, s) for k, s in pairs(or_filters)),
+        tuple(None if isinstance(s, Mapping) else _parse_spec(k, s) for k, s in pairs(exclude_filter)),
+    )
+
+
+def _in_operand(operand: Any) -> str:
+    """``$in`` tests the operand's string form against the stored list."""
+    return operand if isinstance(operand, str) else str(operand)
+
+
+def _emit(parsed: ParsedFilters, term, false, true, safe):
+    """The composition of vector_database.py:354-386 over one emitter's
+    ``term`` / ``false`` / ``true`` / ``safe``:
+    ``AND ∧ OR ∧ ¬EXCLUDE`` — all rows when there is no filter at all;
+    exclude subtracts."""
+    def spec(s):
+        return false() if s is None else reduce(operator.and_, map(term, s))
+
+    parts = []
+    if parsed.and_specs:
+        parts.append(reduce(operator.and_, map(spec, parsed.and_specs)))
+    if parsed.or_specs:
+        parts.append(reduce(operator.or_, map(spec, parsed.or_specs)))
+    if parsed.exclude_specs:
+        excl = (false() if s is None else safe(spec(s)) for s in parsed.exclude_specs)
+        parts.append(~safe(reduce(operator.or_, excl)))
+    return reduce(operator.and_, parts) if parts else true()
+
+
+# ---------------- emitter 1: a Catalyst Column ----------------
+
+
+def emit_column(parsed: ParsedFilters, resolver: FieldResolver | None = None) -> Column:
+    """The parsed filter as ONE boolean ``Column``; every term carries its
+    presence conjunct (rule 1)."""
+    resolver = resolver or TypedMapResolver()
+
+    def term(t: Term) -> Column:
+        in_op = t.op == "$in"
+        value, present = _resolve(resolver, t.key, t.operand, in_op=in_op)
+        if in_op:
+            return present & F.array_contains(value, F.lit(_in_operand(t.operand)))
+        return present & _OP_BUILDERS[t.op](value, _lit(t.operand))
+
+    return _emit(parsed, term, _false, lambda: F.lit(True), _safe)
 
 
 def compile_filters(
@@ -324,26 +370,76 @@ def compile_filters(
     or_filters: Any = None,
     resolver: FieldResolver | None = None,
 ) -> Column:
-    """Full composition (vector_database.py:354-386):
+    """Full composition (vector_database.py:354-386) as one ``Column``;
+    ``lit(True)`` when there are no filters at all."""
+    return emit_column(parse_filters(metadata_filter, exclude_filter, or_filters), resolver)
 
-    ``AND_pred ∧ OR_pred ∧ ¬EXCLUDE_pred`` — start = all rows when no AND
-    filter; AND∩OR; exclude subtracts.  Returns ``lit(True)`` when no
-    filters at all.
-    """
-    resolver = resolver or TypedMapResolver()
-    parts: list[Column] = []
-    and_pred = compile_and(metadata_filter, resolver)
-    if and_pred is not None:
-        parts.append(and_pred)
-    or_pred = compile_or(or_filters, resolver)
-    if or_pred is not None:
-        parts.append(or_pred)
-    excl_pred = compile_exclude(exclude_filter, resolver)
-    if excl_pred is not None:
-        parts.append(~_safe(excl_pred))
-    if not parts:
-        return F.lit(True)
-    pred = parts[0]
-    for p in parts[1:]:
-        pred = pred & p
-    return pred
+
+# ---------------- emitter 2: a NumPy mask over Arrow maps ----------------
+
+
+def _eq_gt(stored: np.ndarray, operand: Any, kind: str):
+    """(stored == operand, stored > operand) in Spark's ordering.  Doubles
+    order NaN above +inf with NaN == NaN, and -0.0 == 0.0 (an IEEE compare
+    gets the NaN rows wrong); ints compare as doubles."""
+    if kind != "num":
+        return stored == operand, stored > operand
+    v = float(operand)
+    nan, v_nan = np.isnan(stored), math.isnan(v)
+    a, v = np.where(nan, 0.0, stored), 0.0 if v_nan else v
+    return (nan == v_nan) & (a == v), (nan & (not v_nan)) | ((nan == v_nan) & (a > v))
+
+
+def _ts_operand(operand, session_tz: str) -> int:
+    """A timestamp operand as Spark reads its literal: a datetime the way
+    ``TimestampType().toInternal`` converts it (naive = driver local
+    time); a date as midnight in the session time zone (Spark casts the
+    DATE literal to TIMESTAMP)."""
+    if not isinstance(operand, _dt.datetime):
+        operand = _dt.datetime.combine(operand, _dt.time(), ZoneInfo(session_tz))
+    return TimestampType().toInternal(operand)
+
+
+def _lookup(m: pa.Array, key: str) -> tuple[np.ndarray, pa.Array]:
+    """The rows of map array ``m`` where ``m[key]`` is not NULL, and those
+    values.  One vectorized compare over the flattened keys (a map holds a
+    key at most once): ``pc.map_lookup`` takes ~5 ms per key at 5,000
+    rows."""
+    offsets = m.offsets.to_numpy()
+    rows = np.repeat(np.arange(len(m)), np.diff(offsets))
+    keys = m.keys.slice(offsets[0], len(rows))
+    hit = pc.equal(keys, key).fill_null(False).to_numpy(zero_copy_only=False)
+    pos = np.flatnonzero(hit & m.is_valid().to_numpy(zero_copy_only=False)[rows])
+    values = m.items.slice(offsets[0], len(rows)).take(pa.array(pos, pa.int64()))
+    valid = values.is_valid()
+    return rows[pos][valid.to_numpy(zero_copy_only=False)], values.filter(valid)
+
+
+def arrow_mask(parsed: ParsedFilters, maps: Mapping[str, pa.Array], session_tz: str) -> np.ndarray:
+    """The parsed filter as a boolean row mask over a VectorTable's typed
+    metadata maps (``maps``: column name -> Arrow map array, the names of
+    a default ``TypedMapResolver``), with the same rows as the Column
+    emitter's: a null map or a missing key never matches, ``$in`` tests
+    operand ∈ the ``meta_arr`` list.  A SQL NULL from a term becomes
+    False here; the composition only ANDs, ORs and negates through
+    ``_safe``, so the kept rows are the same."""
+    n = len(next(iter(maps.values())))
+
+    def term(t: Term) -> np.ndarray:
+        mask = np.zeros(n, dtype=bool)
+        rows, values = _lookup(maps[_MAP_COLUMNS[t.kind]], t.key)
+        if t.op == "$in":
+            hit = pc.equal(pc.list_flatten(values), _in_operand(t.operand))
+            parents = pc.list_parent_indices(values).to_numpy()
+            mask[rows[parents[hit.fill_null(False).to_numpy(zero_copy_only=False)]]] = True
+            return mask
+        if t.operand is None:  # a NULL literal: every comparison is NULL
+            return mask
+        operand = t.operand
+        if t.kind == "ts":
+            values, operand = values.cast(pa.int64()), _ts_operand(operand, session_tz)
+        eq, gt = _eq_gt(values.to_numpy(zero_copy_only=False), operand, t.kind)
+        mask[rows] = {"$eq": eq, "$ne": ~eq, "$gt": gt, "$gte": gt | eq, "$lt": ~(gt | eq), "$lte": ~gt}[t.op]
+        return mask
+
+    return _emit(parsed, term, lambda: np.zeros(n, dtype=bool), lambda: np.ones(n, dtype=bool), lambda m: m)

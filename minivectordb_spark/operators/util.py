@@ -76,6 +76,19 @@ def use_arrow_kernel(df: DataFrame) -> bool:
 #: loop skips is a set of jobs plus a checkpoint barrier.
 SMALL_GRAPH_MAX_EDGES = 1_000_000
 
+#: Estimated bytes (``plan_size_bytes``) of a VectorTable snapshot's
+#: search columns (id, embedding_norm and the typed metadata maps) at or
+#: under which its first search collects them to the driver with one
+#: Arrow job, and every later search of that snapshot runs there with no
+#: Spark job.  It bounds driver memory, not time: at this size the driver
+#: side still wins (140,000 rows x 64 dims in a 16-bucket durable table,
+#: estimated at 63.5 MB; local[4] on 4 vCPUs, warm, min of 5: a search
+#: takes 27 ms on the driver vs 1.03 s distributed, 60 ms vs 0.68 s under
+#: a two-key filter; the first search pays a 1.2 s collect, and the
+#: driver process peaks at 283 MB RSS).  An in-memory table built from
+#: driver lists has no estimate and stays distributed.
+SMALL_SNAPSHOT_MAX_BYTES = 64 << 20
+
 _AQE = "spark.sql.adaptive.enabled"
 _GATE_LOCK = threading.Lock()
 

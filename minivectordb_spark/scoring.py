@@ -25,7 +25,12 @@ Scoring paths:
   fold, and ``sql_double`` writes each query component so that Spark
   reads back the same double, so every score is bit-identical.
 - ``knn_batch``: many queries in one job, a broadcast cross join scored
-  with the same fold over two columns (``cosine_sim_cols``).
+  with the same fold over two columns (``cosine_sim_cols``);
+  ``knn_batch_unit`` scores stored unit vectors with ``knn``'s
+  prenormalized fold instead.
+- ``unit_scores`` / ``top_rows``: the prenormalized fold and the
+  (score desc, id asc) top-k on the driver, over a snapshot already in
+  driver memory; bit-identical to ``knn(prenormalized=True)``.
 - ``CosineMatmulScorer``: many queries via an Arrow-batched pandas UDF
   doing one BLAS matmul per batch.  The query matrix is closed over by
   the UDF lambda and shipped once per task (broadcast-variable
@@ -188,8 +193,6 @@ def knn_batch(
     For very large query batches use :class:`CosineMatmulScorer` (BLAS
     matmul per Arrow batch) and the same window.
     """
-    from pyspark.sql import Window
-
     from minivectordb_spark.operators.util import materialize
     from minivectordb_spark.plans.width import ensure_parallelism
 
@@ -221,11 +224,49 @@ def knn_batch(
             norm_b=F.col("__q_norm"),
         ),
     ).drop("__q_emb", "__q_norm", "__c_norm")
-    # two-stage top-k: a (query, input-partition)-local rank first, so no
-    # reducer ever holds a whole query's copy of the corpus (the skew of a
-    # plain per-query window); the global rank then sees at most
-    # partitions*k rows per query
-    order = [F.col(score_col).desc(), F.col(corpus_id_col).asc()]
+    return _top_k_per_query(scored, k, query_id_col, corpus_id_col, score_col)
+
+
+def knn_batch_unit(
+    queries: Sequence[Sequence[float]],
+    corpus_df: DataFrame,
+    k: int = 5,
+    emb_col: str = "embedding_norm",
+    id_col: str = "id",
+) -> DataFrame:
+    """``knn_batch`` over a stored unit-vector column: each query is
+    ``l2_normalize``-d on the driver and scored with the fold of
+    ``knn(prenormalized=True)``, so every score has the bits a single
+    search gives it, and no corpus norm is folded per call.  Returns
+    (corpus columns..., ``query_id`` = position in ``queries``,
+    ``score``)."""
+    from minivectordb_spark.plans.width import ensure_parallelism
+
+    spark = corpus_df.sparkSession
+    q = spark.createDataFrame(
+        [(i, l2_normalize(e)) for i, e in enumerate(queries)],
+        "query_id int, __q_unit array<double>",
+    )
+    scored = (
+        ensure_parallelism(corpus_df)
+        .crossJoin(F.broadcast(q))
+        .withColumn("score", dot_cols(F.col(emb_col), F.col("__q_unit")))
+        .drop("__q_unit")
+    )
+    return _top_k_per_query(scored, k, "query_id", id_col, "score")
+
+
+def _top_k_per_query(
+    scored: DataFrame, k: int, query_id_col: str, id_col: str, score_col: str
+) -> DataFrame:
+    """Two-stage per-query top-k in (score desc, id asc) order: a
+    (query, input-partition)-local rank first, so no reducer ever holds
+    a whole query's copy of the corpus (the skew of a plain per-query
+    window); the global rank then sees at most partitions*k rows per
+    query."""
+    from pyspark.sql import Window
+
+    order = [F.col(score_col).desc(), F.col(id_col).asc()]
     w_local = Window.partitionBy(F.col(query_id_col), F.col("__pid")).orderBy(*order)
     local = (
         scored.withColumn("__pid", F.spark_partition_id())
@@ -239,6 +280,42 @@ def knn_batch(
         .filter(F.col("__rn") <= k)
         .drop("__rn")
     )
+
+
+def unit_scores(unit_t: np.ndarray, query: Sequence[float]) -> np.ndarray:
+    """``knn(prenormalized=True)``'s score of every row, on the driver.
+    ``unit_t`` is the stored float32 unit vectors, one row per component
+    (d, n).  The fold is ``dot_sql``'s operation order: acc = acc +
+    e_j * q_j over ``l2_normalize(query)``, left to right in double, a
+    separate multiply and add per component (no BLAS, no FMA), so each
+    score has the bits Spark gives it.  Widening float32 to double is
+    exact."""
+    acc = np.zeros(unit_t.shape[1])
+    prod = np.empty_like(acc)
+    with np.errstate(all="ignore"):
+        for col, qj in zip(unit_t, l2_normalize(query)):
+            np.multiply(col, qj, out=prod, dtype=np.float64)
+            np.add(acc, prod, out=acc)
+    return acc
+
+
+def order_key(score: float, row_id: str) -> tuple:
+    """Sort key of Spark's ``(score desc, id asc)``: NaN sorts above
+    +inf, -0.0 ties with 0.0, and ids compare by code point, which is
+    UTF-8 byte order."""
+    return (0, 0.0, row_id) if math.isnan(score) else (1, -score, row_id)
+
+
+def top_rows(scores: np.ndarray, ids: np.ndarray, k: int) -> list[int]:
+    """Indices of the ``k`` best rows in ``order_key`` order: a partial
+    partition finds the k-th best score, every row tied at it stays a
+    candidate, and only the candidates are sorted exactly."""
+    n = len(scores)
+    if k <= 0 or n == 0:
+        return []
+    key = np.where(np.isnan(scores), np.inf, scores)
+    cand = range(n) if k >= n else np.flatnonzero(key >= np.partition(key, n - k)[n - k]).tolist()
+    return sorted(cand, key=lambda r: order_key(scores[r], ids[r]))[:k]
 
 
 def maxsim_score(

@@ -10,7 +10,8 @@ store_embeddings_batch (:83), delete_embedding (:119), batch delete
 - 0 < |metadata| < |ids|      -> ValueError (vector_database.py:98-99)
 - batch delete: empty / None  -> ValueError (sharded_vector_database.py:208-217)
 - embedding dim mismatch      -> ValueError (the reference registers D on
-  first insert, vector_database.py:64-65; we validate eagerly)
+  first insert, vector_database.py:64-65; we validate eagerly), and so
+  does a search with a query of the wrong length
 
 Execution model: the table is an immutable DataFrame snapshot with schema
 
@@ -23,6 +24,9 @@ left-anti joins; there is no row renumbering (the reference rebuilds its
 id_map per delete, vector_database.py:138-152 — positions don't exist here).
 ``embedding_norm`` is the immutable analogue of the reference's in-place
 faiss.normalize_L2 (quirk §2.1: we never mutate the stored vector).
+Searches of a small snapshot run on the driver, over its search columns
+collected once (the small-snapshot gate, ``VectorTable._snapshot``): the
+reference's in-memory flat scan, with Spark's exact scores and order.
 Persistence is Parquet (pickle -> columnar files); ``max_records_per_file``
 is the shard_size analogue (sharded_vector_database.py:9).
 
@@ -37,7 +41,12 @@ from __future__ import annotations
 import datetime as _dt
 import json
 import math
+import threading
 from typing import Any, Iterable, Sequence
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,8 +63,9 @@ from pyspark.sql.types import (
 )
 
 from minivectordb_spark.autocut import apply_autocut, autocut_distances
-from minivectordb_spark.filters import TypedMapResolver, compile_filters
-from minivectordb_spark.scoring import knn
+from minivectordb_spark.filters import arrow_mask, emit_column, parse_filters
+from minivectordb_spark.operators import util
+from minivectordb_spark.scoring import knn, knn_batch_unit, order_key, top_rows, unit_scores
 
 # VectorTable.dim not computed yet (None is a resolved value: no rows)
 _UNRESOLVED = object()
@@ -121,6 +131,95 @@ def _reassemble_metadata(row) -> dict:
     return out
 
 
+_TS = TimestampType()
+_META_COLS = ("meta_str", "meta_num", "meta_ts", "meta_bool", "meta_arr")
+#: the columns a search reads, and all that the small-snapshot gate collects
+_SEARCH_COLS = ("id", "embedding_norm") + _META_COLS
+
+
+class _Snapshot:
+    """A snapshot's search columns in driver memory: ids, the stored
+    float32 unit vectors one row per component (d, n), and the typed
+    metadata maps as Arrow arrays."""
+
+    def __init__(self, ids: np.ndarray, unit_t: np.ndarray, maps: dict, session_tz: str):
+        self.ids, self.unit_t, self.maps, self.session_tz = ids, unit_t, maps, session_tz
+
+    @classmethod
+    def collect(cls, df: DataFrame) -> "_Snapshot | None":
+        """One ``toArrow`` job.  ``None`` when the rows have different
+        widths: only the distributed fold defines those scores."""
+        table = df.select(*_SEARCH_COLS).toArrow()
+        cols = {c: table.column(c).combine_chunks() for c in _SEARCH_COLS}
+        emb = cols["embedding_norm"]
+        n = len(emb)
+        widths = pc.list_value_length(emb).to_numpy(zero_copy_only=False)
+        if n and (widths != widths[0]).any():
+            return None
+        flat = pc.list_flatten(emb).to_numpy(zero_copy_only=False)
+        unit_t = np.ascontiguousarray(flat.reshape(n, -1 if n else 0).T)
+        maps = {c: cols[c] for c in _META_COLS}
+        tz = df.sparkSession.conf.get("spark.sql.session.timeZone")
+        return cls(cols["id"].to_numpy(zero_copy_only=False), unit_t, maps, tz)
+
+    def search(self, queries: Sequence, parsed, k: int) -> list[tuple[list, list, list]]:
+        """One (ids, scores, metadatas) triple per query: the filter mask,
+        then ``unit_scores`` and ``top_rows`` over the kept rows."""
+        rows = np.flatnonzero(arrow_mask(parsed, self.maps, self.session_tz))
+        ids = self.ids[rows]
+        out = []
+        for q in queries:
+            if len(rows) == 0 or k <= 0:
+                out.append(([], [], []))
+                continue
+            if len(q) != self.unit_t.shape[0]:
+                raise _dim_mismatch(len(q), self.unit_t.shape[0])
+            scores = unit_scores(self.unit_t, q)[rows]
+            top = top_rows(scores, ids, k)
+            out.append(([ids[r] for r in top], [float(scores[r]) for r in top], self._metas(rows[top])))
+        return out
+
+    def _metas(self, rows: np.ndarray) -> list[dict]:
+        """Metadata of ``rows`` as ``collect()`` + ``_reassemble_metadata``
+        return it: Arrow gives timestamps as UTC instants, a collected
+        row as pyspark's ``TimestampType.fromInternal`` makes them (naive
+        local time)."""
+        idx = pa.array(rows, pa.int64())
+        taken = {c: self.maps[c].take(idx) for c in _META_COLS}
+        taken["meta_ts"] = taken["meta_ts"].cast(pa.map_(pa.string(), pa.int64()))
+        lists = {c: taken[c].to_pylist() for c in _META_COLS}
+        out = []
+        for i in range(len(rows)):
+            row = {c: None if lists[c][i] is None else dict(lists[c][i]) for c in _META_COLS}
+            if row["meta_ts"]:
+                row["meta_ts"] = {k: _TS.fromInternal(v) for k, v in row["meta_ts"].items()}
+            out.append(_reassemble_metadata(row))
+        return out
+
+
+def _dim_mismatch(got: int, want: int | None = None) -> ValueError:
+    want = "" if want is None else f"expected {want}, "
+    return ValueError(f"Embedding dimension mismatch: {want}query has {got} components")
+
+
+def _finish(ids: list, scores: list, metas: list, autocut: bool, distances: bool):
+    """The single-search result triple: optional autocut, and 1 - sim
+    ascending for ``distances=True``."""
+    if distances:
+        dists = [1.0 - s for s in scores]
+        if autocut and len(dists) > 1:
+            remove = set(autocut_distances(dists))
+            if remove:
+                keep = [i for i in range(len(dists)) if i not in remove]
+                ids = [ids[i] for i in keep]
+                dists = [dists[i] for i in keep]
+                metas = [metas[i] for i in keep]
+        return ids, dists, metas
+    if autocut and len(scores) > 1:
+        ids, scores, metas = apply_autocut(ids, scores, metas)
+    return ids, scores, metas
+
+
 class VectorTable:
     """Immutable snapshot of an embedding-record table.
 
@@ -133,6 +232,10 @@ class VectorTable:
         self.spark = spark
         self.df = df
         self._dim = dim
+        # the small-snapshot gate's state: (df it describes, its size
+        # estimate, its collected _Snapshot, or None before the collect)
+        self._snap: tuple = (None, None, None)
+        self._snap_lock = threading.Lock()
 
     @property
     def dim(self) -> int | None:
@@ -391,6 +494,27 @@ class VectorTable:
     def count(self) -> int:
         return self.df.count()
 
+    def _snapshot(self) -> _Snapshot | None:
+        """The small-snapshot gate.  At or under
+        ``util.SMALL_SNAPSHOT_MAX_BYTES`` of estimated search columns, the
+        snapshot collected to the driver (by the first caller, once;
+        concurrent callers wait for it); ``None`` above the budget — the
+        distributed path.  A plan without an estimate counts as infinitely
+        large.  The estimate runs no job and is taken once per ``df``: a
+        reassigned ``df`` never reads the rows of the old one."""
+        with self._snap_lock:
+            df, size, snap = self._snap
+            if df is not self.df:
+                df, snap = self.df, None
+                size = util.plan_size_bytes(df.select(*_SEARCH_COLS))
+                size = math.inf if size is None else size
+            if size <= util.SMALL_SNAPSHOT_MAX_BYTES and snap is None:
+                # False: rows of different widths, which only the
+                # distributed fold scores
+                snap = _Snapshot.collect(df) or False
+            self._snap = (df, size, snap)
+            return snap if size <= util.SMALL_SNAPSHOT_MAX_BYTES and snap else None
+
     def find_most_similar(
         self,
         embedding,
@@ -410,34 +534,32 @@ class VectorTable:
         sharded_vector_database_usearch.py:629-637) with the sign-flipped
         autocut (autocut_distances).
 
-        One Spark job: the filtered top-k ``collect``.  An empty or fully
-        filtered table needs no probe first; the top-k is then empty and
-        the call returns ``([], [], [])``."""
-        pred = compile_filters(metadata_filter, exclude_filter, or_filters, TypedMapResolver())
+        Under the small-snapshot gate (``_snapshot``) the first search of
+        this object runs one Spark job, the Arrow collect, and every
+        later one runs none.  Above it a search is one Spark job, the
+        filtered top-k ``collect``.  Both paths return the same ids and
+        bit-identical scores.  An empty or fully filtered table comes back
+        as ``([], [], [])``; a query of the wrong length raises
+        ``ValueError``."""
+        parsed = parse_filters(metadata_filter, exclude_filter, or_filters)
+        snap = self._snapshot()
+        if snap is not None:
+            return _finish(*snap.search([embedding], parsed, k)[0], autocut, distances)
         # score the stored unit vectors (embedding_norm) — the write-once
         # normalization means search does one dot per row, no norm fold
         # (the immutable analogue of FAISS's normalized IndexFlatIP)
         result = knn(
             self.df, embedding, k=k, emb_col="embedding_norm", id_col="id",
-            pred=pred, prenormalized=True,
+            pred=emit_column(parsed), prenormalized=True,
         )
         rows = result.collect()
+        # zip_with pads a shorter array with nulls: a null score is a query
+        # of the wrong length
+        if any(r["score"] is None for r in rows):
+            raise _dim_mismatch(len(embedding))
         ids = [r["id"] for r in rows]
         scores = [float(r["score"]) for r in rows]
-        metas = [_reassemble_metadata(r) for r in rows]
-        if distances:
-            dists = [1.0 - s for s in scores]
-            if autocut and len(dists) > 1:
-                remove = set(autocut_distances(dists))
-                if remove:
-                    keep = [i for i in range(len(dists)) if i not in remove]
-                    ids = [ids[i] for i in keep]
-                    dists = [dists[i] for i in keep]
-                    metas = [metas[i] for i in keep]
-            return ids, dists, metas
-        if autocut and len(scores) > 1:
-            ids, scores, metas = apply_autocut(ids, scores, metas)
-        return ids, scores, metas
+        return _finish(ids, scores, [_reassemble_metadata(r) for r in rows], autocut, distances)
 
     def find_most_similar_batch(
         self,
@@ -447,31 +569,27 @@ class VectorTable:
         or_filters: Any = None,
         k: int = 5,
     ) -> list[tuple[list, list, list]]:
-        """Multi-query search — the natural Spark extension (SURVEY.md §2.7):
-        all queries run in ONE job (broadcast queries x corpus + two-stage
-        per-query top-k) instead of a Python loop of single searches.
+        """Multi-query search — the natural Spark extension (SURVEY.md §2.7).
         Returns one (ids, scores, metadatas) triple per query, in input
-        order."""
-        from minivectordb_spark.scoring import knn_batch
-
-        pred = compile_filters(metadata_filter, exclude_filter, or_filters, TypedMapResolver())
-        queries_df = self.spark.createDataFrame(
-            [(i, [float(x) for x in e]) for i, e in enumerate(embeddings)],
-            "query_id int, query_embedding array<float>",
-        )
-        out = knn_batch(
-            queries_df,
-            self.df.filter(pred),
-            k=k,
-            corpus_id_col="id",
-            corpus_emb_col="embedding",
-        ).collect()
+        order, each equal bit for bit to ``find_most_similar`` of that
+        query.  Under the small-snapshot gate it runs on the driver; above
+        it all queries run in ONE job (broadcast queries x corpus +
+        two-stage per-query top-k, ``scoring.knn_batch_unit``) instead of
+        a Python loop of single searches."""
+        parsed = parse_filters(metadata_filter, exclude_filter, or_filters)
+        snap = self._snapshot()
+        if snap is not None:
+            return snap.search(embeddings, parsed, k)
+        corpus = self.df.filter(emit_column(parsed))
+        out = knn_batch_unit(embeddings, corpus, k=k).collect()
         by_q: dict[int, list] = {}
         for r in out:
+            if r["score"] is None:
+                raise _dim_mismatch(len(embeddings[r["query_id"]]))
             by_q.setdefault(r["query_id"], []).append(r)
         results = []
         for i in range(len(embeddings)):
-            rows = sorted(by_q.get(i, []), key=lambda r: (-r["score"], r["id"]))
+            rows = sorted(by_q.get(i, []), key=lambda r: order_key(r["score"], r["id"]))
             results.append(
                 (
                     [r["id"] for r in rows],

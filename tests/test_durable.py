@@ -626,3 +626,29 @@ def test_failed_manifest_write_leaves_no_torn_version(
     assert t2.manifest["version"] == 1
     t2.vacuum(keep_versions=1, grace_seconds=0)
     assert DurableVectorTable.load(spark, root).count() == 39
+
+
+def test_file_uri_create_upsert_load_roundtrip(spark, base_df, tmp_path, monkeypatch):
+    """A ``file://`` URI names the same table as its path: create, upsert
+    and load through the URI, with nothing written to the working
+    directory and no staging dir left at the root.  Any other scheme is
+    refused before anything is written."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    root = tmp_path / "cow_uri"
+    uri = root.as_uri()
+    t = DurableVectorTable.create(base_df, uri, id_col="id", n_buckets=4)
+    batch = spark.createDataFrame(
+        [("3", [9.0, 9.0], "replaced"), ("100", [7.0, 7.0], "new")],
+        "id string, embedding array<double>, tag string",
+    )
+    t.upsert_embeddings_batch(batch)
+    for opened in (DurableVectorTable.load(spark, uri), DurableVectorTable.load(spark, str(root))):
+        rows = {r["id"]: r["tag"] for r in opened.to_df().collect()}
+        assert len(rows) == 41 and rows["3"] == "replaced" and rows["100"] == "new"
+    assert os.listdir(cwd) == []
+    assert not [d for d in os.listdir(root) if d.startswith("_staging_")]
+    with pytest.raises(ValueError, match="local path"):
+        DurableVectorTable.create(base_df, "s3a://bucket/table", id_col="id")
+    assert os.listdir(cwd) == []

@@ -40,59 +40,61 @@ def ops_table(spark):
 Q = [1.0, 2.0, 3.0, 4.0]
 
 
-def _count(table, **kw):
-    ids, scores, metas = table.find_most_similar(Q, k=999, **kw)
+def _count(paths, table, **kw):
+    ids, scores, metas = paths.same(lambda: table.find_most_similar(Q, k=999, **kw))
     assert len(ids) == len(scores) == len(metas)
     return len(ids)
 
 
 # ---- F3 typed-operator matrix (tests/test_mongolike_operators.py:42-162) ----
 
-def test_eq_value(ops_table):
-    assert _count(ops_table, metadata_filter={"value": 10}) == 10
+def test_eq_value(ops_table, snapshot_paths):
+    assert _count(snapshot_paths, ops_table, metadata_filter={"value": 10}) == 10
 
 
-def test_gte_10(ops_table):
-    assert _count(ops_table, metadata_filter={"value": {"$gte": 10}}) == 20
+def test_gte_10(ops_table, snapshot_paths):
+    assert _count(snapshot_paths, ops_table, metadata_filter={"value": {"$gte": 10}}) == 20
 
 
-def test_gte_20(ops_table):
-    assert _count(ops_table, metadata_filter={"value": {"$gte": 20}}) == 10
+def test_gte_20(ops_table, snapshot_paths):
+    assert _count(snapshot_paths, ops_table, metadata_filter={"value": {"$gte": 20}}) == 10
 
 
-def test_lt_20(ops_table):
-    assert _count(ops_table, metadata_filter={"value": {"$lt": 20}}) == 10
+def test_lt_20(ops_table, snapshot_paths):
+    assert _count(snapshot_paths, ops_table, metadata_filter={"value": {"$lt": 20}}) == 10
 
 
-def test_lte_10(ops_table):
-    assert _count(ops_table, metadata_filter={"value": {"$lte": 10}}) == 10
+def test_lte_10(ops_table, snapshot_paths):
+    assert _count(snapshot_paths, ops_table, metadata_filter={"value": {"$lte": 10}}) == 10
 
 
-def test_ne_presence_gating(ops_table):
+def test_ne_presence_gating(ops_table, snapshot_paths):
     # KEY SEMANTIC: only rows that HAVE `value` and != 10 — the 250 keyless
     # bulk rows never match (reference inverted-index gating,
     # vector_database.py:260; tests/test_mongolike_operators.py:83-89)
-    assert _count(ops_table, metadata_filter={"value": {"$ne": 10}}) == 10
+    assert _count(snapshot_paths, ops_table, metadata_filter={"value": {"$ne": 10}}) == 10
 
 
-def test_date_gte(ops_table):
-    assert _count(ops_table, metadata_filter={"date": {"$gte": dt.datetime(2021, 1, 1)}}) == 20
+def test_date_gte(ops_table, snapshot_paths):
+    assert _count(snapshot_paths, ops_table, metadata_filter={"date": {"$gte": dt.datetime(2021, 1, 1)}}) == 20
 
 
-def test_date_lt(ops_table):
-    assert _count(ops_table, metadata_filter={"date": {"$lt": dt.datetime(2022, 1, 1)}}) == 10
+def test_date_lt(ops_table, snapshot_paths):
+    assert _count(snapshot_paths, ops_table, metadata_filter={"date": {"$lt": dt.datetime(2022, 1, 1)}}) == 10
 
 
-def test_and_across_keys(ops_table):
+def test_and_across_keys(ops_table, snapshot_paths):
     n = _count(
+        snapshot_paths,
         ops_table,
         metadata_filter={"value": {"$gt": 15}, "date": {"$gt": dt.datetime(2021, 5, 5)}},
     )
     assert n == 10
 
 
-def test_or_two_dicts(ops_table):
+def test_or_two_dicts(ops_table, snapshot_paths):
     n = _count(
+        snapshot_paths,
         ops_table,
         or_filters=[
             {"value": {"$gte": 10}},
@@ -102,11 +104,12 @@ def test_or_two_dicts(ops_table):
     assert n == 20
 
 
-def test_two_ops_one_dict_conjunctive(ops_table):
+def test_two_ops_one_dict_conjunctive(ops_table, snapshot_paths):
     # documented strict-superset semantics: BOTH ops evaluated
     # (reference evaluates only $gte — same count on this data,
     # tests/test_mongolike_operators.py:129-137)
     n = _count(
+        snapshot_paths,
         ops_table,
         metadata_filter={
             "date": {"$gte": dt.datetime(2021, 1, 1), "$lte": dt.datetime(2022, 1, 1)}
@@ -115,8 +118,9 @@ def test_two_ops_one_dict_conjunctive(ops_table):
     assert n == 20
 
 
-def test_and_list_range(ops_table):
+def test_and_list_range(ops_table, snapshot_paths):
     n = _count(
+        snapshot_paths,
         ops_table,
         metadata_filter=[
             {"date": {"$gte": dt.datetime(2021, 1, 1)}},
@@ -126,8 +130,9 @@ def test_and_list_range(ops_table):
     assert n == 10
 
 
-def test_or_of_range_dicts(ops_table):
+def test_or_of_range_dicts(ops_table, snapshot_paths):
     n = _count(
+        snapshot_paths,
         ops_table,
         or_filters=[
             {"date": {"$gte": dt.datetime(2021, 1, 1)}},
@@ -137,17 +142,17 @@ def test_or_of_range_dicts(ops_table):
     assert n == 20
 
 
-def test_invalid_operator_raises(ops_table):
+def test_invalid_operator_raises(ops_table, snapshot_paths):
     with pytest.raises(ValueError, match="Invalid operator"):
-        _count(ops_table, metadata_filter={"value": {"$invalid": 10}})
+        _count(snapshot_paths, ops_table, metadata_filter={"value": {"$invalid": 10}})
     with pytest.raises(ValueError, match="Invalid operator"):
-        _count(ops_table, or_filters=[{"value": {"$invalid": 10}}])
+        _count(snapshot_paths, ops_table, or_filters=[{"value": {"$invalid": 10}}])
 
 
-def test_and_or_disjoint_empty(ops_table):
+def test_and_or_disjoint_empty(ops_table, snapshot_paths):
     # AND {value:2} ∩ OR {value:1} = ∅ (tests/test_mongolike_operators.py:233-248)
     assert (
-        _count(ops_table, metadata_filter={"value": 2}, or_filters=[{"value": 1}]) == 0
+        _count(snapshot_paths, ops_table, metadata_filter={"value": 2}, or_filters=[{"value": 1}]) == 0
     )
 
 
@@ -173,15 +178,15 @@ def sel_table(spark):
 Q8 = [1.0] * 8
 
 
-def test_k_clamping_exact(sel_table):
-    ids, _, _ = sel_table.find_most_similar(Q8, metadata_filter={"num_filter": "test_99"}, k=2)
+def test_k_clamping_exact(sel_table, snapshot_paths):
+    ids, _, _ = snapshot_paths.same(lambda: sel_table.find_most_similar(Q8, metadata_filter={"num_filter": "test_99"}, k=2))
     assert len(ids) == 2
-    ids, _, _ = sel_table.find_most_similar(Q8, metadata_filter={"num_filter": "test_99"}, k=500)
+    ids, _, _ = snapshot_paths.same(lambda: sel_table.find_most_similar(Q8, metadata_filter={"num_filter": "test_99"}, k=500))
     assert len(ids) == 5  # never padded (vector_database.py:489)
 
 
-def test_or_union_count(sel_table):
-    ids, _, _ = sel_table.find_most_similar(
+def test_or_union_count(sel_table, snapshot_paths):
+    ids, _, _ = snapshot_paths.same(lambda: sel_table.find_most_similar(
         Q8,
         or_filters=[
             {"num_filter": "test_99"},
@@ -189,12 +194,12 @@ def test_or_union_count(sel_table):
             {"num_filter": "test_20"},
         ],
         k=10,
-    )
+    ))
     assert len(ids) == 5
 
 
-def test_and_intersect_or(sel_table):
-    ids, _, _ = sel_table.find_most_similar(
+def test_and_intersect_or(sel_table, snapshot_paths):
+    ids, _, _ = snapshot_paths.same(lambda: sel_table.find_most_similar(
         Q8,
         metadata_filter={"type": "test"},
         or_filters=[
@@ -203,14 +208,14 @@ def test_and_intersect_or(sel_table):
             {"num_filter": "test_20"},
         ],
         k=500,
-    )
+    ))
     assert len(ids) == 5
 
 
-def test_and_or_singleton_dict_form(sel_table):
-    ids, _, _ = sel_table.find_most_similar(
+def test_and_or_singleton_dict_form(sel_table, snapshot_paths):
+    ids, _, _ = snapshot_paths.same(lambda: sel_table.find_most_similar(
         Q8, metadata_filter={"type": "test"}, or_filters={"num_filter": "test_101"}, k=10
-    )
+    ))
     assert ids == ["singleton"]
 
 
@@ -225,26 +230,26 @@ def in_table(spark):
     )
 
 
-def test_in_membership(in_table):
-    ids, _, _ = in_table.find_most_similar(
+def test_in_membership(in_table, snapshot_paths):
+    ids, _, _ = snapshot_paths.same(lambda: in_table.find_most_similar(
         [1.0, 1.0], metadata_filter={"custom_list": {"$in": "a"}}, k=10
-    )
+    ))
     assert ids == ["u1"]
-    ids, _, _ = in_table.find_most_similar(
+    ids, _, _ = snapshot_paths.same(lambda: in_table.find_most_similar(
         [1.0, 1.0], metadata_filter={"custom_list": {"$in": "d"}}, k=10
-    )
+    ))
     assert ids == ["u2"]
 
 
-def test_in_or_union(in_table):
-    ids, _, _ = in_table.find_most_similar(
+def test_in_or_union(in_table, snapshot_paths):
+    ids, _, _ = snapshot_paths.same(lambda: in_table.find_most_similar(
         [1.0, 1.0],
         or_filters=[
             {"custom_list": {"$in": "a"}},
             {"custom_list": {"$in": "d"}},
         ],
         k=10,
-    )
+    ))
     assert sorted(ids) == ["u1", "u2"]
 
 
@@ -263,39 +268,39 @@ def excl_table(spark):
     )
 
 
-def test_and_plus_exclude(excl_table):
-    ids, _, _ = excl_table.find_most_similar(
+def test_and_plus_exclude(excl_table, snapshot_paths):
+    ids, _, _ = snapshot_paths.same(lambda: excl_table.find_most_similar(
         [1.0, 1.0], metadata_filter={"type": "abc"}, exclude_filter={"id": "2"}, k=10
-    )
+    ))
     assert ids == ["1"]
 
 
-def test_exclude_list_of_two(excl_table):
-    ids, _, _ = excl_table.find_most_similar(
+def test_exclude_list_of_two(excl_table, snapshot_paths):
+    ids, _, _ = snapshot_paths.same(lambda: excl_table.find_most_similar(
         [1.0, 1.0], exclude_filter=[{"id": 1}, {"id": "2"}], k=10
-    )
+    ))
     assert ids == ["3"]
 
 
-def test_exclude_accumulate_drains(excl_table):
+def test_exclude_accumulate_drains(excl_table, snapshot_paths):
     # iterative exclude loop drains all rows (tests/test_vector_database.py:69-97)
     excluded = []
     seen = []
     for _ in range(3):
-        ids, _, metas = excl_table.find_most_similar(
+        ids, _, metas = snapshot_paths.same(lambda: excl_table.find_most_similar(
             [1.0, 1.0], exclude_filter=[{"id": v} for v in excluded], k=1
-        )
+        ))
         assert len(ids) == 1
         seen.append(ids[0])
         excluded.append(metas[0]["id"])
     assert sorted(seen) == ["1", "2", "3"]
-    ids, _, _ = excl_table.find_most_similar(
+    ids, _, _ = snapshot_paths.same(lambda: excl_table.find_most_similar(
         [1.0, 1.0], exclude_filter=[{"id": v} for v in excluded], k=1
-    )
+    ))
     assert ids == []
 
 
-def test_one_exclude_dict_two_keys_unions(spark):
+def test_one_exclude_dict_two_keys_unions(spark, snapshot_paths):
     # one exclude dict with two keys removes rows matching EITHER key
     # (tests/test_vector_database.py:99-117)
     t = VectorTable.empty(spark).store_embeddings_batch(
@@ -303,13 +308,13 @@ def test_one_exclude_dict_two_keys_unions(spark):
         [[0.1, 0.9], [0.9, 0.1]],
         [{"type": "abc"}, {"kind": "other"}],
     )
-    ids, _, _ = t.find_most_similar(
+    ids, _, _ = snapshot_paths.same(lambda: t.find_most_similar(
         [1.0, 1.0], exclude_filter={"kind": "other", "type": "abc"}, k=10
-    )
+    ))
     assert ids == []
 
 
-def test_multikey_and(spark):
+def test_multikey_and(spark, snapshot_paths):
     # {type:abc, category:first} -> exactly id '1' (tests/test_vector_database.py:132-147)
     t = VectorTable.empty(spark).store_embeddings_batch(
         ["1", "2", "3", "4"],
@@ -321,16 +326,16 @@ def test_multikey_and(spark):
             {"type": "xyz", "category": "second"},
         ],
     )
-    ids, _, _ = t.find_most_similar([1.0, 1.0], metadata_filter={"type": "abc", "category": "first"}, k=10)
+    ids, _, _ = snapshot_paths.same(lambda: t.find_most_similar([1.0, 1.0], metadata_filter={"type": "abc", "category": "first"}, k=10))
     assert ids == ["1"]
 
 
-def test_exclude_operator_dict_never_matches(excl_table):
+def test_exclude_operator_dict_never_matches(excl_table, snapshot_paths):
     # equality-only exclude: an operator-dict exclude is a no-op
     # (vector_database.py:320-352 compares dict == scalar -> False)
-    ids, _, _ = excl_table.find_most_similar(
+    ids, _, _ = snapshot_paths.same(lambda: excl_table.find_most_similar(
         [1.0, 1.0], exclude_filter={"id": {"$gte": 0}}, k=10
-    )
+    ))
     assert len(ids) == 3
 
 

@@ -1,6 +1,7 @@
 """Property-based filter-semantics test: Hypothesis generates random filter
-compositions; the compiled Catalyst predicate must agree with an
-independent pure-Python evaluator of the reference semantics
+compositions; both emitters of the parsed filter (the Catalyst predicate
+and the Arrow row mask) must agree with an independent pure-Python
+evaluator of the reference semantics
 (vector_database.py:157-386: presence gating, typed comparisons,
 AND-across-keys, OR-within-dict, equality-only exclude, conjunctive
 operator dicts)."""
@@ -12,8 +13,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from minivectordb_spark.filters import TypedMapResolver, compile_filters
-from minivectordb_spark.table import VectorTable
+from minivectordb_spark.filters import TypedMapResolver, arrow_mask, compile_filters, parse_filters
+from minivectordb_spark.table import VECTOR_SCHEMA, VectorTable
 
 KEYS = ["alpha", "beta", "gamma"]
 NUM_VALUES = [1, 5, 10, 20]
@@ -52,6 +53,20 @@ def prop_table(spark):
     )
     t.df.cache().count()
     return t
+
+
+def _emitted_ids(df, arrow, mf, exf, orf):
+    """(ids the Column emitter keeps, ids the Arrow mask keeps)."""
+    pred = compile_filters(mf, exf, orf, TypedMapResolver())
+    by_column = {r["id"] for r in df.filter(pred).select("id").collect()}
+    maps = {c: arrow.column(c).combine_chunks() for c in arrow.column_names if c.startswith("meta_")}
+    mask = arrow_mask(parse_filters(mf, exf, orf), maps, "UTC")
+    return by_column, set(arrow.column("id").filter(mask).to_pylist())
+
+
+@pytest.fixture(scope="module")
+def prop_arrow(prop_table):
+    return prop_table.df.select("id", "meta_str", "meta_num", "meta_ts", "meta_bool", "meta_arr").toArrow()
 
 
 # ---- pure-python reference evaluator (independent reimplementation) ----
@@ -144,8 +159,67 @@ maybe_exclude = st.one_of(st.none(), eq_dict, st.lists(eq_dict, min_size=1, max_
 
 @settings(max_examples=30, deadline=None, suppress_health_check=list(HealthCheck))
 @given(mf=maybe_filters, orf=maybe_filters, exf=maybe_exclude)
-def test_compiled_filter_matches_python_reference(prop_table, mf, orf, exf):
-    pred = compile_filters(mf, exf, orf, TypedMapResolver())
-    got = {r["id"] for r in prop_table.df.filter(pred).select("id").collect()}
+def test_compiled_filter_matches_python_reference(prop_table, prop_arrow, mf, orf, exf):
+    by_column, by_mask = _emitted_ids(prop_table.df, prop_arrow, mf, exf, orf)
     expected = {rid for rid, _, md in ROWS if _py_eval(md, mf, exf, orf)}
-    assert got == expected, f"mf={mf} orf={orf} exf={exf}"
+    assert by_column == expected, f"mf={mf} orf={orf} exf={exf}"
+    assert by_mask == expected, f"mf={mf} orf={orf} exf={exf}"
+
+
+def test_emitters_agree_on_spark_edge_values(spark):
+    """Fixed cases the evaluator above does not model: Spark orders a
+    stored NaN above every number and equal to a NaN operand, ints
+    compare as doubles, booleans order false < true, a date operand is
+    midnight in the session time zone, a NULL map or a missing key never
+    matches (not even ``$ne``), and ``$in`` with a non-list operand
+    tests its string form."""
+    rows = [
+        ("nan", {"n": float("nan")}, {"flag": True}, {"t": dt.datetime(2021, 1, 1, 12)}, {"l": ["5", "x"]}),
+        ("five", {"n": 5.0}, {"flag": False}, {"t": dt.datetime(2021, 1, 1)}, {"l": ["True"]}),
+        ("negz", {"n": -0.0}, None, {"t": dt.datetime(2020, 12, 31, 23, 59, 59, 999999)}, {"l": []}),
+        ("none", None, None, None, None),
+        ("other", {"m": 1.0}, {"other": True}, {"u": dt.datetime(2021, 1, 1)}, {"k": ["5"]}),
+    ]
+    df = spark.createDataFrame(
+        [(rid, [1.0], [1.0], 1.0, {"s": rid}, num, ts, b, arr, "{}") for rid, num, b, ts, arr in rows],
+        VECTOR_SCHEMA,
+    )
+    arrow = df.toArrow()
+    cases = [
+        ({"n": {"$gt": 100}}, {"nan"}),
+        ({"n": float("nan")}, {"nan"}),
+        ({"n": {"$ne": float("nan")}}, {"five", "negz"}),
+        ({"n": {"$lt": float("nan")}}, {"five", "negz"}),
+        ({"n": {"$gte": float("nan")}}, {"nan"}),
+        ({"n": 0}, {"negz"}),
+        ({"n": {"$lte": 0.0}}, {"negz"}),
+        ({"n": 5}, {"five"}),
+        ({"n": {"$ne": 5}}, {"nan", "negz"}),
+        ({"flag": {"$gt": False}}, {"nan"}),
+        ({"flag": {"$lt": True}}, {"five"}),
+        ({"flag": {"$ne": True}}, {"five"}),
+        ({"t": {"$gte": dt.date(2021, 1, 1)}}, {"nan", "five"}),
+        ({"t": {"$lt": dt.date(2021, 1, 1)}}, {"negz"}),
+        ({"t": dt.datetime(2021, 1, 1)}, {"five"}),
+        ({"t": {"$gt": dt.datetime(2021, 1, 1)}}, {"nan"}),
+        ({"l": {"$in": 5}}, {"nan"}),
+        ({"l": {"$in": True}}, {"five"}),
+        ({"l": {"$in": "zz"}}, set()),
+        ({"s": {"$ne": "none"}}, {"nan", "five", "negz", "other"}),
+        ({"s": None}, set()),
+        ({"n": {}}, set()),
+    ]
+    everything = {rid for rid, *_ in rows}
+    cases = [(mf, None, want) for mf, want in cases] + [
+        (None, {"n": float("nan")}, everything - {"nan"}),
+        (None, {"n": {"$gt": 0}}, everything),
+        (None, {"flag": True}, everything - {"nan"}),
+    ]
+    # every Column predicate in one job
+    preds = [compile_filters(mf, exf, None, TypedMapResolver()).alias(f"c{i}") for i, (mf, exf, _) in enumerate(cases)]
+    by_column = df.select("id", *preds).collect()
+    maps = {c: arrow.column(c).combine_chunks() for c in arrow.column_names if c.startswith("meta_")}
+    for i, (mf, exf, want) in enumerate(cases):
+        assert {r["id"] for r in by_column if r[f"c{i}"]} == want, (mf, exf)
+        mask = arrow_mask(parse_filters(mf, exf, None), maps, "UTC")
+        assert set(arrow.column("id").filter(mask).to_pylist()) == want, (mf, exf)

@@ -26,13 +26,13 @@ def semantic_table(spark, embedder):
     )
 
 
-def test_semantic_ranking(semantic_table, embedder):
+def test_semantic_ranking(semantic_table, embedder, snapshot_paths):
     # "i like dogs" ranks "i like animals"-style shared-vocab sentences by
     # token overlap; all three corpus items share 2/3 tokens with the query,
     # so assert the exact-match query wins instead
     table, corpus = semantic_table
     q = embedder.embed("i like animals")
-    ids, scores, metas = table.find_most_similar(q.tolist(), k=3)
+    ids, scores, metas = snapshot_paths.same(lambda: table.find_most_similar(q.tolist(), k=3))
     assert ids[0] == "1"
     assert metas[0]["text"] == "i like animals"
     assert scores[0] == pytest.approx(1.0, abs=1e-5)
@@ -52,7 +52,7 @@ def test_autocut_distances_inverted():
     assert autocut_distances([0.1, 0.11, 0.12]) == []
 
 
-def test_autocut_in_search(spark):
+def test_autocut_in_search(spark, snapshot_paths):
     # one close result + a flat distant cluster -> autocut keeps only the
     # close one (tests/test_vector_database.py:304-311 behavior).  Controlled
     # vectors: scores vs query [1,0] are 1.0, 0.5, 0.45, 0.4 — max relative
@@ -61,14 +61,14 @@ def test_autocut_in_search(spark):
         ["t", "a", "b", "c"],
         [[1.0, 0.0], [0.5, 0.8660254], [0.45, 0.8930006], [0.4, 0.9165151]],
     )
-    ids, scores, _ = t.find_most_similar([1.0, 0.0], k=4, autocut=True)
+    ids, scores, _ = snapshot_paths.same(lambda: t.find_most_similar([1.0, 0.0], k=4, autocut=True))
     assert ids == ["t"]
     # a flat score profile -> no >0.2 drop -> all rows survive
     flat = VectorTable.empty(spark).store_embeddings_batch(
         ["w", "x", "y", "z"],
         [[1.0, 0.0], [0.995, 0.0999], [0.99, 0.141], [0.985, 0.1726]],
     )
-    ids2, _, _ = flat.find_most_similar([1.0, 0.0], k=4, autocut=True)
+    ids2, _, _ = snapshot_paths.same(lambda: flat.find_most_similar([1.0, 0.0], k=4, autocut=True))
     assert len(ids2) == 4
 
 
