@@ -7,14 +7,22 @@ overwrite; this module is the durable path: deletes and unique-inserts
 rewrite ONLY the buckets containing affected ids — the same file-level
 copy-on-write idea as Delta Lake's transaction log, self-contained so it
 runs without the Delta runtime.  Concurrent mutators are serialized by a
-compare-and-swap on the manifest version (see ``_publish``): the loser of
+compare-and-swap on the manifest version (see ``_commit``): the loser of
 a race gets ``ConcurrentWriteError``, never a silently dropped commit.
 
-Layout on disk::
-
-    <root>/data/bucket=<K>/gen=<G>-<token>/    immutable data generations
-    <root>/_manifest/v<N>.json                 {"buckets": {K: {gen, rows, dir}}}
-    <root>/_manifest/_latest                   current version number
+Layout and commit protocol: every file operation goes through ``fsio``,
+so the root is a local path or any Hadoop-resolvable URI (``file://``,
+``hdfs://``, ...).  Row data lives in immutable per-bucket generation
+dirs; each version's manifest (``{"buckets": {K: {gen, rows, dir}}}``)
+is an immutable epoch file of the same ``fsio`` log the persisted
+indexes use (the layout is given in the ``fsio`` module docstring).
+Version N is published by exclusive create of its epoch file — the CAS
+of ``_commit`` — the latest version is resolved by listing the log, and
+``load(version=N)`` reads its file directly.  Readers resolve one
+version and read a consistent snapshot of per-bucket paths: concurrent
+mutations never touch published generations.  A table written before
+the log (one ``v<N>.json`` file per version plus a pointer file) still
+loads at any version, and its first mutation continues the log.
 
 Generation dir names carry a per-attempt random token and the manifest
 records the EXACT dir (the Delta/Iceberg unique-file-name discipline):
@@ -28,23 +36,18 @@ A row lives in bucket ``pmod(xxhash64(cast(id as string)), n_buckets)``.
 A mutation batch maps its ids to buckets (computed through the SAME Spark
 expression, so driver/executor hash parity is structural), reads only
 those buckets' current generations, anti-joins / unions, writes each
-result as the bucket's next generation, then publishes a new manifest
-version; ``_latest`` is swapped last by an atomic rename.
-Readers resolve ``_latest`` once and read a consistent snapshot of
-per-bucket paths — concurrent mutations never touch published generations.
+result as the bucket's next generation, then publishes a new version.
 
 Scale: a delete of D ids costs O(sum of affected bucket sizes), not a
 table rewrite; with N buckets and uniform ids that is ~(D/N)·table per
-batch (pick n_buckets so a bucket fits an executor comfortably; at 100 TB
-this is the layout you'd put under object storage with conditional-put on
-``_latest`` — or swap the whole class for Delta where available).
+batch (pick n_buckets so a bucket fits an executor comfortably; on an
+object store without atomic rename, swap the whole class for Delta
+where available).
 """
 
 from __future__ import annotations
 
 import json
-import os
-import shutil
 import uuid
 from typing import Sequence
 
@@ -53,9 +56,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from minivectordb_spark import fsio
-
-_MANIFEST_DIR = "_manifest"
-_LATEST = "_latest"
 
 
 def _bucket_dirname(meta: dict) -> str:
@@ -67,6 +67,27 @@ def _bucket_dirname(meta: dict) -> str:
 
 def _bucket_expr(id_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_buckets))
+
+
+def _batch_counts(with_b: DataFrame, id_col: str, op: str, dup_msg: str) -> dict[int, int]:
+    """Rows per bucket of a batch carrying ``__b``, in one job.  Raises
+    on a NULL id (it would silently vanish in later delete filters) or
+    a repeated one (it would desync the manifest row counts); equal ids
+    share a bucket, so the per-bucket distinct count sees every repeat."""
+    stats = (
+        with_b.groupBy("__b")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(id_col).alias("nn"),
+            F.count_distinct(id_col).alias("d"),
+        )
+        .collect()
+    )
+    if any(r["nn"] != r["n"] for r in stats):
+        raise ValueError(f"{op}: NULL ids are not allowed")
+    if any(r["n"] != r["d"] for r in stats):
+        raise ValueError(dup_msg)
+    return {int(r["__b"]): int(r["n"]) for r in stats}
 
 
 def _strip_nullability(dt):
@@ -145,77 +166,54 @@ class DurableVectorTable:
         n_buckets: int = 16,
     ) -> "DurableVectorTable":
         """Write ``df`` as generation 0 of every bucket."""
-        path = _local_root(path)
-        spark = df.sparkSession
-        if os.path.exists(os.path.join(path, _MANIFEST_DIR, _LATEST)):
+        path = _root(path)
+        if fsio.table_versions(path, df.sparkSession):
             raise ConcurrentWriteError(
                 f"a table already exists at {path}; load it instead of "
                 "re-creating"
             )
-        # id hygiene up front: a NULL id would silently vanish in later
-        # delete filters (NULL ~isin) and a duplicate would desync the
-        # manifest row counts — both corrupt the table forever
-        stats = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(id_col).alias("nn"),
-            F.count_distinct(id_col).alias("d"),
-        ).collect()[0]
-        if stats["nn"] != stats["n"]:
-            raise ValueError("DurableVectorTable.create: NULL ids are not allowed")
-        if stats["d"] != stats["n"]:
-            raise ValueError("Unique ID already exists.")
-        os.makedirs(os.path.join(path, _MANIFEST_DIR), exist_ok=True)
-        buckets: dict[str, dict] = {}
         with_b = df.withColumn("__b", _bucket_expr(id_col, n_buckets))
-        counts = {
-            r["__b"]: r["n"]
-            for r in with_b.groupBy("__b").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
+        counts = _batch_counts(
+            with_b, id_col, "DurableVectorTable.create", "Unique ID already exists."
+        )
+        table = cls(df.sparkSession, path, {})
+        buckets = {str(k): {"gen": -1} for k in range(n_buckets)}
         # one write job, partitioned by bucket: each bucket dir becomes gen 0
-        tmp_token = uuid.uuid4().hex[:8]
-        staging = os.path.join(path, f"_staging_{tmp_token}")
-        with_b.repartition("__b").write.partitionBy("__b").parquet(staging)
-        for k in range(n_buckets):
-            n = int(counts.get(k, 0))
-            src = os.path.join(staging, f"__b={k}")
-            if n > 0:
-                dst = os.path.join(path, "data", f"bucket={k}", "gen=0")
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.rename(src, dst)
-            buckets[str(k)] = {"gen": 0, "rows": n}
-        _cleanup_staging(staging)
+        table._rewrite_buckets_one_pass(
+            with_b.repartition("__b"),
+            {k: counts.get(k, 0) for k in range(n_buckets)},
+            buckets,
+        )
         manifest = {
-            "version": 0,
             "n_buckets": n_buckets,
             "id_col": id_col,
             "schema": df.schema.json(),
             "buckets": buckets,
         }
-        _publish(path, manifest)
-        return cls(spark, path, manifest)
+        return table._commit(manifest, 0)
 
     @classmethod
     def load(
         cls, spark: SparkSession, path: str, version: int | None = None
     ) -> "DurableVectorTable":
-        """Open the table at ``_latest``, or time-travel to an explicit
+        """Open the table at its latest version, or time-travel to an explicit
         ``version``: every published manifest is immutable and generations
         are only removed by ``vacuum``, so any un-vacuumed version reads
         exactly the snapshot it was committed as."""
-        path = _local_root(path)
-        if version is None:
-            with open(os.path.join(path, _MANIFEST_DIR, _LATEST)) as f:
-                version = int(f.read().strip())
-        with open(os.path.join(path, _MANIFEST_DIR, f"v{version}.json")) as f:
-            manifest = json.load(f)
-        return cls(spark, path, manifest)
+        path = _root(path)
+        return cls(spark, path, fsio.load_table_manifest(path, version, spark))
 
     # ---------------- read side ----------------
 
     def _bucket_path(self, k: int) -> str:
-        return os.path.join(
-            self.path, "data", f"bucket={k}",
-            _bucket_dirname(self.manifest["buckets"][str(k)]),
+        meta = self.manifest["buckets"][str(k)]
+        return f"{self.path}/data/bucket={k}/{_bucket_dirname(meta)}"
+
+    def _read_buckets(self, ks) -> DataFrame:
+        """The live rows of buckets ``ks``, with ``__b`` re-derived from
+        the id (buckets are content-addressed: no file mapping needed)."""
+        return self.spark.read.parquet(*[self._bucket_path(k) for k in ks]).withColumn(
+            "__b", _bucket_expr(self.manifest["id_col"], self.manifest["n_buckets"])
         )
 
     def to_df(self) -> DataFrame:
@@ -258,17 +256,30 @@ class DurableVectorTable:
     def _check_uncommitted(self) -> int:
         """Fast-fail CAS pre-flight: the version this mutation would
         publish must not exist yet.  Saves the bucket rewrites when the
-        race is already lost; the authoritative check is _publish's
+        race is already lost; the authoritative check is _commit's
         exclusive create."""
         next_version = self.manifest["version"] + 1
-        vpath = os.path.join(self.path, _MANIFEST_DIR, f"v{next_version}.json")
-        if os.path.exists(vpath):
-            raise ConcurrentWriteError(
-                f"version {next_version} at {self.path} was already "
-                "committed by another writer; reload the table and retry "
-                "the mutation"
-            )
+        if next_version in fsio.table_versions(self.path, self.spark):
+            raise _lost_race(self.path, next_version)
         return next_version
+
+    def _commit(self, manifest: dict, version: int) -> "DurableVectorTable":
+        """Publish ``manifest`` as ``version`` — the compare-and-swap.
+        Every mutation derives its version as parent + 1, so two writers
+        racing from one snapshot target the same epoch file and exactly
+        one exclusive create wins; the loser gets ConcurrentWriteError
+        instead of silently dropping the winner's commit.  Mutating from
+        a time-traveled (non-latest) version fails the same way, which
+        also forbids forked history.  The manifest is serialized whole
+        before the create, so a write that fails partway leaves no torn
+        version that would turn every later mutation into a
+        ConcurrentWriteError."""
+        manifest["version"] = version
+        try:
+            fsio.publish_table_version(self.path, manifest, self.spark)
+        except fsio.ConcurrentIndexMutation:
+            raise _lost_race(self.path, version) from None
+        return DurableVectorTable(self.spark, self.path, manifest)
 
     def _rewrite_buckets_one_pass(
         self, merged: DataFrame, rows_after: dict, buckets: dict
@@ -276,7 +287,7 @@ class DurableVectorTable:
         """Write every touched bucket's next generation in ONE Spark job
         (VERDICT r9 item 5): ``merged`` carries a ``__b`` bucket column;
         it is written partitioned by ``__b`` into a staging dir, then each
-        staged ``__b=k/`` subdir is renamed (same filesystem — atomic) to
+        staged ``__b=k/`` subdir is renamed (``fsio.move``) to
         that bucket's ``gen=<g+1>-<token>`` target and the manifest entry
         updated.  Replaces the per-bucket loop that dispatched ~3 Spark
         jobs per touched bucket — profiled at 8-9 s per durable_cdc wave
@@ -284,26 +295,21 @@ class DurableVectorTable:
         Generation dirs are unique per attempt (a CAS loser's orphans
         never collide with a retry's targets), and the manifest CAS is
         the only commit point."""
-        stage = os.path.join(
-            self.path, "data", f"_stage-{uuid.uuid4().hex[:8]}"
-        )
+        stage = f"{self.path}/data/_stage-{uuid.uuid4().hex[:8]}"
         merged.write.partitionBy("__b").parquet(stage)
         try:
             for k, n_rows in rows_after.items():
                 gen = buckets[str(k)]["gen"] + 1
-                dirname = f"gen={gen}-{uuid.uuid4().hex[:8]}"
-                src = os.path.join(stage, f"__b={k}")
-                if n_rows > 0:
-                    bdir = os.path.join(self.path, "data", f"bucket={k}")
-                    os.makedirs(bdir, exist_ok=True)
-                    os.rename(src, os.path.join(bdir, dirname))
-                    buckets[str(k)] = {
-                        "gen": gen, "rows": n_rows, "dir": dirname,
-                    }
-                else:
-                    buckets[str(k)] = {"gen": gen, "rows": 0, "dir": None}
+                dirname = fsio.gen_dir_name(gen) if n_rows > 0 else None
+                if dirname:
+                    fsio.move(
+                        f"{stage}/__b={k}",
+                        f"{self.path}/data/bucket={k}/{dirname}",
+                        self.spark,
+                    )
+                buckets[str(k)] = {"gen": gen, "rows": n_rows, "dir": dirname}
         finally:
-            shutil.rmtree(stage, ignore_errors=True)
+            fsio.delete(stage, recursive=True, spark=self.spark)
 
     def delete_embeddings_batch(self, unique_ids: Sequence) -> "DurableVectorTable":
         """Durable batch delete: rewrites only the buckets holding the ids
@@ -319,15 +325,10 @@ class DurableVectorTable:
                 # empty bucket has no generation dir to read — the ids are
                 # simply absent (strict contract, same as a miss below)
                 raise KeyError(f"Embedding ids not found: {ids}")
-        # ONE pass over every touched bucket (the upsert/store r10
-        # discipline): one multi-path scan, one presence probe (ids are a
-        # driver-provided list — the probe result is |ids| rows, bounded
-        # by the caller's own argument), one partitioned write.  The old
-        # loop dispatched a collect + a write per bucket.
+        # one pass (``_rewrite_buckets_one_pass``): one scan, one presence
+        # probe (|ids| rows, bounded by the caller's own list), one write
         all_ids = [str(i) for ids in by_bucket.values() for i in ids]
-        cur_all = self.spark.read.parquet(
-            *[self._bucket_path(k) for k in by_bucket]
-        ).withColumn("__b", _bucket_expr(id_col, self.manifest["n_buckets"]))
+        cur_all = self._read_buckets(by_bucket)
         present = {
             str(r[id_col])
             for r in cur_all.filter(
@@ -343,9 +344,7 @@ class DurableVectorTable:
             for k, ids in by_bucket.items()
         }
         self._rewrite_buckets_one_pass(kept, rows_after, buckets)
-        new_manifest["version"] = next_version
-        _publish(self.path, new_manifest)
-        return DurableVectorTable(self.spark, self.path, new_manifest)
+        return self._commit(new_manifest, next_version)
 
     def store_embeddings_batch(self, new_df: DataFrame) -> "DurableVectorTable":
         """Durable unique insert: appends ``new_df``'s rows, rewriting only
@@ -360,7 +359,6 @@ class DurableVectorTable:
         .store_embeddings_batch(ids, vecs, metas).df``.
         """
         id_col = self.manifest["id_col"]
-        n_buckets = self.manifest["n_buckets"]
         next_version = self._check_uncommitted()
         _check_batch_schema(
             self.manifest,
@@ -369,38 +367,19 @@ class DurableVectorTable:
             " For VectorTable-backed tables build rows via "
             "VectorTable.empty(spark).store_embeddings_batch(...).df",
         )
-        stats = (
-            new_df.withColumn("__b", _bucket_expr(id_col, n_buckets))
-            .groupBy("__b")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count(id_col).alias("nn"),
-                F.count_distinct(id_col).alias("d"),
-            )
-            .collect()
+        with_b = new_df.withColumn("__b", _bucket_expr(id_col, self.manifest["n_buckets"]))
+        rows_by_bucket = _batch_counts(
+            with_b, id_col, "store_embeddings_batch", "Unique ID already exists."
         )
-        if any(r["nn"] != r["n"] for r in stats):
-            raise ValueError("store_embeddings_batch: NULL ids are not allowed")
-        if any(r["n"] != r["d"] for r in stats):
-            raise ValueError("Unique ID already exists.")
-        rows_by_bucket = {int(r["__b"]): int(r["n"]) for r in stats}
         new_manifest = json.loads(json.dumps(self.manifest))
         buckets = new_manifest["buckets"]
-        with_b = new_df.withColumn("__b", _bucket_expr(id_col, n_buckets))
-        # ONE pass over every touched bucket (VERDICT r9 item 5): the old
-        # per-bucket loop dispatched a clash-probe job + a write job per
-        # bucket — driver job fan-out, not IO, dominated the wall.  Here:
-        # one multi-path scan of the touched non-empty buckets (__b
-        # re-derived from the id — buckets are content-addressed, no file
-        # mapping needed), one join for the clash check, one partitioned
-        # write staged + renamed into per-bucket generation dirs.
+        # one pass (``_rewrite_buckets_one_pass``): one scan of the touched
+        # non-empty buckets, one join for the clash check, one write
         nonempty = [
             k for k in rows_by_bucket if buckets[str(k)]["rows"] > 0
         ]
         if nonempty:
-            cur_all = self.spark.read.parquet(
-                *[self._bucket_path(k) for k in nonempty]
-            ).withColumn("__b", _bucket_expr(id_col, n_buckets))
+            cur_all = self._read_buckets(nonempty)
             clash = (
                 with_b.select(F.col(id_col).cast("string").alias(id_col))
                 .join(
@@ -422,9 +401,7 @@ class DurableVectorTable:
             for k, n_new in rows_by_bucket.items()
         }
         self._rewrite_buckets_one_pass(merged, rows_after, buckets)
-        new_manifest["version"] = next_version
-        _publish(self.path, new_manifest)
-        return DurableVectorTable(self.spark, self.path, new_manifest)
+        return self._commit(new_manifest, next_version)
 
 
     def upsert_embeddings_batch(self, new_df: DataFrame) -> "DurableVectorTable":
@@ -439,44 +416,23 @@ class DurableVectorTable:
         replacement or none (the manifest swap), and a CAS loser leaves
         the table untouched."""
         id_col = self.manifest["id_col"]
-        n_buckets = self.manifest["n_buckets"]
         next_version = self._check_uncommitted()
         _check_batch_schema(self.manifest, new_df, "upsert_embeddings_batch")
-        stats = (
-            new_df.withColumn("__b", _bucket_expr(id_col, n_buckets))
-            .groupBy("__b")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count(id_col).alias("nn"),
-                F.count_distinct(id_col).alias("d"),
-            )
-            .collect()
+        with_b = new_df.withColumn("__b", _bucket_expr(id_col, self.manifest["n_buckets"]))
+        rows_by_bucket = _batch_counts(
+            with_b, id_col, "upsert_embeddings_batch",
+            "upsert_embeddings_batch: duplicate ids within the batch",
         )
-        if any(r["nn"] != r["n"] for r in stats):
-            raise ValueError("upsert_embeddings_batch: NULL ids are not allowed")
-        if any(r["n"] != r["d"] for r in stats):
-            raise ValueError(
-                "upsert_embeddings_batch: duplicate ids within the batch"
-            )
-        rows_by_bucket = {int(r["__b"]): int(r["n"]) for r in stats}
         new_manifest = json.loads(json.dumps(self.manifest))
         buckets = new_manifest["buckets"]
-        with_b = new_df.withColumn("__b", _bucket_expr(id_col, n_buckets))
-        # ONE pass over every touched bucket (VERDICT r9 item 5 — the
-        # durable_cdc wave profile): the old per-bucket loop dispatched a
-        # semi-count + anti-join + write per bucket, ~3 Spark jobs each;
-        # with 16 touched buckets the 8-9 s "commit IO" wall was driver
-        # job fan-out.  Now: one multi-path scan (__b re-derived from the
-        # id), one per-bucket matched-count aggregate, one anti-join, one
-        # partitioned write staged + renamed into generation dirs.
+        # one pass (``_rewrite_buckets_one_pass``): one scan, one
+        # per-bucket matched-count aggregate, one anti-join, one write
         nonempty = [
             k for k in rows_by_bucket if buckets[str(k)]["rows"] > 0
         ]
         matched_by_bucket: dict[int, int] = {}
         if nonempty:
-            cur_all = self.spark.read.parquet(
-                *[self._bucket_path(k) for k in nonempty]
-            ).withColumn("__b", _bucket_expr(id_col, n_buckets))
+            cur_all = self._read_buckets(nonempty)
             ids = with_b.select(F.col(id_col).cast("string").alias("__id"))
             matched_by_bucket = {
                 int(r["__b"]): int(r["m"])
@@ -498,9 +454,7 @@ class DurableVectorTable:
             for k, n_new in rows_by_bucket.items()
         }
         self._rewrite_buckets_one_pass(merged, rows_after, buckets)
-        new_manifest["version"] = next_version
-        _publish(self.path, new_manifest)
-        return DurableVectorTable(self.spark, self.path, new_manifest)
+        return self._commit(new_manifest, next_version)
 
     # ---------------- maintenance ----------------
 
@@ -520,24 +474,18 @@ class DurableVectorTable:
             for k in range(self.manifest["n_buckets"])
             if buckets[str(k)]["rows"] > 0
             and sum(
-                1 for f in os.listdir(self._bucket_path(k)) if f.endswith(".parquet")
+                f.endswith(".parquet")
+                for f in fsio.list_dir(self._bucket_path(k), self.spark)
             ) > 1
         ]
         if not fragmented:
             return self
-        cur = self.spark.read.parquet(
-            *[self._bucket_path(k) for k in fragmented]
-        ).withColumn(
-            "__b", _bucket_expr(self.manifest["id_col"], self.manifest["n_buckets"])
-        )
         self._rewrite_buckets_one_pass(
-            cur.repartition("__b"),
+            self._read_buckets(fragmented).repartition("__b"),
             {k: buckets[str(k)]["rows"] for k in fragmented},
             buckets,
         )
-        new_manifest["version"] = next_version
-        _publish(self.path, new_manifest)
-        return DurableVectorTable(self.spark, self.path, new_manifest)
+        return self._commit(new_manifest, next_version)
 
     def vacuum(
         self, keep_versions: int = 1, grace_seconds: float = 600.0
@@ -554,39 +502,24 @@ class DurableVectorTable:
         without the grace window a concurrent vacuum would delete data a
         writer is about to commit (Delta's retention-period rule; pass 0
         only when no writer can be live)."""
-        import time as _time
-
-        mdir = os.path.join(self.path, _MANIFEST_DIR)
-        versions = sorted(
-            int(f[1:-5]) for f in os.listdir(mdir)
-            if f.startswith("v") and f.endswith(".json")
-        )
-        keep = set(versions[-max(1, keep_versions):])
-        live: set[str] = set()
+        versions = fsio.table_versions(self.path, self.spark)
+        keep = versions[-max(1, keep_versions):]
+        live: dict[str, set[str]] = {}
         for v in keep:
-            with open(os.path.join(mdir, f"v{v}.json")) as f:
-                m = json.load(f)
+            m = fsio.load_table_manifest(self.path, v, self.spark)
             for k, b in m["buckets"].items():
-                live.add(os.path.join("data", f"bucket={k}", _bucket_dirname(b)))
-        removed = []
-        now = _time.time()
-        data_dir = os.path.join(self.path, "data")
-        for bucket_dir in os.listdir(data_dir) if os.path.isdir(data_dir) else []:
-            for gen_dir in os.listdir(os.path.join(data_dir, bucket_dir)):
-                rel = os.path.join("data", bucket_dir, gen_dir)
-                if rel in live:
-                    continue
-                full = os.path.join(self.path, rel)
-                try:
-                    if now - os.path.getmtime(full) < grace_seconds:
-                        continue  # possibly an in-flight writer's dir
-                except OSError:
-                    continue
-                shutil.rmtree(full, ignore_errors=True)
-                removed.append(rel)
-        for v in versions:
-            if v not in keep:
-                os.remove(os.path.join(mdir, f"v{v}.json"))
+                live.setdefault(k, set()).add(_bucket_dirname(b))
+        removed = [
+            f"data/bucket={k}/{gen_dir}"
+            for k in range(self.manifest["n_buckets"])
+            for gen_dir in fsio.sweep_generations(
+                f"{self.path}/data/bucket={k}",
+                live.get(str(k), set()),
+                grace_seconds,
+                self.spark,
+            )
+        ]
+        fsio.sweep_table_versions(self.path, keep[0], self.spark)
         return removed
 
 
@@ -597,52 +530,15 @@ class ConcurrentWriteError(RuntimeError):
     caller should re-``load`` the table and retry on the new snapshot."""
 
 
-def _local_root(path: str) -> str:
-    """The table root as a driver-local path: a plain path, or the path of
-    a ``file://`` URI.  The table's file IO goes through ``os``, so any
-    other scheme is refused here, before anything is written."""
-    local = fsio._local_path(path)
-    if local is None:
-        raise ValueError(f"a durable table needs a local path or a file:// URI, got {path!r}")
-    return local
+def _root(path: str) -> str:
+    """The table root: a ``file://`` URI becomes the local path that
+    ``fsio`` reads it as (Spark would take its percent-escapes
+    literally); any other URI stays as given."""
+    return (fsio._local_path(path) or path).rstrip("/")
 
 
-def _publish(path: str, manifest: dict) -> None:
-    """Conditional publish (compare-and-swap, VERDICT r3 item 3).
-
-    The version file IS the CAS token: ``v<N>.json`` is exclusive-created
-    (``fsio.create_exclusive``), and every mutation derives N = parent
-    version + 1, so two writers racing from the same snapshot both target
-    the same N and exactly one create succeeds — the loser gets
-    ConcurrentWriteError instead of silently dropping the winner's commit
-    (the pre-r4 last-writer-wins hazard).  Mutating from a time-traveled
-    (non-latest) version fails the same way, which also forbids forked
-    history.  The manifest is serialized and staged whole before the
-    create, so a write that fails partway leaves no torn ``v<N>.json``
-    that would turn every later mutation into a ConcurrentWriteError.
-
-    ``_latest`` is then swapped atomically (``fsio.write_text_atomic``)
-    with a monotonic guard so a stalled writer resuming late can never
-    move the pointer backwards.
-    """
-    mdir = os.path.join(path, _MANIFEST_DIR)
-    version = manifest["version"]
-    if not fsio.create_exclusive(
-        os.path.join(mdir, f"v{version}.json"), json.dumps(manifest)
-    ):
-        raise ConcurrentWriteError(
-            f"version {version} at {path} was already committed by another "
-            "writer; reload the table and retry the mutation"
-        )
-    latest = os.path.join(mdir, _LATEST)
-    try:
-        with open(latest) as f:
-            if int(f.read().strip()) >= version:
-                return
-    except (FileNotFoundError, ValueError):
-        pass
-    fsio.write_text_atomic(latest, str(version))
-
-
-def _cleanup_staging(staging: str) -> None:
-    shutil.rmtree(staging, ignore_errors=True)
+def _lost_race(path: str, version: int) -> ConcurrentWriteError:
+    return ConcurrentWriteError(
+        f"version {version} at {path} was already committed by another "
+        "writer; reload the table and retry the mutation"
+    )

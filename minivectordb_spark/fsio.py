@@ -1,12 +1,13 @@
-"""Filesystem-portable manifest and scratch IO for the persisted-index
-family (IVF / dedup / near-dup) and the EDJoin heavy-path spill.
+"""Filesystem-portable file IO, and the one version log, for the durable
+table (``durable.py``), the persisted-index family (IVF / dedup /
+near-dup) and the EDJoin heavy-path spill.
 
 Why this module exists (the 100 TB contract): a persisted index lives
 where the cluster's storage lives — ``hdfs://``, ``s3a://``,
 ``abfss://`` — but a driver-local ``open()`` can only read ``file:``
 paths, and a non-atomic manifest write can leave a truncated JSON that
 breaks every later probe of an otherwise-healthy index.  All manifest
-IO therefore goes through here:
+and table file IO therefore goes through here:
 
 - **Local paths** (no scheme, or ``file:``) use plain Python IO with
   true ``os.replace`` atomicity — zero py4j overhead for the common
@@ -38,35 +39,38 @@ resolves, in order: the ``SCRATCH_ROOT`` module knob, the
 ``_minivectordb_scratch`` directory under ``spark.sql.warehouse.dir``
 (shared storage on any correctly-configured cluster).
 
-Persisted-index lifecycle (IVF, dedup and near-dup indexes — every
-family goes through ``save_index_generation`` and
-``append_index_generation``; a family supplies only its manifest
-params and the tables it builds):
+Version log (README "Version log" has the on-disk layout).  The
+durable table and the IVF, dedup and near-dup indexes share one publish
+(``publish_index_manifest``), one epoch-file sweep and one
+generation-dir sweep (``sweep_generations``):
 
-- **Generations.**  A save writes its tables into a fresh
-  ``gen=<N>-<token>`` dir (``new_gen_dir``; the random token means two
-  racing saves never share a dir).  The manifest records ``generation``,
-  ``gen_dir``, the previous ``prev_gen_dir`` and, when the source is
-  stat-able, the freshness ``fingerprint``; ``skip_if_fresh`` reuses an
-  index whose fingerprint matches instead of rebuilding it.
-- **Epoch CAS.**  The manifest is published as the immutable epoch file
-  ``_manifest/<name>.e<E+1>.json`` by exclusive create
-  (``publish_index_manifest``).  Exactly one of two writers racing from
-  epoch E wins; the other gets ``ConcurrentIndexMutation``.
-- **Loser cleanup.**  A save that loses the CAS deletes its own gen dir
-  and re-raises; the live index and its epoch are untouched.
-- **Retention.**  After a winning save, ``sweep_index_generations``
-  keeps the new and the previous generation (probes planned against
-  the previous one keep working through the swap) and deletes the rest.
-- **Append.**  An append CAS-publishes the fingerprint-dropped manifest
-  first (``begin_index_append``: serializes racing appends, and a crash
-  mid-append costs a rebuild, never a stale fresh-looking index),
-  appends into the live generation (``gen_data``), and finally checks
-  that generation is still live (``end_index_append``: a rebuild that
-  swapped generations mid-append raises instead of losing the batch).
-- **Legacy layouts.**  A single-file manifest loads as epoch 0, and a
-  manifest without ``gen_dir`` (or, for IVF, no manifest at all —
-  ``load_index_or_empty``) serves data from the path's root dirs.
+- **Epoch CAS.**  A manifest is published as the immutable epoch file
+  ``_manifest/<name>.e<E+1>.json`` by exclusive create: of two writers
+  racing from epoch E one wins, the other gets
+  ``ConcurrentIndexMutation``.  The latest epoch is resolved by
+  listing; a table's ``load(version=N)`` reads its file directly.
+- **Generations.**  Data goes into a fresh ``gen=<N>-<token>`` dir
+  (``gen_dir_name``: racing writers never share a dir) that the
+  manifest names exactly.
+- **Retention**, the one rule that differs.  An index keeps
+  ``KEEP_EPOCHS`` epoch files and its new and previous generation at
+  each publish (probes planned against the previous one keep working
+  through the swap); a table keeps every version until
+  ``DurableVectorTable.vacuum``.
+- **Index save / append.**  A family supplies only its manifest params
+  and tables (``save_index_generation``).  The manifest records
+  ``generation``, ``gen_dir``, ``prev_gen_dir`` and the source
+  ``fingerprint``; ``skip_if_fresh`` reuses a fresh index, and a save
+  that loses the CAS deletes its own gen dir.  An append
+  (``append_index_generation``) publishes the fingerprint-dropped
+  manifest first (a crash mid-append costs a rebuild, never a stale
+  fresh-looking index), appends into the live generation, and raises
+  if a rebuild swapped generations meanwhile.
+- **Legacy layouts.**  A single-file index manifest loads as epoch 0; a
+  manifest without ``gen_dir`` (or an IVF index with none —
+  ``load_index_or_empty``) serves data from the path's root dirs.  A
+  table written before the log (``v<N>.json`` files and a ``_latest``
+  pointer) loads at any version; its first publish removes the pointer.
 """
 
 from __future__ import annotations
@@ -220,6 +224,37 @@ def delete(path: str, recursive: bool = False, spark=None) -> None:
         pass
 
 
+def move(src: str, dst: str, spark=None) -> None:
+    """Rename ``src`` (a file or a directory) to the absent ``dst``,
+    creating ``dst``'s parent; on the Hadoop route this is
+    ``FileSystem.rename``.  Raises ``OSError`` when the rename fails."""
+    ls, ld = _local_path(src), _local_path(dst)
+    if ls is not None and ld is not None:
+        os.makedirs(os.path.dirname(ld) or ".", exist_ok=True)
+        os.rename(ls, ld)
+        return
+    jvm, fs, jsrc = _hadoop(src, spark)
+    jdst = jvm.org.apache.hadoop.fs.Path(dst)
+    fs.mkdirs(jdst.getParent())
+    if not fs.rename(jsrc, jdst):
+        raise OSError(f"rename {src} -> {dst} failed")
+
+
+def _mtime(path: str, spark=None) -> float | None:
+    """Modification time of ``path`` in epoch seconds; None when absent."""
+    lp = _local_path(path)
+    if lp is not None:
+        try:
+            return os.path.getmtime(lp)
+        except OSError:
+            return None
+    try:
+        _, fs, jpath = _hadoop(path, spark)
+        return fs.getFileStatus(jpath).getModificationTime() / 1000.0
+    except Exception:
+        return None
+
+
 def read_manifest(path: str, spark=None) -> dict:
     """Load an index's JSON manifest from any Hadoop-resolvable URI."""
     return json.loads(read_text(path, spark))
@@ -247,6 +282,8 @@ _MANIFEST_DIR = "_manifest"
 #: the previous epoch (listing raced one publish) still finds its file;
 #: readers two publishes stale retry the listing (bounded, below)
 KEEP_EPOCHS = 2
+#: the durable table's log: version N is epoch N of this name
+TABLE_LOG = "_table_manifest.json"
 
 
 def _epoch_file(name: str, epoch: int) -> str:
@@ -255,35 +292,56 @@ def _epoch_file(name: str, epoch: int) -> str:
 
 
 def _epoch_of(fname: str, name: str) -> int | None:
+    """Epoch of ``fname`` in the log ``name``, or None.  The durable
+    table's log also counts the ``v<N>.json`` version files of a table
+    written before the log existed."""
     base = name[:-5] if name.endswith(".json") else name
-    if not (fname.startswith(base + ".e") and fname.endswith(".json")):
-        return None
-    digits = fname[len(base) + 2 : -5]
-    return int(digits) if digits.isdigit() else None
+    for head in (base + ".e", "v" if name == TABLE_LOG else None):
+        if head and fname.startswith(head) and fname.endswith(".json"):
+            digits = fname[len(head) : -5]
+            if digits.isdigit():
+                return int(digits)
+    return None
+
+
+def _log_files(root: str, name: str, spark=None) -> dict[int, str]:
+    """``{epoch: file name}`` of the log ``name`` under ``root``."""
+    files = {}
+    for n in list_dir(f"{root}/{_MANIFEST_DIR}", spark):
+        e = _epoch_of(n, name)
+        if e is not None:
+            files[e] = n
+    return files
+
+
+def _sweep_epochs(root: str, name: str, below: int, spark=None) -> None:
+    """Delete the files of the log ``name`` older than epoch ``below`` —
+    index retention at publish and the table's ``vacuum`` alike."""
+    for e, n in _log_files(root, name, spark).items():
+        if e < below:
+            delete(f"{root}/{_MANIFEST_DIR}/{n}", spark=spark)
 
 
 def list_dir(path: str, spark=None) -> list[str]:
-    """Child names of a directory on any scheme; [] when absent."""
+    """Child names of a directory on any scheme; [] when absent.  A
+    scheme no Hadoop connector resolves raises."""
     lp = _local_path(path)
     if lp is not None:
         try:
             return os.listdir(lp)
         except OSError:
             return []
+    _, fs, jpath = _hadoop(path, spark)  # an unresolvable scheme raises here
     try:
-        _, fs, jpath = _hadoop(path, spark)
-        if not fs.exists(jpath):
-            return []
         return [st.getPath().getName() for st in fs.listStatus(jpath)]
-    except Exception:
+    except Exception:  # absent, or removed while listing
         return []
 
 
 def create_exclusive(path: str, text: str, spark=None) -> bool:
     """Publish ``text`` at ``path`` iff ``path`` does not exist — the
-    CAS primitive of the index epoch log and of durable.py's version
-    files.  The content is staged to a temp file first and moved in
-    whole, so a winner can never be torn, and a write that fails partway
+    CAS primitive of the version log.  The content is staged to a
+    temp file first and moved in whole, so a winner can never be torn, and a write that fails partway
     leaves nothing at ``path``.  Returns False when the target already
     exists (the caller lost the race)."""
     lp = _local_path(path)
@@ -342,17 +400,12 @@ def load_index_manifest(path: str, name: str, spark=None) -> tuple[dict, int]:
     when no manifest exists in either form."""
     root = path.rstrip("/")
     for attempt in (0, 1):
-        names = list_dir(f"{root}/{_MANIFEST_DIR}", spark)
-        epochs = sorted(
-            e for e in (_epoch_of(n, name) for n in names) if e is not None
-        )
-        if not epochs:
+        files = _log_files(root, name, spark)
+        if not files:
             break
+        epoch = max(files)
         try:
-            m = read_manifest(
-                f"{root}/{_MANIFEST_DIR}/{_epoch_file(name, epochs[-1])}", spark
-            )
-            return m, epochs[-1]
+            return read_manifest(f"{root}/{_MANIFEST_DIR}/{files[epoch]}", spark), epoch
         except (OSError, ValueError):
             if attempt:
                 raise
@@ -371,15 +424,18 @@ def load_index_or_empty(path: str, name: str, spark=None) -> tuple[dict, int]:
 
 
 def publish_index_manifest(
-    path: str, name: str, payload: dict, expected_epoch: int, spark=None
+    path: str, name: str, payload: dict, expected_epoch: int, spark=None,
+    keep_epochs: int | None = KEEP_EPOCHS, legacy: str | None = None,
 ) -> int:
-    """CAS-publish ``payload`` as epoch ``expected_epoch + 1``.
+    """CAS-publish ``payload`` as epoch ``expected_epoch + 1`` of the
+    log ``name`` — the one publish of the indexes and the durable table.
 
     Exclusive-creates the immutable epoch file — if it already exists, a
     concurrent mutator won and ``ConcurrentIndexMutation`` is raised
-    with the index untouched.  On success: best-effort sweeps epoch
-    files older than ``KEEP_EPOCHS`` behind and the legacy single-file
-    manifest (its content is superseded; pre-generation readers resolve
+    with the log untouched.  On success: best-effort sweeps the epoch
+    files ``keep_epochs`` or more behind (None keeps every epoch) and
+    the superseded pre-log file ``legacy`` (relative to ``path``;
+    default ``name``, an index's single-file manifest — readers resolve
     the epoch log first anyway).  Returns the published epoch."""
     root = path.rstrip("/")
     new_epoch = int(expected_epoch) + 1
@@ -389,12 +445,50 @@ def publish_index_manifest(
             f"epoch {new_epoch} of {root}/{name} was published by a "
             f"concurrent writer; reload the manifest and retry"
         )
-    for n in list_dir(f"{root}/{_MANIFEST_DIR}", spark):
-        e = _epoch_of(n, name)
-        if e is not None and e <= new_epoch - KEEP_EPOCHS:
-            delete(f"{root}/{_MANIFEST_DIR}/{n}", spark=spark)
-    delete(f"{root}/{name}", spark=spark)
+    if keep_epochs is not None:
+        _sweep_epochs(root, name, new_epoch - keep_epochs + 1, spark)
+    delete(f"{root}/{legacy or name}", spark=spark)
     return new_epoch
+
+
+
+def table_versions(path: str, spark=None) -> list[int]:
+    """Committed versions of the durable table at ``path``, oldest
+    first; [] when no table exists there."""
+    return sorted(_log_files(path.rstrip("/"), TABLE_LOG, spark))
+
+
+def load_table_manifest(path: str, version: int | None = None, spark=None) -> dict:
+    """The manifest of ``version`` (default: the latest, resolved by
+    listing) of the durable table at ``path``.  An explicit version is
+    read directly: its epoch file, or a pre-log table's ``v<N>.json``.
+    Raises ``FileNotFoundError`` when that version does not exist."""
+    root = path.rstrip("/")
+    if version is None:
+        files = _log_files(root, TABLE_LOG, spark)
+        if not files:
+            raise FileNotFoundError(f"no durable table at {path}")
+        return read_manifest(f"{root}/{_MANIFEST_DIR}/{files[max(files)]}", spark)
+    try:
+        return read_manifest(f"{root}/{_MANIFEST_DIR}/{_epoch_file(TABLE_LOG, version)}", spark)
+    except FileNotFoundError:
+        return read_manifest(f"{root}/{_MANIFEST_DIR}/v{version}.json", spark)
+
+
+def publish_table_version(path: str, manifest: dict, spark=None) -> None:
+    """CAS-publish ``manifest`` as version ``manifest["version"]`` of
+    the durable table at ``path``, keeping every earlier version.  The
+    first publish to a pre-log table removes its version pointer, so no
+    reader of the old layout resolves a stale latest version."""
+    publish_index_manifest(
+        path, TABLE_LOG, manifest, manifest["version"] - 1, spark,
+        keep_epochs=None, legacy=f"{_MANIFEST_DIR}/_latest",
+    )
+
+
+def sweep_table_versions(path: str, below: int, spark=None) -> None:
+    """Delete the durable table's versions older than ``below``."""
+    _sweep_epochs(path.rstrip("/"), TABLE_LOG, below, spark)
 
 
 def begin_index_append(path: str, name: str, m: dict, epoch: int) -> None:
@@ -443,7 +537,36 @@ def new_gen_dir(manifest: dict) -> tuple[int, str]:
     at publish time picks the winner, and the loser's orphan dir is
     swept by the next successful publish."""
     g = int(manifest.get("generation", 0)) + 1
-    return g, f"gen={g}-{uuid.uuid4().hex[:8]}"
+    return g, gen_dir_name(g)
+
+
+def gen_dir_name(g: int) -> str:
+    """A new dir name for generation ``g``, unique per attempt."""
+    return f"gen={g}-{uuid.uuid4().hex[:8]}"
+
+
+def sweep_generations(
+    path: str, keep: set[str], grace_seconds: float = 0.0, spark=None
+) -> list[str]:
+    """Delete every ``gen=*`` dir under ``path`` not named in ``keep`` —
+    the one generation-dir sweep of the indexes and the durable table.
+    A dir modified within ``grace_seconds`` stays: it may be an
+    in-flight writer's, not yet published.  Returns the deleted names."""
+    import time
+
+    root = path.rstrip("/")
+    now = time.time()
+    removed = []
+    for n in list_dir(root, spark):
+        if not n.startswith("gen=") or n in keep:
+            continue
+        if grace_seconds > 0:
+            mtime = _mtime(f"{root}/{n}", spark)
+            if mtime is None or now - mtime < grace_seconds:
+                continue
+        delete(f"{root}/{n}", recursive=True, spark=spark)
+        removed.append(n)
+    return removed
 
 
 def sweep_index_generations(
@@ -456,9 +579,7 @@ def sweep_index_generations(
     when the legacy layout is no longer the newest fallback)."""
     root = path.rstrip("/")
     keep_set = {k for k in keep if k}
-    for n in list_dir(root, spark):
-        if n.startswith("gen=") and n not in keep_set:
-            delete(f"{root}/{n}", recursive=True, spark=spark)
+    sweep_generations(root, keep_set, spark=spark)
     if len(keep_set) > 1:  # current + a real previous generation exist
         for sub in legacy_subdirs:
             delete(f"{root}/{sub}", recursive=True, spark=spark)

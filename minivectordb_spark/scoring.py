@@ -31,6 +31,8 @@ Scoring paths:
 - ``unit_scores`` / ``top_rows``: the prenormalized fold and the
   (score desc, id asc) top-k on the driver, over a snapshot already in
   driver memory; bit-identical to ``knn(prenormalized=True)``.
+  ``top_rows`` is also each Arrow batch's partial top-k in
+  ``CosineMatmulScorer``.
 - ``CosineMatmulScorer``: many queries via an Arrow-batched pandas UDF
   doing one BLAS matmul per batch.  The query matrix is closed over by
   the UDF lambda and shipped once per task (broadcast-variable
@@ -440,24 +442,6 @@ def dequantize_expr(qvec: Column, scale: Column) -> Column:
     )
 
 
-def _partial_topk_rows(scores: np.ndarray, ids: np.ndarray, kk: int) -> np.ndarray:
-    """Batch-local top-k row indices with the GLOBAL tiebreak (score desc,
-    id asc).  Plain argpartition on score alone is nondeterministic when
-    more than kk rows tie at the boundary score — a smaller-id row can be
-    dropped locally and the global window then disagrees with the exact-kNN
-    path.  So: argpartition for the boundary, widen to every row tied at
-    it, then an exact (tiny) sort over the candidates."""
-    n = scores.shape[0]
-    if n <= kk:
-        cand = np.arange(n)
-    else:
-        part = np.argpartition(-scores, kk - 1)[:kk]
-        boundary = scores[part].min()
-        cand = np.nonzero(scores >= boundary)[0]
-    order = sorted(cand.tolist(), key=lambda r: (-scores[r], ids[r]))
-    return np.asarray(order[:kk], dtype=np.int64)
-
-
 def _matmul_score_topk(
     corpus_df: DataFrame,
     k: int,
@@ -496,12 +480,11 @@ def _matmul_score_topk(
             norms[norms == 0.0] = 1.0
             sims = batch_scores(emb / norms)
             ids = pdf[id_col].to_numpy()
-            kk = min(k, sims.shape[0])
             frames = []
             for j in range(sims.shape[1]):
                 # partial top-k per query within this batch, globally
                 # consistent (score desc, id asc) tiebreak
-                rows = _partial_topk_rows(sims[:, j], ids, kk)
+                rows = top_rows(sims[:, j], ids, k)
                 frames.append(
                     pd.DataFrame(
                         {

@@ -286,9 +286,9 @@ def stream_durable_ingest(
     anti-join + bucket rewrite + manifest swap), ``n_batches``.  The
     remainder of a caller-observed wave wall is streaming-engine fixed
     cost (file listing, offset log, foreachBatch dispatch)."""
-    import os
     import time as _time
 
+    from minivectordb_spark import fsio
     from minivectordb_spark.durable import DurableVectorTable
     from minivectordb_spark.embedder import embed_column
 
@@ -315,10 +315,7 @@ def stream_durable_ingest(
         ).localCheckpoint()
         _note("embed_sec", t0)
         t0 = _time.time()
-        manifest_exists = os.path.exists(
-            os.path.join(table_path, "_manifest", "_latest")
-        )
-        if not manifest_exists:
+        if not fsio.table_versions(table_path, batch_df.sparkSession):
             DurableVectorTable.create(
                 embedded, table_path, id_col=id_col, n_buckets=n_buckets
             )

@@ -125,7 +125,7 @@ def _reassemble_metadata(row) -> dict:
             out.update(m)
     if row["meta_num"]:
         for k, v in row["meta_num"].items():
-            out[k] = int(v) if float(v).is_integer() else v
+            out[k] = int(v) if v is not None and float(v).is_integer() else v
     if row["meta_ts"]:
         out.update(row["meta_ts"])
     return out
@@ -552,7 +552,7 @@ class VectorTable:
             self.df, embedding, k=k, emb_col="embedding_norm", id_col="id",
             pred=emit_column(parsed), prenormalized=True,
         )
-        rows = result.collect()
+        rows = result.select("id", "score", *_META_COLS).collect()
         # zip_with pads a shorter array with nulls: a null score is a query
         # of the wrong length
         if any(r["score"] is None for r in rows):

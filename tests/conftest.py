@@ -3,6 +3,7 @@ import struct
 
 import pytest
 
+from minivectordb_spark import fsio
 from minivectordb_spark.operators import util
 from minivectordb_spark.session import get_spark
 
@@ -82,3 +83,11 @@ def graph_paths(monkeypatch):
 @pytest.fixture
 def snapshot_paths(monkeypatch):
     return GatePaths(monkeypatch, "snapshot")
+
+
+@pytest.fixture()
+def hadoop_route(monkeypatch):
+    """Force every fsio call through the Hadoop FileSystem API (the
+    route a real hdfs://, s3a:// deployment takes), backed by the local
+    connector via file: URIs."""
+    monkeypatch.setattr(fsio, "_local_path", lambda p: None)

@@ -1,9 +1,11 @@
 """Copy-on-write durable table: persist -> mutate -> reload roundtrips,
 and proof that mutations rewrite only the touched buckets."""
 
+import json
 import os
 
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from minivectordb_spark.durable import DurableVectorTable
@@ -117,14 +119,13 @@ def test_version_history_and_atomic_pointer(spark, base_df, tmp_path):
     t = t.delete_embeddings_batch(["0"])
     t = t.delete_embeddings_batch(["1"])
     assert t.manifest["version"] == 2
-    mdir = os.path.join(root, "_manifest")
-    assert sorted(f for f in os.listdir(mdir) if f.startswith("v")) == [
-        "v0.json",
-        "v1.json",
-        "v2.json",
+    # one immutable epoch file per version, and no pointer file
+    assert sorted(os.listdir(os.path.join(root, "_manifest"))) == [
+        "_table_manifest.e00000000.json",
+        "_table_manifest.e00000001.json",
+        "_table_manifest.e00000002.json",
     ]
-    with open(os.path.join(mdir, "_latest")) as f:
-        assert f.read().strip() == "2"
+    assert DurableVectorTable.load(spark, root).manifest["version"] == 2
 
 
 def test_mutation_sequence_matches_model(spark, tmp_path):
@@ -632,7 +633,7 @@ def test_file_uri_create_upsert_load_roundtrip(spark, base_df, tmp_path, monkeyp
     """A ``file://`` URI names the same table as its path: create, upsert
     and load through the URI, with nothing written to the working
     directory and no staging dir left at the root.  Any other scheme is
-    refused before anything is written."""
+    refused before any job runs and before anything is written."""
     cwd = tmp_path / "cwd"
     cwd.mkdir()
     monkeypatch.chdir(cwd)
@@ -649,6 +650,87 @@ def test_file_uri_create_upsert_load_roundtrip(spark, base_df, tmp_path, monkeyp
         assert len(rows) == 41 and rows["3"] == "replaced" and rows["100"] == "new"
     assert os.listdir(cwd) == []
     assert not [d for d in os.listdir(root) if d.startswith("_staging_")]
-    with pytest.raises(ValueError, match="local path"):
+    with pytest.raises(Py4JJavaError, match="s3a"):
         DurableVectorTable.create(base_df, "s3a://bucket/table", id_col="id")
     assert os.listdir(cwd) == []
+
+
+def _lifecycle(spark, base_df, root):
+    """create -> store -> upsert -> delete -> compact -> vacuum ->
+    time travel; returns the rows and the per-bucket row counts."""
+    schema = "id string, embedding array<double>, tag string"
+    t = DurableVectorTable.create(base_df, root, id_col="id", n_buckets=4)
+    t = t.store_embeddings_batch(
+        spark.createDataFrame([("100", [1.0, 2.0], "new")], schema)
+    )
+    t = t.upsert_embeddings_batch(
+        spark.createDataFrame(
+            [("3", [9.0, 9.0], "up"), ("101", [7.0, 7.0], "new")], schema
+        )
+    )
+    t = t.delete_embeddings_batch(["0", "100"])
+    t = t.compact()
+    removed = t.vacuum(keep_versions=2, grace_seconds=0)
+    v = t.manifest["version"]
+    with pytest.raises(FileNotFoundError):
+        DurableVectorTable.load(spark, root, version=0)
+    out = {"version": v, "n_removed": len(removed)}
+    for name, opened in (
+        ("latest", DurableVectorTable.load(spark, root)),
+        ("previous", DurableVectorTable.load(spark, root, version=v - 1)),
+    ):
+        out[name] = (
+            {r["id"]: r["tag"] for r in opened.to_df().collect()},
+            {k: b["rows"] for k, b in opened.manifest["buckets"].items()},
+        )
+    return out
+
+
+def test_lifecycle_on_hadoop_route_matches_plain_path(spark, base_df, tmp_path, request):
+    """Every file operation of the table also runs through the Hadoop
+    FileSystem API (the route of an hdfs:// or s3a:// root): the whole
+    lifecycle on a file:// root there gives the rows and row counts it
+    gives on a plain local path."""
+    plain = _lifecycle(spark, base_df, str(tmp_path / "plain"))
+    assert plain["version"] == 4 and plain["n_removed"] > 0
+    assert len(plain["latest"][0]) == 40 and plain["latest"][0]["3"] == "up"
+    request.getfixturevalue("hadoop_route")
+    assert _lifecycle(spark, base_df, (tmp_path / "uri").as_uri()) == plain
+
+
+def test_pre_log_table_loads_and_continues_the_log(spark, base_df, tmp_path):
+    """A table in the layout written before the version log (one
+    ``v<N>.json`` per version, a ``_latest`` pointer, generation 0 in
+    ``gen=0`` dirs) loads at its latest version and at any version, and
+    accepts a mutation; from then on the epoch log is authoritative.  The
+    root is named by a ``file://`` URI with a percent-escape, which
+    must name the same local dir."""
+    root = tmp_path / "pre log"
+    uri = root.as_uri()
+    t = DurableVectorTable.create(base_df, uri, id_col="id", n_buckets=4)
+    t.delete_embeddings_batch(["0"])
+    mdir = root / "_manifest"
+    gen0 = {}
+    for f in sorted(os.listdir(mdir)):  # rewrite into the old layout
+        m = json.loads((mdir / f).read_text())
+        for k, b in m["buckets"].items():
+            if b["gen"] == 0:
+                gen0[k] = b.pop("dir")
+        (mdir / f"v{m['version']}.json").write_text(json.dumps(m))
+        (mdir / f).unlink()
+    for k, d in gen0.items():
+        if d:
+            os.rename(root / "data" / f"bucket={k}" / d, root / "data" / f"bucket={k}" / "gen=0")
+    (mdir / "_latest").write_text("1")
+
+    assert DurableVectorTable.load(spark, uri).count() == 39
+    assert DurableVectorTable.load(spark, uri, version=0).count() == 40
+    t2 = DurableVectorTable.load(spark, uri).delete_embeddings_batch(["1"])
+    assert t2.manifest["version"] == 2
+    assert sorted(os.listdir(mdir)) == ["_table_manifest.e00000002.json", "v0.json", "v1.json"]
+    ids = {r["id"] for r in DurableVectorTable.load(spark, uri).to_df().collect()}
+    assert len(ids) == 38 and not {"0", "1"} & ids
+    assert DurableVectorTable.load(spark, uri, version=1).count() == 39
+    t2.vacuum(keep_versions=1, grace_seconds=0)
+    assert sorted(os.listdir(mdir)) == ["_table_manifest.e00000002.json"]
+    assert DurableVectorTable.load(spark, uri).count() == 38

@@ -45,14 +45,6 @@ def test_local_path_classification():
 # ------------------------------------------------------------- hadoop route
 
 
-@pytest.fixture()
-def hadoop_route(monkeypatch):
-    """Force every fsio call through the Hadoop FileSystem API (the
-    route a real hdfs://, s3a:// deployment takes), backed by the local
-    connector via file: URIs."""
-    monkeypatch.setattr(fsio, "_local_path", lambda p: None)
-
-
 def test_hadoop_roundtrip_atomic_rename(tmp_path, spark, hadoop_route):
     p = f"file://{tmp_path}/deep/m.json"  # parent created by the API
     fsio.write_manifest(p, {"planes": [[0.5, -1.0]], "fingerprint": "f"})

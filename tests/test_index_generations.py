@@ -588,3 +588,32 @@ def test_index_lifecycle_has_one_owner():
         and getattr(node.func, "attr", getattr(node.func, "id", None)) in primitives
     )
     assert callers == []
+
+
+def test_table_file_io_goes_through_fsio():
+    """durable.py reaches files only through fsio (no os, shutil or
+    open), and only fsio.py names the version log's directory or the
+    pre-log version pointer."""
+    import ast
+    import pathlib
+
+    import minivectordb_spark
+
+    pkg = pathlib.Path(minivectordb_spark.__file__).parent
+    durable = list(ast.walk(ast.parse((pkg / "durable.py").read_text())))
+    imported = {a.name.split(".")[0] for n in durable if isinstance(n, ast.Import) for a in n.names}
+    imported |= {n.module.split(".")[0] for n in durable if isinstance(n, ast.ImportFrom) and n.module}
+    assert not imported & {"os", "shutil"}
+    assert not [
+        n.lineno
+        for n in durable
+        if isinstance(n, ast.Call) and getattr(n.func, "attr", getattr(n.func, "id", None)) == "open"
+    ]
+    spelled = sorted(
+        f"{p.relative_to(pkg)}:{node.lineno}"
+        for p in pkg.rglob("*.py")
+        if p != pkg / "fsio.py"
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Constant) and node.value in ("_manifest", "_latest")
+    )
+    assert spelled == []

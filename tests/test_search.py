@@ -255,15 +255,15 @@ def test_partial_topk_tiebreak_deterministic():
     contract), never an argpartition-arbitrary subset."""
     import numpy as np
 
-    from minivectordb_spark.scoring import _partial_topk_rows
+    from minivectordb_spark.scoring import top_rows
 
     scores = np.array([0.5, 0.9, 0.5, 0.5, 0.5, 0.1])
     ids = np.array([60, 10, 40, 20, 30, 5])
-    rows = _partial_topk_rows(scores, ids, kk=3)
+    rows = top_rows(scores, ids, 3)
     # top: id 10 (0.9), then the 0.5 tie broken by id asc -> ids 20, 30
     assert ids[rows].tolist() == [10, 20, 30]
     # kk >= n: all rows, still fully ordered
-    rows_all = _partial_topk_rows(scores, ids, kk=10)
+    rows_all = top_rows(scores, ids, 10)
     assert ids[rows_all].tolist() == [10, 20, 30, 40, 60, 5]
 
 

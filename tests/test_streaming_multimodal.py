@@ -245,15 +245,17 @@ def test_sample_frames(spark):
     assert [r["frame_ts_ms"] for r in frames] == [0, 1000, 2000, 3000]
 
 
-def test_stream_durable_ingest_versions_and_uniqueness(spark, tmp_path):
+@pytest.mark.parametrize("as_root", [str, lambda p: p.as_uri()], ids=["path", "file_uri"])
+def test_stream_durable_ingest_versions_and_uniqueness(spark, tmp_path, as_root):
     """Streaming into the CoW table: batch 1 creates it, batch 2 (with a
     replayed id) commits one new version containing only the fresh row;
-    the final table reloads with unique ids."""
+    the final table reloads with unique ids.  The table root is a plain
+    path or a ``file://`` URI."""
     from minivectordb_spark.durable import DurableVectorTable
     from minivectordb_spark.streaming import stream_durable_ingest
 
     src = str(tmp_path / "din")
-    table_path = str(tmp_path / "dout")
+    table_path = as_root(tmp_path / "dout")
     ck = str(tmp_path / "dck")
 
     spark.createDataFrame(

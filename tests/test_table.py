@@ -146,6 +146,18 @@ def test_distances_variant(spark, snapshot_paths):
     assert ids2 == ["t"]
 
 
+def test_null_numeric_metadata_reads_as_none(spark, snapshot_paths):
+    """A NULL in a numeric metadata column comes back as ``None`` for
+    that key, on both search paths."""
+    df = spark.createDataFrame(
+        [("a", [1.0, 0.0], 3), ("b", [0.0, 1.0], None)],
+        "id string, embedding array<double>, n long",
+    )
+    t = VectorTable.from_dataframe(df, meta_cols=["n"])
+    ids, _, metas = snapshot_paths.same(lambda: t.find_most_similar([1.0, 0.0], k=2))
+    assert ids == ["a", "b"] and metas == [{"n": 3}, {"n": None}]
+
+
 def test_from_dataframe_bulk_ingest(spark, sf_dir, snapshot_paths):
     import datetime as dt
     from pyspark.sql import functions as F
